@@ -57,17 +57,18 @@ class GraphWindowStream:
         )
 
     def reduce_on_edges(self, agg: Column) -> DataFrame:
-        """Per (vertex, window) Catalyst aggregate over edge values —
-        e.g. ``F.sum("val")``, ``F.min("val")``. Output
-        (win, vertex, value); project vertex/value to match the
-        reference's project(0,2) (GraphWindowStream.java:101-121)."""
+        """Per (vertex, window) pane, one Catalyst aggregate column —
+        e.g. ``F.sum("val")``, ``F.min("val")``. Serves both
+        reduceOnEdges (GraphWindowStream.java:101-121; project
+        vertex/value to match its project(0,2)) and foldNeighbors
+        (GraphWindowStream.java:62-87, folds over (src, dst, val) per
+        EdgesFold.java:33-48): a Catalyst aggregate is both an
+        associative reduce and an incremental fold. Output
+        (win, vertex, value). For non-Catalyst folds use
+        apply_on_neighbors."""
         return self._grouped().agg(agg.alias("value"))
 
-    def fold_neighbors(self, agg: Column) -> DataFrame:
-        """Incremental fold per pane; any Catalyst aggregate column
-        (folds over (src, dst, val) per EdgesFold.java:33-48). For
-        non-Catalyst folds use apply_on_neighbors."""
-        return self._grouped().agg(agg.alias("value"))
+    fold_neighbors = reduce_on_edges
 
     def apply_on_neighbors(
         self,

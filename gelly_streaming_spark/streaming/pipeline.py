@@ -14,61 +14,41 @@ state + output writes make replay after crash idempotent
 (exactly-once effective); resuming from the checkpoint picks up both
 the source offsets and the last committed state epoch.
 
-Two state engines:
+Per-batch work is proportional to the BATCH, not the accumulated
+state. Only vertices touched by the batch enter the quotient
+resolution; vertices whose component was merged away are relabelled
+lazily through a small component→root mapping that is applied at read
+time. Each epoch persists only (a) the rows for vertices first seen
+this batch (a delta) and (b) a full snapshot of the mapping (size =
+#components merged since the last compaction, not O(V)). Every
+``compact_every`` epochs a full snapshot is written (marker file
+``_BASE``) and the mapping resets — so a cold read unions one base +
+at most ``compact_every-1`` deltas.
 
-- ``mode="incremental"`` (default): per-batch work is proportional to
-  the BATCH, not the accumulated state. Only vertices touched by the
-  batch enter the quotient resolution; vertices whose component was
-  merged away are relabelled lazily through a small component→root
-  mapping that is applied at read time. Each epoch persists only
-  (a) the rows for vertices first seen this batch (a delta) and
-  (b) a full snapshot of the mapping (size = #components merged since
-  the last compaction, not O(V)). Every ``compact_every`` epochs a
-  full snapshot is written (marker file ``_BASE``) and the mapping
-  resets — so a cold read unions one base + at most
-  ``compact_every-1`` deltas.
-
-  BASE snapshots are laid out in ``bucket = pmod(xxhash64(vertex),
-  B)`` partitions (VERDICT r3 #4, LSM shape: the big compacted layer
-  is the one worth pruning; deltas stay plain parquet — they are
-  O(batch)-sized, read whole, and bucket-partitioning them was
-  measured at 15-22 s/epoch of tiny-file writes for no read benefit).
-  B is re-chosen at every base snapshot as ~state_rows /
-  ``bucket_rows_target`` (so bucket SIZE stays constant as state
-  grows). The per-batch touched-vertex probe prunes the base scan to
-  the batch's bucket set before the semi-join, so its read is
-  ~touched_buckets x bucket_rows_target base rows + the (small)
-  deltas — flat in accumulated state size whenever the batch's vertex
-  count is small against B (the 10^12-turn regime: per-batch arrivals
-  touch a tiny fraction of all-time state). Honest bounds: with batch
-  vertex counts >= B the bucket set covers everything and the probe
-  degrades gracefully to the r3 full scan (still no O(V) shuffle —
-  the semi-join build side is the batch vertex set, AQE-broadcast
-  when small, and no O(V) rewrite ever happens); a real 10^12
-  deployment that needs strict point lookups would lift the synopsis
-  into a KV store, which this layout is the parquet-native
-  approximation of. Crash-consistent: B is stamped ``_BUCKETS_<B>``
-  on the base's mapping dir (committed BEFORE the rows), and the
-  corner where a compaction's rows committed but its ``_BASE`` marker
-  didn't simply reads that snapshot as one more delta under
-  latest-epoch-wins dedup — correctness never depends on the marker.
-- ``mode="full"``: the r2 engine — previous global state re-enters
-  the merge as partials and the whole synopsis is rewritten per
-  epoch. Kept for comparison/profiling; both engines produce
-  bit-identical ``read_state`` output (canonical min-vertex labels).
-
-State size is O(V), not O(E) — the whole point of the synopsis — so
-even the full engine's state stays small relative to turns
-(vertices = conversations x roles/tools << turns).
-
-Port note (Spark 4 stateful API): ``transformWithStateInPandas``
-exposes multiple typed state variables + timers per key on streaming
-frames, which would let this CC state live as managed per-key state
-INSIDE the streaming query instead of foreachBatch (see
-streaming/tws.py). The foreachBatch formulation is kept because
-(a) it is the shape the reference's incremental merger actually has,
-and (b) epoch-keyed parquet state gives replay-idempotent
-exactly-once with inspectable lineage.
+BASE snapshots are laid out in ``bucket = pmod(xxhash64(vertex),
+B)`` partitions (VERDICT r3 #4, LSM shape: the big compacted layer
+is the one worth pruning; deltas stay plain parquet — they are
+O(batch)-sized, read whole, and bucket-partitioning them was
+measured at 15-22 s/epoch of tiny-file writes for no read benefit).
+B is re-chosen at every base snapshot as ~state_rows /
+``bucket_rows_target`` (so bucket SIZE stays constant as state
+grows). The per-batch touched-vertex probe prunes the base scan to
+the batch's bucket set before the semi-join, so its read is
+~touched_buckets x bucket_rows_target base rows + the (small)
+deltas — flat in accumulated state size whenever the batch's vertex
+count is small against B (the 10^12-turn regime: per-batch arrivals
+touch a tiny fraction of all-time state). Honest bounds: with batch
+vertex counts >= B the bucket set covers everything and the probe
+degrades gracefully to an unpruned full scan (still no O(V) shuffle —
+the semi-join build side is the batch vertex set, AQE-broadcast
+when small, and no O(V) rewrite ever happens); a real 10^12
+deployment that needs strict point lookups would lift the synopsis
+into a KV store, which this layout is the parquet-native
+approximation of. Crash-consistent: B is stamped ``_BUCKETS_<B>``
+on the base's mapping dir (committed BEFORE the rows), and the
+corner where a compaction's rows committed but its ``_BASE`` marker
+didn't simply reads that snapshot as one more delta under
+latest-epoch-wins dedup — correctness never depends on the marker.
 """
 
 from __future__ import annotations
@@ -95,8 +75,7 @@ class StreamingConnectedComponents:
       ``{state_path}/state/epoch=<id>`` vertex rows (full snapshots
       carry a ``_BASE`` marker; other epochs are new-vertex deltas)
       and ``{state_path}/mapping/epoch=<id>`` the lazy component→root
-      relabelling table (incremental mode only), written per epoch
-      for idempotent replay.
+      relabelling table, written per epoch for idempotent replay.
     - ``compact_every``: write a full base snapshot (and reset the
       mapping) every this many epochs. Bounds both the cold-read
       fan-in (#delta dirs) and the mapping size.
@@ -109,14 +88,11 @@ class StreamingConnectedComponents:
         num_shards: int = 32,
         salt: int = 1,
         shard_on=None,
-        mode: str = "incremental",
         compact_every: int = 16,
         bucket_rows_target: int = 262_144,
         max_buckets: int = 4096,
         quotient_serial_limit: int = 1_000_000,
     ):
-        if mode not in ("incremental", "full"):
-            raise ValueError(f"unknown state engine mode: {mode!r}")
         # passed through to resolve_partials: quotients above this row
         # count take the fully-distributed pointer-doubling contraction
         # instead of the single-task union-find (VERDICT r3 #7 wants
@@ -131,7 +107,6 @@ class StreamingConnectedComponents:
         # transcript vertex labels) — keeps each conversation in one
         # shard so the quotient resolution has almost nothing to link
         self.shard_on = shard_on
-        self.mode = mode
         self.compact_every = max(1, int(compact_every))
         # bucketed state layout (VERDICT r3 #4): target rows per
         # bucket partition; B = state_rows / target, re-chosen at each
@@ -227,11 +202,7 @@ class StreamingConnectedComponents:
         always has its marker. Explicit schema: an empty base writes
         no data file (dynamic partitioning), so there is no footer to
         infer from."""
-        b = (
-            read_marker_value(spark, self._map_dir(epoch), "_BUCKETS_")
-            if self.mode == "incremental"
-            else None
-        )
+        b = read_marker_value(spark, self._map_dir(epoch), "_BUCKETS_")
         t = self.vertex_type
         d = self._rows_dir(epoch)
         cols = f"vertex {t}, component {t}" + (
@@ -371,16 +342,12 @@ class StreamingConnectedComponents:
         carry the ``bucket`` column; ``repartition("bucket")`` puts
         each bucket wholly in one task so the write emits <=B files,
         an O(rows) shuffle amortized over compact_every epochs."""
-        if self.mode == "incremental":
-            m = mapping if mapping is not None else self._empty_mapping(spark)
-            m.coalesce(1).write.mode("overwrite").parquet(
-                self._map_dir(epoch_id)
-            )
-            if bucket_b is not None:
-                write_marker(
-                    spark, self._map_dir(epoch_id), f"_BUCKETS_{bucket_b}"
-                )
+        m = mapping if mapping is not None else self._empty_mapping(spark)
+        m.coalesce(1).write.mode("overwrite").parquet(self._map_dir(epoch_id))
         if bucket_b is not None:
+            write_marker(
+                spark, self._map_dir(epoch_id), f"_BUCKETS_{bucket_b}"
+            )
             rows.repartition("bucket").write.mode("overwrite").partitionBy(
                 "bucket"
             ).parquet(self._rows_dir(epoch_id))
@@ -419,10 +386,6 @@ class StreamingConnectedComponents:
             _t0 = now
 
         spark = edges.sparkSession
-        if self.mode == "full":
-            self._process_batch_full(spark, edges, epoch_id)
-            _mark("full_engine")
-            return
         batch = sharded_fold(
             edges, self.algo, num_shards=self.num_shards, salt=self.salt,
             shard_on=self.shard_on,
@@ -565,22 +528,6 @@ class StreamingConnectedComponents:
         _mark("write")
         self._cache_epoch = epoch_id
 
-    def _process_batch_full(
-        self, spark: SparkSession, edges: DataFrame, epoch_id: int
-    ) -> None:
-        """r2 engine: previous global state rows re-enter the combine
-        as partials and the whole O(V) synopsis is re-resolved and
-        rewritten per epoch. Kept for comparison/profiling."""
-        batch_partials = sharded_fold(
-            edges, self.algo, num_shards=self.num_shards, salt=self.salt,
-            shard_on=self.shard_on,
-        )
-        prev = self.read_state(spark, upto_epoch=epoch_id)
-        if prev is not None:
-            batch_partials = batch_partials.unionByName(prev)
-        merged = resolve_partials(batch_partials, self.quotient_serial_limit)
-        self._write_epoch(spark, epoch_id, merged, mapping=None, base=True)
-
     def __call__(self, edges: DataFrame, epoch_id: int) -> None:
         self.process_batch(edges, epoch_id)
 
@@ -592,7 +539,6 @@ def run_streaming_cc(
     watermark: str = "1 minute",
     num_shards: int = 32,
     salt: int = 1,
-    mode: str = "incremental",
     compact_every: int = 16,
     bucket_rows_target: int = 262_144,
     max_buckets: int = 4096,
@@ -606,7 +552,7 @@ def run_streaming_cc(
     cc = StreamingConnectedComponents(
         state_path, vertex_type="string", num_shards=num_shards, salt=salt,
         shard_on=F.substring_index("src", "#", 1),
-        mode=mode, compact_every=compact_every,
+        compact_every=compact_every,
         bucket_rows_target=bucket_rows_target, max_buckets=max_buckets,
     )
     q = (

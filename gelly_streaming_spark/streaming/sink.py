@@ -8,10 +8,10 @@ replayed epoch simply overwrites the identical bytes (deterministic
 input -> deterministic rows). Readers see the union of epochs; an
 upsert view (latest row per key) is exposed via ``read_upserted``.
 
-An Iceberg catalog would replace the directory layout with MERGE INTO
-on the same deterministic keys; the jars aren't in this image, so the
-layout is parquet-partitioned with the same contract (gated behind
-``format_hint='iceberg'`` for clusters that have it).
+An Iceberg ``MERGE INTO`` on the same deterministic keys would
+replace this directory layout; the repo has no such code path (the
+jars aren't in this image), so the layout is parquet-partitioned with
+the same contract.
 
 Per-partition lineage + metrics (north_rule) are appended to a
 ``_metrics`` table per epoch: rows-in, rows-out, per-spark-partition
@@ -37,10 +37,9 @@ class IdempotentUpsertSink:
       idempotent, hence exactly-once end-to-end.
     """
 
-    def __init__(self, path: str, keys: list[str], format_hint: str = "parquet"):
+    def __init__(self, path: str, keys: list[str]):
         self.path = path
         self.keys = keys
-        self.format_hint = format_hint
 
     def write_batch(self, df: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import Observation

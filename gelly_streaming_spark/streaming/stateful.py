@@ -31,9 +31,7 @@ def lindley_final(carry: int, pdfs: Iterator[pd.DataFrame]) -> int:
     gives the batch-final state directly:
         y_n = max(carry + S_n, S_n - min_k S_k)
             = S_n + max(carry, -min(cumsum))
-    — one vectorized cumsum per key/batch, no per-row Python. Shared
-    by the applyInPandasWithState and transformWithState twins so the
-    two state APIs cannot silently diverge."""
+    — one vectorized cumsum per key/batch, no per-row Python."""
     import numpy as np
 
     deltas = [p["delta"].to_numpy(dtype=np.int64) for p in pdfs]
@@ -120,13 +118,15 @@ def streaming_transitions(
 
     Contract: per-key arrival order across micro-batches must respect
     the ``order`` column (the north rule's stable (conv_id, turn_idx)
-    replay precondition; within a batch rows are sorted). ``order``
-    must be an integer sequence column or a timestamp — timestamps
-    are compared at MICROSECOND precision (``unix_micros``), matching
-    the batch twin's total-order contract; a bare cast-to-long would
-    truncate sub-second ordering into ties (ADVICE r4). A violation
-    is a LOUD failure — the state carries the last order value and the
-    fold raises on regression rather than silently miscounting.
+    replay precondition), and ``order`` must be strictly increasing
+    per key — within a batch rows are sorted by it, and a tie has no
+    defined bigram order. ``order`` must be an integer sequence column
+    or a timestamp — timestamps are compared at MICROSECOND precision
+    (``unix_micros``), matching the batch twin's total-order contract;
+    a bare cast-to-long would truncate sub-second ordering into ties
+    (ADVICE r4). A violation is a LOUD failure — the state carries the
+    last order value and the fold raises on a regression or tie rather
+    than silently miscounting.
     """
     key_type = dict(df.dtypes)[key]
     order_type = dict(df.dtypes)[order]
@@ -154,18 +154,28 @@ def streaming_transitions(
             yield empty
             return
         pdf = pd.concat(parts).sort_values("__o", kind="mergesort")
+        o = pdf["__o"].to_numpy()
+        ties = o[1:] <= o[:-1]
+        if ties.any():
+            i = int(ties.argmax())
+            raise ValueError(
+                f"out-of-order replay for key {kv!r}: {int(o[i + 1])} "
+                f"does not follow {int(o[i])} within one batch "
+                "(streaming_transitions requires a strictly increasing "
+                "per-key order)"
+            )
         labels = pdf["__l"].tolist()
         if state.exists:
             last_label, last_ord = state.get
-            if int(pdf["__o"].iloc[0]) <= int(last_ord):
+            if int(o[0]) <= int(last_ord):
                 raise ValueError(
                     f"out-of-order replay for key {kv!r}: batch "
-                    f"starts at {int(pdf['__o'].iloc[0])} <= committed "
+                    f"starts at {int(o[0])} <= committed "
                     f"{int(last_ord)} (streaming_transitions requires "
                     "stable per-key order across micro-batches)"
                 )
             labels = [last_label] + labels
-        state.update((labels[-1], int(pdf["__o"].iloc[-1])))
+        state.update((labels[-1], int(o[-1])))
         if len(labels) < 2:
             yield empty
             return
@@ -199,23 +209,31 @@ def streaming_triangle_estimate(
     edges: DataFrame, num_samplers: int = 32, seed: int = 0xDEADBEEF
 ) -> DataFrame:
     """Managed-state streaming twin of the sampled triangle estimate
-    (plans/triangles.estimate_triangles) — the reference's ACTUAL
-    incremental semantics (BroadcastTriangleCount.java:62-174 /
+    (plans/triangles.estimate_triangles), after the reference's
+    incremental samplers (BroadcastTriangleCount.java:62-174 /
     IncidenceSamplingTriangleCount.java:61-242): every edge is routed
     to all S samplers (the reference broadcasts the stream); sampler s
     keeps ONE reservoir edge (replaced at step t with probability
     1/(t+1) — here the deterministic seeded-hash analog
     ``h(s,t) mod (t+1) == 0``, so replays are bit-identical), a third
-    vertex drawn uniformly from the vertices seen so far (index-skip
-    over the insertion-order vertex list, exact-uniform over
-    V_seen \\ {a, b}), and β = 1 once BOTH closing edges arrive after
-    the sample. Estimate = (Σβ/S)·|E|·(|V|−2), via
+    vertex c, and β = 1 once BOTH closing edges arrive after the
+    sample. Estimate = (Σβ/S)·|E|·(|V|−2), via
     ``triangle_estimate_from_samplers`` over the latest per-sampler
     rows.
 
+    Deliberate deviation: the reference draws c from a FIXED vertex
+    count given up front (``Math.random() * vertices``,
+    BroadcastTriangleCount.java:158) and uses that fixed V in the
+    estimate. A stream does not know V in advance, so here c is drawn
+    uniformly from the vertices SEEN so far (index-skip over the
+    insertion-order vertex list, exact-uniform over
+    V_seen \\ {a, b}) and |V| is |V_seen| at read time. The |V| factor
+    matches the reference's once every vertex has appeared, but c's
+    distribution still differs for edges sampled before then.
+
     State per sampler is the seen-vertex list + O(1) scalars — O(S·V)
-    total, the reference's own footprint (each Flink sampler instance
-    tracks the vertex set it has seen). The batch
+    total (the reference tracks no vertex set; this is the price of
+    not needing V up front). The batch
     ``estimate_triangles`` (stream-index joins, no per-row Python) is
     the SCALE path; this twin exists for the streaming parity
     property VERDICT r4 #6 names: the estimate is a pure function of

@@ -1,4 +1,4 @@
-"""Per-epoch wall timing of the INCREMENTAL streaming-CC engine, warm.
+"""Per-epoch wall timing of the streaming-CC engine, warm.
 
 Mirrors tools/scale_job.py's streaming leg (same warmup discipline)
 but runs the CC query alone and wraps ``process_batch`` with a timer,
@@ -71,8 +71,6 @@ def main():
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--input", default="/tmp/gss_scaling/transcripts")
     ap.add_argument("--files-per-trigger", type=int, default=16)
-    ap.add_argument("--mode", default="incremental",
-                    choices=["incremental", "full"])
     ap.add_argument("--bucket-rows-target", type=int, default=262_144)
     ap.add_argument("--max-buckets", type=int, default=4096)
     ap.add_argument("--demo-locality", action="store_true")
@@ -109,7 +107,7 @@ def main():
     warm_stream = spark.readStream.schema(TSCHEMA).parquet(warm_dir)
     wq, _ = run_streaming_cc(
         warm_stream, f"{tmp}/warm_state", f"{tmp}/warm_ckpt",
-        num_shards=args.cpus, mode=args.mode,
+        num_shards=args.cpus,
     )
     wq.processAllAvailable()
     wq.stop()
@@ -122,7 +120,7 @@ def main():
     t0 = time.perf_counter()
     q, cc = run_streaming_cc(
         stream, f"{tmp}/cc_state", f"{tmp}/cc_ckpt",
-        num_shards=args.cpus, mode=args.mode,
+        num_shards=args.cpus,
         bucket_rows_target=args.bucket_rows_target,
         max_buckets=args.max_buckets,
     )
@@ -143,7 +141,7 @@ def main():
     q.stop()
     wall = time.perf_counter() - t0
     print(json.dumps({
-        "mode": args.mode, "cpus": args.cpus,
+        "cpus": args.cpus,
         "files_per_trigger": files_per_trigger,
         "demo_locality": args.demo_locality,
         "bucket_rows_target": args.bucket_rows_target,

@@ -118,12 +118,8 @@ def run_streaming(
         .parquet(f"{input_dir}/f*")
     )
     t0 = time.perf_counter()
-    # state-engine knob for A/B profiling (both engines emit identical
-    # canonical components; "incremental" is the shipped default)
-    cc_mode = os.environ.get("SPARK_GRAFT_CC_MODE", "incremental")
     q_cc, cc = run_streaming_cc(
-        stream, f"{tmp}/cc_state", f"{tmp}/cc_ckpt", num_shards=shards,
-        mode=cc_mode,
+        stream, f"{tmp}/cc_state", f"{tmp}/cc_ckpt", num_shards=shards
     )
     sink = IdempotentUpsertSink(f"{tmp}/sess_out", keys=["sess_start", "vertex"])
     q_sd = run_streaming_session_degrees(stream, sink, f"{tmp}/sd_ckpt")
