@@ -25,7 +25,6 @@ EDGE_COLS = ["src", "dst", "val", "ts"]
 def edges_from_transcripts(
     transcripts: DataFrame,
     drop_no_tool: bool = True,
-    watermark: str | None = None,
 ) -> "EdgeStream":
     """Transcript rows -> edge events (the FIXTURES.md adapter).
 
@@ -42,7 +41,7 @@ def edges_from_transcripts(
         F.lit(1).cast("long").alias("val"),
         F.col("ts").alias("ts"),
     )
-    return EdgeStream(edges, watermark=watermark)
+    return EdgeStream(edges)
 
 
 def fixture_edges_from_transcripts(transcripts: DataFrame) -> "EdgeStream":

@@ -247,24 +247,8 @@ def dedup_groups(
     100 TB the pair graph is far smaller than the corpus (near-dup
     clusters are sparse), so the CC stage is cheap relative to
     signature computation."""
-    from gelly_streaming_spark.plans.connected_components import (
-        connected_components,
-    )
-
     pairs = minhash_lsh_pairs(docs, num_hashes, bands, shingle_n, max_bucket)
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    comp = connected_components(
-        edges, num_shards=num_shards, vertex_type="long"
-    ).select(F.col("vertex").alias("doc_id"), F.col("component").alias("keep"))
-    return (
-        docs.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("keep", F.col("doc_id")).alias("keep_id")
-        )
-    )
+    return _survivor_map(docs.select("doc_id"), pairs, num_shards)
 
 
 def embedding_dedup_groups(
@@ -296,25 +280,27 @@ def embedding_dedup_groups(
     from gelly_streaming_spark.functions.similarity import (
         rhp_neardup_pairs,
     )
-    from gelly_streaming_spark.plans.connected_components import (
-        connected_components,
-    )
 
     pairs = rhp_neardup_pairs(
         embeddings, threshold, planes, bands, max_bucket
     )
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+    return _survivor_map(embeddings.select("vec_id"), pairs, num_shards)
+
+
+def _survivor_map(ids: DataFrame, pairs: DataFrame, num_shards: int) -> DataFrame:
+    """(id, keep_id) for every row of the one-column ``ids`` frame:
+    keep_id = min id of its connected component in the two-column
+    candidate ``pairs`` graph, or its own id when it has no pair."""
+    from gelly_streaming_spark.plans.connected_components import (
+        connected_components,
     )
+
+    (key,) = ids.columns
     comp = connected_components(
-        edges, num_shards=num_shards, vertex_type="long"
-    ).select(F.col("vertex").alias("vec_id"), F.col("component").alias("keep"))
-    return (
-        embeddings.select("vec_id")
-        .join(comp, "vec_id", "left")
-        .select(
-            "vec_id", F.coalesce("keep", F.col("vec_id")).alias("keep_id")
-        )
+        pairs.toDF("src", "dst"), num_shards=num_shards, vertex_type="long"
+    ).select(F.col("vertex").alias(key), F.col("component").alias("keep"))
+    return ids.join(comp, key, "left").select(
+        key, F.coalesce("keep", F.col(key)).alias("keep_id")
     )
 
 

@@ -27,14 +27,17 @@ def _finish(parsed: DataFrame) -> DataFrame:
     if "val" not in parsed.columns:
         parsed = parsed.withColumn("val", F.lit(1).cast("long"))
     if "ts" not in parsed.columns:
-        # synthesize monotone ingestion-style timestamps (the
-        # reference's IngestionTime default, SimpleEdgeStream.java:52)
-        parsed = parsed.withColumn(
-            "ts",
-            F.timestamp_seconds(
+        # ingestion-style timestamps (the reference's IngestionTime
+        # default, SimpleEdgeStream.java:52): arrival time on a stream
+        # (which rejects monotonically_increasing_id), monotone
+        # synthetic millis in batch
+        if parsed.isStreaming:
+            ts = F.current_timestamp()
+        else:
+            ts = F.timestamp_seconds(
                 F.lit(EPOCH.timestamp()) + F.monotonically_increasing_id() * 0.001
-            ),
-        )
+            )
+        parsed = parsed.withColumn("ts", ts)
     return parsed.select("src", "dst", "val", "ts")
 
 
@@ -54,7 +57,8 @@ def edges_from_text(
     parsed = lines.select(
         parts.getItem(0).cast("long").alias("src"),
         parts.getItem(1).cast("long").alias("dst"),
-        F.coalesce(parts.getItem(2).cast("long"), F.lit(1)).alias("val"),
+        # get() is NULL past the end; getItem raises under ANSI
+        F.coalesce(F.get(parts, 2).cast("long"), F.lit(1)).alias("val"),
     )
     return _finish(parsed)
 

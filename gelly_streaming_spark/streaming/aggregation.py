@@ -14,8 +14,7 @@ funnels partial rows into algo.combine — safe because synopsis
 exports are O(state), not O(edges): bipartiteness exports one signed
 root per vertex and fails fast to a single sentinel row; spanner
 exports its (bounded) edge set; degree maps export one counter per
-vertex. For synopses where a distributed resolution exists, pass
-``resolve`` to replace the funnel (CC does).
+vertex.
 """
 
 from __future__ import annotations
@@ -42,14 +41,12 @@ class StreamingGraphAggregation:
         num_shards: int = 32,
         salt: int = 1,
         shard_on=None,
-        resolve=None,
     ):
         self.algo = algo
         self.state_path = state_path
         self.num_shards = num_shards
         self.salt = salt
         self.shard_on = shard_on
-        self.resolve = resolve
 
     # -- epoch-partitioned state (same layout as streaming CC) -------------
 
@@ -96,16 +93,13 @@ class StreamingGraphAggregation:
         prev = self.read_state(spark, upto_epoch=epoch_id)
         if prev is not None:
             partials = partials.unionByName(prev)
-        if self.resolve is not None:
-            merged = self.resolve(partials)
-        else:
 
-            def combine(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                return self.algo.combine(pdf)
+        def combine(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            return self.algo.combine(pdf)
 
-            merged = partials.groupBy(F.lit(0).alias("g")).applyInPandas(
-                combine, schema=self.algo.partial_schema
-            )
+        merged = partials.groupBy(F.lit(0).alias("g")).applyInPandas(
+            combine, schema=self.algo.partial_schema
+        )
         merged.write.mode("overwrite").parquet(
             f"{self.state_path}/state/epoch={epoch_id}"
         )
@@ -122,7 +116,6 @@ def run_streaming_aggregation(
     num_shards: int = 32,
     salt: int = 1,
     shard_on=None,
-    resolve=None,
 ):
     """Wire a (streaming) edge DataFrame through the incremental
     aggregation. Returns (StreamingQuery, StreamingGraphAggregation).
@@ -133,7 +126,6 @@ def run_streaming_aggregation(
         num_shards=num_shards,
         salt=salt,
         shard_on=shard_on,
-        resolve=resolve,
     )
     q = (
         edge_stream.writeStream.foreachBatch(agg)

@@ -67,6 +67,8 @@ from gelly_streaming_spark.plans.connected_components import (
     resolve_partials,
 )
 
+MAPPING_SCHEMA = "comp string, root string"
+
 
 class StreamingConnectedComponents:
     """Incremental CC over a streaming edge frame via foreachBatch.
@@ -84,7 +86,6 @@ class StreamingConnectedComponents:
     def __init__(
         self,
         state_path: str,
-        vertex_type: str = "string",
         num_shards: int = 32,
         salt: int = 1,
         shard_on=None,
@@ -99,8 +100,7 @@ class StreamingConnectedComponents:
         # that branch crossable — and tested — mid-stream)
         self.quotient_serial_limit = int(quotient_serial_limit)
         self.state_path = state_path
-        self.algo = ConnectedComponents(vertex_type=vertex_type)
-        self.vertex_type = vertex_type
+        self.algo = ConnectedComponents(vertex_type="string")
         self.num_shards = num_shards
         self.salt = salt
         # shard_on: connectivity-local sharding key (conv-prefix for
@@ -203,9 +203,8 @@ class StreamingConnectedComponents:
         no data file (dynamic partitioning), so there is no footer to
         infer from."""
         b = read_marker_value(spark, self._map_dir(epoch), "_BUCKETS_")
-        t = self.vertex_type
         d = self._rows_dir(epoch)
-        cols = f"vertex {t}, component {t}" + (
+        cols = self.algo.partial_schema + (
             ", bucket int" if b is not None else ""
         )
         return (
@@ -220,10 +219,9 @@ class StreamingConnectedComponents:
         here like any delta (the bucket partition column is discovered
         beyond the explicit schema and dropped), and latest-epoch-wins
         dedup absorbs its overlap with older rows."""
-        t = self.vertex_type
         d = self._rows_dir(epoch)
         return (
-            spark.read.schema(f"vertex {t}, component {t}")
+            spark.read.schema(self.algo.partial_schema)
             .option("basePath", d)
             .parquet(d)
             .select("vertex", "component")
@@ -294,20 +292,15 @@ class StreamingConnectedComponents:
             deltas = d if deltas is None else deltas.unionByName(d)
         mapping = None
         if e in set(committed_epochs(spark, f"{self.state_path}/mapping")):
-            t = self.vertex_type
-            mapping = spark.read.schema(f"comp {t}, root {t}").parquet(
+            mapping = spark.read.schema(MAPPING_SCHEMA).parquet(
                 self._map_dir(e)
             )
         return base, deltas, mapping, b, len(span) > 1
 
     # -- read API -------------------------------------------------------------
 
-    def read_state(
-        self, spark: SparkSession, upto_epoch: int | None = None
-    ) -> DataFrame | None:
+    def read_state(self, spark: SparkSession) -> DataFrame | None:
         epochs = self._committed(spark)
-        if upto_epoch is not None:
-            epochs = [e for e in epochs if e < upto_epoch]
         if not epochs:
             return None
         base, deltas, mapping, b, need_dedup = self._read_raw(spark, epochs)
@@ -320,9 +313,7 @@ class StreamingConnectedComponents:
     # -- write helpers --------------------------------------------------------
 
     def _empty_mapping(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            [], schema=f"comp {self.vertex_type}, root {self.vertex_type}"
-        )
+        return spark.createDataFrame([], schema=MAPPING_SCHEMA)
 
     def _write_epoch(
         self,
@@ -536,24 +527,22 @@ def run_streaming_cc(
     transcript_stream: DataFrame,
     state_path: str,
     checkpoint_path: str,
-    watermark: str = "1 minute",
     num_shards: int = 32,
     salt: int = 1,
     compact_every: int = 16,
-    bucket_rows_target: int = 262_144,
-    max_buckets: int = 4096,
 ):
     """Wire the transcript stream through the adapter into the
     incremental CC. Returns (StreamingQuery, StreamingConnectedComponents).
+    The query has no stateful operator, so it takes no watermark: one
+    would drop no late row.
     """
     from gelly_streaming_spark.edges import edges_from_transcripts
 
-    edges = edges_from_transcripts(transcript_stream, watermark=watermark).df
+    edges = edges_from_transcripts(transcript_stream).df
     cc = StreamingConnectedComponents(
-        state_path, vertex_type="string", num_shards=num_shards, salt=salt,
+        state_path, num_shards=num_shards, salt=salt,
         shard_on=F.substring_index("src", "#", 1),
         compact_every=compact_every,
-        bucket_rows_target=bucket_rows_target, max_buckets=max_buckets,
     )
     q = (
         edges.writeStream.foreachBatch(cc)

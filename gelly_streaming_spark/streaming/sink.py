@@ -5,17 +5,19 @@ a monotone ``batch_id`` persisted in the checkpoint. Exactly-once
 EFFECTIVE semantics therefore reduce to idempotent writes: every
 epoch writes to its own ``epoch=<id>`` partition directory and a
 replayed epoch simply overwrites the identical bytes (deterministic
-input -> deterministic rows). Readers see the union of epochs; an
-upsert view (latest row per key) is exposed via ``read_upserted``.
+input -> deterministic rows). Readers see the union of committed
+epochs; an upsert view (latest row per key) is exposed via
+``read_upserted``.
 
 An Iceberg ``MERGE INTO`` on the same deterministic keys would
 replace this directory layout; the repo has no such code path (the
 jars aren't in this image), so the layout is parquet-partitioned with
 the same contract.
 
-Per-partition lineage + metrics (north_rule) are appended to a
-``_metrics`` table per epoch: rows-in, rows-out, per-spark-partition
-row counts (the CutSink/TimestampingSink analog,
+The sink's partitions are its ``epoch=<id>`` directories, so
+per-partition lineage + metrics (north_rule) are one
+``(epoch, rows_in, wall_s)`` row per epoch in a ``metrics`` table
+(the CutSink/TimestampingSink analog,
 partitioner/tests/CutSink.java:13-32, TimestampingSink.java:10-40).
 """
 
@@ -23,8 +25,10 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from gelly_streaming_spark.streaming.state import committed_epochs
 
 
 class IdempotentUpsertSink:
@@ -35,6 +39,7 @@ class IdempotentUpsertSink:
       ``{path}/metrics/epoch=<id>/``.
     - replaying an epoch (post-crash) rewrites the same partition —
       idempotent, hence exactly-once end-to-end.
+    - readers see only epochs whose write committed (``_SUCCESS``).
     """
 
     def __init__(self, path: str, keys: list[str]):
@@ -42,60 +47,33 @@ class IdempotentUpsertSink:
         self.keys = keys
 
     def write_batch(self, df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import Observation
-
         t0 = time.time()
-        spark = df.sparkSession
-        # total rows via an Observation ATTACHED TO THE DATA WRITE:
-        # the count is collected while the epoch is materialized, so
-        # the micro-batch's upstream lineage runs exactly once (the r1
-        # code re-executed it for the metrics agg — ADVICE.md; a
-        # persist() fix measured ~0.5 s/epoch of cache overhead, this
-        # is free).
+        # rows_in via an Observation ATTACHED TO THE DATA WRITE: the
+        # count is collected while the epoch is materialized, so the
+        # micro-batch's upstream lineage runs exactly once
         obs = Observation()
         out = df.withColumn("_epoch", F.lit(int(epoch_id))).observe(
             obs, F.count(F.lit(1)).alias("rows_in")
         )
-        data_dir = f"{self.path}/data/epoch={epoch_id}"
-        out.write.mode("overwrite").parquet(data_dir)
-        rows_in = int(obs.get["rows_in"])
-        # per-partition lineage from the WRITTEN files themselves: one
-        # re-read of the (small) epoch output — cheaper than
-        # recomputing the micro-batch's upstream lineage, and it
-        # describes what is actually on disk. (A data scan, not just
-        # footers: tagging rows with input_file_name defeats the
-        # footer-count shortcut; acceptable because an epoch's output
-        # is synopsis-sized, O(V'), not O(input).)
-        part_counts = (
-            spark.read.parquet(data_dir)
-            .withColumn(
-                "part",
-                F.regexp_extract(F.input_file_name(), r"part-(\d+)", 1).cast(
-                    "int"
-                ),
-            )
-            .groupBy("part")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .withColumn("rows_in", F.lit(None).cast("long"))
-        )
-        totals = spark.createDataFrame(
-            [(-1, rows_in, int(epoch_id), rows_in)],
-            schema="part int, rows long, epoch int, rows_in long",
-        )
-        part_counts.unionByName(totals).withColumn(
-            "wall_s", F.lit(time.time() - t0)
-        ).write.mode("overwrite").parquet(
-            f"{self.path}/metrics/epoch={epoch_id}"
-        )
+        out.write.mode("overwrite").parquet(f"{self.path}/data/epoch={epoch_id}")
+        # a JVM-side one-row frame: createDataFrame from a Python list
+        # would start Python workers just to write this row
+        df.sparkSession.range(1, numPartitions=1).select(
+            F.lit(int(epoch_id)).alias("epoch"),
+            F.lit(int(obs.get["rows_in"])).cast("long").alias("rows_in"),
+            F.lit(time.time() - t0).alias("wall_s"),
+        ).write.mode("overwrite").parquet(f"{self.path}/metrics/epoch={epoch_id}")
 
     def __call__(self, df: DataFrame, epoch_id: int) -> None:
         self.write_batch(df, epoch_id)
 
+    def _read_committed(self, spark: SparkSession, table: str) -> DataFrame:
+        base = f"{self.path}/{table}"
+        dirs = [f"{base}/epoch={e}" for e in committed_epochs(spark, base)]
+        return spark.read.option("basePath", base).parquet(*dirs)
+
     def read_all(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", f"{self.path}/data").parquet(
-            f"{self.path}/data/epoch=*"
-        )
+        return self._read_committed(spark, "data")
 
     def read_upserted(self, spark: SparkSession) -> DataFrame:
         """Latest row per key across epochs (the upsert view)."""
@@ -110,6 +88,4 @@ class IdempotentUpsertSink:
         )
 
     def read_metrics(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", f"{self.path}/metrics").parquet(
-            f"{self.path}/metrics/epoch=*"
-        )
+        return self._read_committed(spark, "metrics")

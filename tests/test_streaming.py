@@ -282,9 +282,33 @@ def test_streaming_session_degrees_match_batch(spark, transcripts_pdf, tmp_path)
         .collect()
     }
     assert got == expect
-    # lineage/metrics table exists and accounts for all rows
-    m = sink.read_metrics(spark)
-    assert m.agg(F.sum("rows")).collect()[0][0] >= len(got)
+    # one lineage/metrics row per committed epoch, accounting for all rows
+    from gelly_streaming_spark.streaming.state import committed_epochs
+
+    m = sink.read_metrics(spark).collect()
+    assert sorted(r["epoch"] for r in m) == committed_epochs(
+        spark, str(tmp_path / "sink/data")
+    )
+    assert sum(r["rows_in"] for r in m) == sink.read_all(spark).count()
+
+
+def test_sink_readers_skip_uncommitted_epoch(spark, tmp_path):
+    """An epoch directory a crash left without ``_SUCCESS`` stays
+    invisible to the sink's readers, as it does for the CC state."""
+    import os
+
+    sink = IdempotentUpsertSink(str(tmp_path / "sink"), keys=["k"])
+    schema = "k int, v string"
+    sink.write_batch(spark.createDataFrame([(1, "a"), (2, "b")], schema), 0)
+    partial = str(tmp_path / "sink/data/epoch=1")
+    spark.createDataFrame([(1, "partial")], schema).withColumn(
+        "_epoch", F.lit(1)
+    ).coalesce(1).write.parquet(partial)
+    os.remove(os.path.join(partial, "_SUCCESS"))
+    got = {(r["k"], r["v"]) for r in sink.read_upserted(spark).collect()}
+    assert got == {(1, "a"), (2, "b")}
+    m = sink.read_metrics(spark).collect()
+    assert [(r["epoch"], r["rows_in"]) for r in m] == [(0, 2)]
 
 
 def test_sessionize_batch_formulations_agree(spark, transcripts_pdf):

@@ -16,9 +16,7 @@ convs``), then ``--demo-epochs`` constant-size small batches
 all-time state). With the bucketed state layout the per-epoch
 ``touched`` phase stays FLAT as deltas accumulate because the probe
 reads only the batch's bucket set (~touched_buckets x
-bucket_rows_target rows), not O(V); re-run with
-``--bucket-rows-target 1000000000`` (degenerate B=8, every batch
-touches all buckets) for the unpruned comparison.
+bucket_rows_target rows), not O(V).
 """
 
 from __future__ import annotations
@@ -71,8 +69,6 @@ def main():
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--input", default="/tmp/gss_scaling/transcripts")
     ap.add_argument("--files-per-trigger", type=int, default=16)
-    ap.add_argument("--bucket-rows-target", type=int, default=262_144)
-    ap.add_argument("--max-buckets", type=int, default=4096)
     ap.add_argument("--demo-locality", action="store_true")
     ap.add_argument("--demo-base-convs", type=int, default=400000)
     ap.add_argument("--demo-convs", type=int, default=200)
@@ -121,8 +117,6 @@ def main():
     q, cc = run_streaming_cc(
         stream, f"{tmp}/cc_state", f"{tmp}/cc_ckpt",
         num_shards=args.cpus,
-        bucket_rows_target=args.bucket_rows_target,
-        max_buckets=args.max_buckets,
     )
     inner = cc.process_batch
     epochs: list[dict] = []
@@ -144,7 +138,6 @@ def main():
         "cpus": args.cpus,
         "files_per_trigger": files_per_trigger,
         "demo_locality": args.demo_locality,
-        "bucket_rows_target": args.bucket_rows_target,
         "cc_only_wall_s": round(wall, 2), "epochs": epochs,
     }), flush=True)
     shutil.rmtree(tmp, ignore_errors=True)
