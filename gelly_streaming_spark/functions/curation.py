@@ -98,11 +98,10 @@ def contamination_overlap(
     bs = word_shingles(bench, shingle_n).select(
         F.col("doc_id").alias("bench_id"), "shingle"
     )
-    bdf_w = Window.partitionBy("shingle")
-    bs = (
-        bs.withColumn("bdf", F.count(F.lit(1)).over(bdf_w))
-        .filter(F.col("bdf") <= max_bench_df)
-        .drop("bdf")
+    # same aggregate-joined-back shape as jaccard_pairs' df cap
+    bdf = bs.groupBy("shingle").agg(F.count(F.lit(1)).alias("bdf"))
+    bs = bs.join(bdf.filter(F.col("bdf") <= max_bench_df), "shingle").select(
+        "bench_id", "shingle"
     )
     cs = word_shingles(corpus, shingle_n)  # (doc_id, shingle), distinct
 

@@ -32,11 +32,19 @@ bit-for-bit; doubles appear only as single divisions of exact ints.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gelly_streaming_spark.functions.hashing import HASH60  # noqa: F401 (canonical)
 from gelly_streaming_spark.functions.text import with_tokens
+
+
+def pair_volume(n: str):
+    """``n·(n−1)/2``, the pairs a join bucket of ``n`` rows emits, as
+    a double. The multiply runs in double: as BIGINT it overflows
+    above n ≈ 3.04e9, where Spark wraps silently and DuckDB raises.
+    ``queries.SQL_PAIR_VOLUME`` is the DuckDB twin."""
+    return F.col(n).cast("double") * (F.col(n) - 1) / 2
 
 
 def token_df_stats(docs: DataFrame, max_df: int = 1000) -> DataFrame:
@@ -53,7 +61,7 @@ def token_df_stats(docs: DataFrame, max_df: int = 1000) -> DataFrame:
         .select(
             "tok",
             "df",
-            (F.col("df") * (F.col("df") - 1) / 2).alias("pairs"),
+            pair_volume("df").alias("pairs"),
             (F.col("df") > max_df).alias("dropped"),
         )
     )
@@ -106,11 +114,11 @@ def jaccard_pairs(
     toks = with_tokens(docs).select(
         "doc_id", F.explode(F.array_distinct("tokens")).alias("tok")
     )
-    df_w = Window.partitionBy("tok")
-    toks = (
-        toks.withColumn("df", F.count(F.lit(1)).over(df_w))
-        .filter(F.col("df") <= max_df)
-        .drop("df")
+    # df as an aggregate joined back, not a window on tok: the window
+    # would put the hottest token's rows in one straggler task
+    df = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    toks = toks.join(df.filter(F.col("df") <= max_df), "tok").select(
+        "doc_id", "tok"
     )
     # sizes AFTER the prune: jaccard is exact over the surviving
     # vocabulary (both engines, identically)

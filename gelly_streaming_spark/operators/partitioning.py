@@ -55,6 +55,22 @@ def _h(expr: str) -> str:
 # ---------------------------------------------------------------------------
 
 
+def _with_endpoint_degrees(edges: DataFrame, du: str, dv: str) -> DataFrame:
+    """``edges`` plus each endpoint's degree as columns ``du`` (src)
+    and ``dv`` (dst): one aggregate over the edge set and two
+    equi-joins on vertex. No broadcast hint — the degree side is
+    O(V), billions of rows at 100 TB, so Catalyst/AQE picks broadcast
+    vs shuffle from the actual size (ADVICE.md r1)."""
+    deg = (
+        edges.select(F.explode(F.array("src", "dst")).alias("vertex"))
+        .groupBy("vertex")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+    ds = deg.select(F.col("vertex").alias("src"), F.col("deg").alias(du))
+    dd_ = deg.select(F.col("vertex").alias("dst"), F.col("deg").alias(dv))
+    return edges.join(ds, "src").join(dd_, "dst")
+
+
 def hash_edges(edges: DataFrame, k: int) -> DataFrame:
     """HashEdges (HashEdges.java:78-110): part = hash(src) mod k."""
     return edges.withColumn(
@@ -65,22 +81,9 @@ def hash_edges(edges: DataFrame, k: int) -> DataFrame:
 def dbh(edges: DataFrame, k: int) -> DataFrame:
     """Degree-Based Hashing (Dbh.java:99-160): hash the LOWER-degree
     endpoint (cuts high-degree hubs, replicating them instead of
-    their neighbors). Degrees come from a first aggregate over the
-    edge set; ties break to the smaller vertex id (deterministic).
-
-    Plan shape: agg + two equi-joins on vertex. NO broadcast hint —
-    the degree side is O(V), small relative to edges here but
-    billions of rows at 100 TB; a pinned F.broadcast would OOM the
-    driver there (ADVICE.md r1), so Catalyst/AQE picks broadcast vs
-    shuffle from the actual size."""
-    deg = (
-        edges.select(F.explode(F.array("src", "dst")).alias("vertex"))
-        .groupBy("vertex")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    ds = deg.select(F.col("vertex").alias("src"), F.col("deg").alias("deg_src"))
-    dd_ = deg.select(F.col("vertex").alias("dst"), F.col("deg").alias("deg_dst"))
-    j = edges.join(ds, "src").join(dd_, "dst")
+    their neighbors). Degrees come from ``_with_endpoint_degrees``;
+    ties break to the smaller vertex id (deterministic)."""
+    j = _with_endpoint_degrees(edges, "deg_src", "deg_dst")
     chosen = (
         F.when(F.col("deg_src") < F.col("deg_dst"), F.col("src"))
         .when(F.col("deg_dst") < F.col("deg_src"), F.col("dst"))
@@ -306,6 +309,21 @@ def pds_partition(edges: DataFrame, k: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _single_group_fold(
+    df: DataFrame, fold, schema: str | None = None
+) -> DataFrame:
+    """Run ``fold(pdf) -> pdf`` over the whole frame as ONE pandas
+    group — the reference's parallelism-1 shared state. ``schema``
+    defaults to the input columns, types preserved (vertex ids may be
+    string labels or longs), plus ``part int``."""
+    if schema is None:
+        schema = ", ".join(f"{c} {t}" for c, t in df.dtypes) + ", part int"
+    return df.groupBy(F.lit(0).alias("g")).applyInPandas(
+        lambda key, pdf: fold(pdf.drop(columns=["g"], errors="ignore")),
+        schema=schema,
+    )
+
+
 def _sequential_edge_partition(
     edges: DataFrame, k: int, score_fn, init_fn=None
 ) -> DataFrame:
@@ -315,9 +333,8 @@ def _sequential_edge_partition(
     loads) -> float``; the argmax machine wins (ties -> lowest id).
     ``init_fn(pdf)``, if given, sees the full group before the fold
     (for scorers needing global n/m, e.g. LeastCostAdvance's alpha)."""
-    cols = edges.columns
 
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["ts", "src", "dst"], kind="stable")
         if init_fn is not None:
             init_fn(pdf)
@@ -341,14 +358,7 @@ def _sequential_edge_partition(
         out["part"] = pd.array(parts, dtype="int32")
         return out
 
-    # preserve input column types (vertex ids may be strings — the
-    # transcript graph's labels — or longs)
-    dtypes = dict(edges.dtypes)
-    schema = ", ".join(f"{c} {dtypes[c]}" for c in cols) + ", part int"
-    return edges.groupBy(F.lit(0).alias("g")).applyInPandas(
-        lambda key, pdf: fold(key, pdf.drop(columns=["g"], errors="ignore")),
-        schema=schema,
-    )
+    return _single_group_fold(edges, fold)
 
 
 def hdrf(edges: DataFrame, k: int, lam: float = 1.0, eps: float = 1e-9) -> DataFrame:
@@ -392,16 +402,8 @@ def hdrf_scalable(edges: DataFrame, k: int, lam: float = 1.0) -> DataFrame:
     Unlike the faithful ``hdrf`` fold (parallelism-1 parity op), every
     step here is a shuffle-parallel aggregate/join — the form that
     runs at 10^12 edges."""
-    deg = (
-        edges.select(F.explode(F.array("src", "dst")).alias("vertex"))
-        .groupBy("vertex")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    ds = deg.select(F.col("vertex").alias("src"), F.col("deg").alias("du"))
-    dd_ = deg.select(F.col("vertex").alias("dst"), F.col("deg").alias("dv"))
     j = (
-        edges.join(ds, "src")
-        .join(dd_, "dst")
+        _with_endpoint_degrees(edges, "du", "dv")
         .withColumn("hu", F.expr(f"pmod({_h('src')}, {k})").cast("int"))
         .withColumn("hv", F.expr(f"pmod({_h('dst')}, {k})").cast("int"))
         .withColumn(
@@ -575,9 +577,8 @@ def degree_based_custom(
     (the fork never increments d1 — reproduced as-is), load +1.
     Not expressible on the shared argmax harness (the tie-breaks
     compare cross-machine degree cells), so this is its own fold."""
-    cols = edges.columns
 
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["ts", "src", "dst"], kind="stable")
         limit = loadlimit if loadlimit is not None else (k * 1.1 + len(pdf)) / k
         degree: list[dict] = [dict() for _ in range(k)]
@@ -621,12 +622,7 @@ def degree_based_custom(
         out["part"] = pd.array(parts, dtype="int32")
         return out
 
-    dtypes = dict(edges.dtypes)
-    schema = ", ".join(f"{c} {dtypes[c]}" for c in cols) + ", part int"
-    return edges.groupBy(F.lit(0).alias("g")).applyInPandas(
-        lambda key, pdf: fold(key, pdf.drop(columns=["g"], errors="ignore")),
-        schema=schema,
-    )
+    return _single_group_fold(edges, fold)
 
 
 def fennel_vertices(
@@ -640,7 +636,7 @@ def fennel_vertices(
     α·γ·load_i^(γ−1). Input: (vertex, neighbors array). Sequential
     parity op (the reference is parallelism-1 too)."""
 
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         n_vertices = len(pdf)
         n_edges = max(1, int(pdf["neighbors"].map(len).sum()) // 2)
         a = alpha if alpha is not None else (
@@ -664,9 +660,7 @@ def fennel_vertices(
             {"vertex": pdf["vertex"].values, "part": pd.array(parts, dtype="int32")}
         )
 
-    return adjacency.groupBy(F.lit(0).alias("g")).applyInPandas(
-        lambda key, pdf: fold(key, pdf), schema="vertex long, part int"
-    )
+    return _single_group_fold(adjacency, fold, "vertex long, part int")
 
 
 def linear_greedy_vertices(
@@ -684,7 +678,7 @@ def linear_greedy_vertices(
     if overflow not in ("error", "least_loaded"):
         raise ValueError(f"unknown overflow policy {overflow!r}")
 
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         assign: dict[int, int] = {}
         loads = [0] * k
         parts = []
@@ -713,9 +707,7 @@ def linear_greedy_vertices(
             {"vertex": pdf["vertex"].values, "part": pd.array(parts, dtype="int32")}
         )
 
-    return adjacency.groupBy(F.lit(0).alias("g")).applyInPandas(
-        lambda key, pdf: fold(key, pdf), schema="vertex long, part int"
-    )
+    return _single_group_fold(adjacency, fold, "vertex long, part int")
 
 
 def hash_vertices(vertices: DataFrame, k: int, vertex_col: str = "vertex") -> DataFrame:

@@ -113,6 +113,10 @@ SQL_TOKS = (
     " '\\s+', ' ', 'g'), ' ') AS tokens FROM documents)"
 )
 
+# twin of dedup.pair_volume: n*(n-1)/2 multiplied in DOUBLE, since the
+# BIGINT multiply raises above n ~ 3.04e9
+SQL_PAIR_VOLUME = "{n}::DOUBLE * ({n} - 1) / 2"
+
 
 COOC_MAX_BUCKET = 1000
 
@@ -212,7 +216,7 @@ def cooccurrence_bucket_stats(
             "event_type",
             "wb",
             "users",
-            (F.col("users") * (F.col("users") - 1) / 2).alias("pairs"),
+            dd.pair_volume("users").alias("pairs"),
             (F.col("users") > max_bucket).alias("dropped"),
         )
     )
@@ -225,7 +229,7 @@ SQL_COOC_BUCKET_STATS = f"""WITH ue0 AS (
 ),
 g AS (SELECT event_type, wb, count(*)::BIGINT AS users
       FROM ue0 GROUP BY 1, 2)
-SELECT event_type, wb, users, users * (users - 1) / 2 AS pairs,
+SELECT event_type, wb, users, {SQL_PAIR_VOLUME.format(n="users")} AS pairs,
        users > {COOC_MAX_BUCKET} AS dropped
 FROM g"""
 
@@ -1212,7 +1216,7 @@ def q_jaccard_df_stats(spark, sf_dir):
 SQL_JACCARD_DF_STATS = f"""WITH {SQL_TOKS},
 x AS (SELECT doc_id, unnest(list_distinct(tokens)) AS tok FROM toks),
 d AS (SELECT tok, count(*)::BIGINT AS df FROM x GROUP BY tok)
-SELECT tok, df, df * (df - 1) / 2 AS pairs,
+SELECT tok, df, {SQL_PAIR_VOLUME.format(n="df")} AS pairs,
        df > {JACCARD_MAX_DF} AS dropped
 FROM d"""
 
@@ -1284,7 +1288,7 @@ MINHASH_MAX_BUCKET = 1000
 
 # banded buckets + the bucket-size cap, shared by the pair query and
 # the dedup_groups closure
-SQL_MINHASH_BUCKETS_CTE = f"""bands AS (SELECT doc_id, j // 4 AS band,
+SQL_MINHASH_BANDS_CTE = f"""bands AS (SELECT doc_id, j // 4 AS band,
                  md5(string_agg(minhash::VARCHAR, ',' ORDER BY j)) AS band_hash
           FROM hx GROUP BY doc_id, j // 4),
 bb AS (SELECT doc_id, band, band_hash FROM bands
@@ -1292,7 +1296,7 @@ bb AS (SELECT doc_id, band, band_hash FROM bands
                <= {MINHASH_MAX_BUCKET})"""
 
 SQL_MINHASH_LSH_PAIRS = f"""WITH {SQL_MINHASH_SIG_CTE},
-{SQL_MINHASH_BUCKETS_CTE}
+{SQL_MINHASH_BANDS_CTE}
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM bb a JOIN bb b
   ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id"""
@@ -1307,7 +1311,7 @@ def q_dedup_groups(spark, sf_dir):
 # CTE chain shared by dedup_groups and the dedup-aware split queries
 # (grp = the survivor map, one row per document)
 SQL_DEDUP_GROUPS_CTES = f"""{SQL_MINHASH_SIG_CTE},
-{SQL_MINHASH_BUCKETS_CTE},
+{SQL_MINHASH_BANDS_CTE},
 prs AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        FROM bb a JOIN bb b
          ON a.band = b.band AND a.band_hash = b.band_hash
@@ -1352,7 +1356,7 @@ def q_contamination(spark, sf_dir):
 # benchmark slice = deterministic 1/20 of docs by id hash; shingles
 # reuse the minhash `sh` CTE (word-3-grams) so the two ops can never
 # drift apart. Bench-side hot shingles capped via QUALIFY, mirroring
-# the Window cap in curation.contamination_overlap.
+# the bench-df cap in curation.contamination_overlap.
 SQL_CONTAMINATION = f"""WITH {SQL_MINHASH_SIG_CTE},
 flag AS (SELECT doc_id, ({_DUCK_ID_H} % {CONTAM_BENCH_MOD} = 0) AS is_bench
          FROM documents),

@@ -14,41 +14,23 @@ state + output writes make replay after crash idempotent
 (exactly-once effective); resuming from the checkpoint picks up both
 the source offsets and the last committed state epoch.
 
-Per-batch work is proportional to the BATCH, not the accumulated
-state. Only vertices touched by the batch enter the quotient
-resolution; vertices whose component was merged away are relabelled
-lazily through a small component→root mapping that is applied at read
-time. Each epoch persists only (a) the rows for vertices first seen
-this batch (a delta) and (b) a full snapshot of the mapping (size =
+Only vertices touched by the batch enter the quotient resolution;
+vertices whose component was merged away are relabelled lazily
+through a small component→root mapping that is applied at read time.
+Each epoch persists only (a) the rows for vertices first seen this
+batch (a delta) and (b) a full snapshot of the mapping (size =
 #components merged since the last compaction, not O(V)). Every
 ``compact_every`` epochs a full snapshot is written (marker file
 ``_BASE``) and the mapping resets — so a cold read unions one base +
 at most ``compact_every-1`` deltas.
 
-BASE snapshots are laid out in ``bucket = pmod(xxhash64(vertex),
-B)`` partitions (VERDICT r3 #4, LSM shape: the big compacted layer
-is the one worth pruning; deltas stay plain parquet — they are
-O(batch)-sized, read whole, and bucket-partitioning them was
-measured at 15-22 s/epoch of tiny-file writes for no read benefit).
-B is re-chosen at every base snapshot as ~state_rows /
-``bucket_rows_target`` (so bucket SIZE stays constant as state
-grows). The per-batch touched-vertex probe prunes the base scan to
-the batch's bucket set before the semi-join, so its read is
-~touched_buckets x bucket_rows_target base rows + the (small)
-deltas — flat in accumulated state size whenever the batch's vertex
-count is small against B (the 10^12-turn regime: per-batch arrivals
-touch a tiny fraction of all-time state). Honest bounds: with batch
-vertex counts >= B the bucket set covers everything and the probe
-degrades gracefully to an unpruned full scan (still no O(V) shuffle —
-the semi-join build side is the batch vertex set, AQE-broadcast
-when small, and no O(V) rewrite ever happens); a real 10^12
-deployment that needs strict point lookups would lift the synopsis
-into a KV store, which this layout is the parquet-native
-approximation of. Crash-consistent: B is stamped ``_BUCKETS_<B>``
-on the base's mapping dir (committed BEFORE the rows), and the
-corner where a compaction's rows committed but its ``_BASE`` marker
-didn't simply reads that snapshot as one more delta under
-latest-epoch-wins dedup — correctness never depends on the marker.
+Bases and deltas are plain parquet. The touched-vertex probe and the
+new-vertex anti-join scan base + deltas whole; their other side is
+the batch's vertex set, which AQE broadcasts when small, and outside
+a compaction no epoch rewrites O(V) rows. Crash corner: a compaction
+whose rows committed but whose ``_BASE`` marker didn't reads as one
+more delta under latest-epoch-wins dedup — correctness never depends
+on the marker.
 """
 
 from __future__ import annotations
@@ -57,11 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gelly_streaming_spark.operators.aggregation import sharded_fold
-from gelly_streaming_spark.streaming.state import (
-    committed_epochs,
-    read_marker_value,
-    write_marker,
-)
+from gelly_streaming_spark.streaming.state import committed_epochs, write_marker
 from gelly_streaming_spark.plans.connected_components import (
     ConnectedComponents,
     resolve_partials,
@@ -90,8 +68,6 @@ class StreamingConnectedComponents:
         salt: int = 1,
         shard_on=None,
         compact_every: int = 16,
-        bucket_rows_target: int = 262_144,
-        max_buckets: int = 4096,
         quotient_serial_limit: int = 1_000_000,
     ):
         # passed through to resolve_partials: quotients above this row
@@ -108,25 +84,11 @@ class StreamingConnectedComponents:
         # shard so the quotient resolution has almost nothing to link
         self.shard_on = shard_on
         self.compact_every = max(1, int(compact_every))
-        # bucketed state layout (VERDICT r3 #4): target rows per
-        # bucket partition; B = state_rows / target, re-chosen at each
-        # base snapshot so bucket size stays ~constant as state grows.
-        # The default (256k rows ~ 10-30 MB bucket files) is sized for
-        # the 10^9-vertex design point: sandbox-scale states stay at
-        # B_min=8 where the bucketed write costs nothing and pruning
-        # buys nothing (measured: the probe is job-floor-bound, not
-        # I/O-bound, below ~10^7 state rows — and base-write cost
-        # grows with B on a non-parallel filesystem: 9 s at B=8 vs
-        # 64 s at B=1024 for a 0.9M-row base on local disk).
-        # max_buckets caps the file count per base write (a real
-        # cluster with a bigger file budget raises it).
-        self.bucket_rows_target = max(1, int(bucket_rows_target))
-        self.max_buckets = max(1, int(max_buckets))
         # in-memory carry between consecutive epochs of one run:
-        # (base scan, delta rows (checkpointed/lazy), mapping, base
-        # bucket count B or None for legacy bases, need_dedup).
-        # Purely an optimization — any cache miss (resume, replay,
-        # first batch) reconstructs from committed parquet.
+        # (base rows, delta rows (checkpointed/lazy), mapping,
+        # need_dedup). Purely an optimization — any cache miss
+        # (resume, replay, first batch) reconstructs from committed
+        # parquet.
         self._cache = None
         self._cache_epoch: int | None = None
         # per-phase wall seconds of the last processed batch
@@ -171,78 +133,20 @@ class StreamingConnectedComponents:
         bases = [e for e in epochs if e in marked]
         return bases[-1] if bases else epochs[0]
 
-    # -- bucketed layout helpers ----------------------------------------------
-
-    def _choose_buckets(self, n_rows: int) -> int:
-        """Power-of-two bucket count ~ n_rows / bucket_rows_target,
-        clamped to [8, max_buckets]."""
-        want = max(1, n_rows // self.bucket_rows_target)
-        b = 8
-        while b < want and b < self.max_buckets:
-            b <<= 1
-        return b
-
-    @staticmethod
-    def _bucket_expr(b: int):
-        return F.pmod(F.xxhash64(F.col("vertex")), F.lit(b)).cast("int")
-
-    def _with_bucket(self, df: DataFrame, b: int) -> DataFrame:
-        return df.withColumn("bucket", self._bucket_expr(b))
-
-    def _read_base(
-        self, spark: SparkSession, epoch: int
-    ) -> tuple[DataFrame, int | None]:
-        """Base snapshot rows (vertex, component[, bucket]) + its
-        bucket count. ONLY bases are bucket-partitioned (LSM shape:
-        the big compacted layer is the one worth pruning; deltas are
-        O(batch) by construction and are read whole — bucketing them
-        was measured to cost 15-22 s/epoch in tiny-file writes for no
-        read benefit). The ``_BUCKETS_<B>`` marker lives in the base's
-        MAPPING dir, committed BEFORE the rows — a committed base
-        always has its marker. Explicit schema: an empty base writes
-        no data file (dynamic partitioning), so there is no footer to
-        infer from."""
-        b = read_marker_value(spark, self._map_dir(epoch), "_BUCKETS_")
-        d = self._rows_dir(epoch)
-        cols = self.algo.partial_schema + (
-            ", bucket int" if b is not None else ""
-        )
-        return (
-            spark.read.schema(cols).option("basePath", d).parquet(d),
-            b,
-        )
-
-    def _read_delta(self, spark: SparkSession, epoch: int) -> DataFrame:
-        """One delta epoch as (vertex, component). Robust to the crash
-        corner where a compaction's rows committed but its ``_BASE``
-        marker didn't: that bucket-partitioned full snapshot reads
-        here like any delta (the bucket partition column is discovered
-        beyond the explicit schema and dropped), and latest-epoch-wins
-        dedup absorbs its overlap with older rows."""
-        d = self._rows_dir(epoch)
-        return (
-            spark.read.schema(self.algo.partial_schema)
-            .option("basePath", d)
-            .parquet(d)
-            .select("vertex", "component")
+    def _read_rows(self, spark: SparkSession, epoch: int) -> DataFrame:
+        """One epoch's (vertex, component) rows, base or delta.
+        Explicit schema, so an epoch with no rows needs no data-file
+        footer to infer from."""
+        return spark.read.schema(self.algo.partial_schema).parquet(
+            self._rows_dir(epoch)
         )
 
     def _combine(
-        self,
-        base: DataFrame,
-        deltas: DataFrame | None,
-        b: int | None,
-        bucket_list: list[int] | None = None,
-        dedup: bool = False,
+        self, base: DataFrame, deltas: DataFrame | None, dedup: bool = False
     ) -> DataFrame:
-        """(vertex, component) over base + deltas. ``bucket_list``
-        prunes the BASE scan (partition filter; deltas always pass
-        whole — they are batch-sized). ``dedup`` applies
+        """(vertex, component) over base + deltas. ``dedup`` applies
         latest-epoch-wins (the base ranks below every delta), needed
         only on cold reads of multi-epoch spans."""
-        if bucket_list is not None and b is not None and len(bucket_list) < b:
-            base = base.filter(F.col("bucket").isin(bucket_list))
-        base = base.select("vertex", "component")
         if deltas is None:
             return base
         if not dedup:
@@ -271,22 +175,20 @@ class StreamingConnectedComponents:
 
     def _read_raw(
         self, spark: SparkSession, epochs: list[int]
-    ) -> tuple[
-        DataFrame, DataFrame | None, DataFrame | None, int | None, bool
-    ]:
-        """(base rows, delta rows with epoch, mapping, base bucket
-        count B, need_dedup) as of ``epochs[-1]``. need_dedup marks a
-        multi-epoch span: in normal operation deltas are vertex-
-        disjoint from everything before them (write-time anti-join),
-        but a crash-corner unmarked compaction snapshot among the
-        deltas overlaps older rows and latest-epoch-wins must apply."""
+    ) -> tuple[DataFrame, DataFrame | None, DataFrame | None, bool]:
+        """(base rows, delta rows with epoch, mapping, need_dedup) as
+        of ``epochs[-1]``. need_dedup marks a multi-epoch span: in
+        normal operation deltas are vertex-disjoint from everything
+        before them (write-time anti-join), but a crash-corner
+        unmarked compaction snapshot among the deltas overlaps older
+        rows and latest-epoch-wins must apply."""
         e = epochs[-1]
         base_e = self._base_for(spark, epochs)
         span = [x for x in epochs if base_e <= x <= e]
-        base, b = self._read_base(spark, base_e)
+        base = self._read_rows(spark, base_e)
         deltas = None
         for x in span[1:]:
-            d = self._read_delta(spark, x).withColumn(
+            d = self._read_rows(spark, x).withColumn(
                 "epoch", F.lit(x).cast("bigint")
             )
             deltas = d if deltas is None else deltas.unionByName(d)
@@ -295,20 +197,18 @@ class StreamingConnectedComponents:
             mapping = spark.read.schema(MAPPING_SCHEMA).parquet(
                 self._map_dir(e)
             )
-        return base, deltas, mapping, b, len(span) > 1
+        return base, deltas, mapping, len(span) > 1
 
     # -- read API -------------------------------------------------------------
 
-    def read_state(self, spark: SparkSession) -> DataFrame | None:
+    def current_components(self, spark: SparkSession) -> DataFrame | None:
         epochs = self._committed(spark)
         if not epochs:
             return None
-        base, deltas, mapping, b, need_dedup = self._read_raw(spark, epochs)
-        rows = self._combine(base, deltas, b, dedup=need_dedup)
-        return self._apply_mapping(rows, mapping)
-
-    def current_components(self, spark: SparkSession) -> DataFrame | None:
-        return self.read_state(spark)
+        base, deltas, mapping, need_dedup = self._read_raw(spark, epochs)
+        return self._apply_mapping(
+            self._combine(base, deltas, dedup=need_dedup), mapping
+        )
 
     # -- write helpers --------------------------------------------------------
 
@@ -322,37 +222,22 @@ class StreamingConnectedComponents:
         rows: DataFrame,
         mapping: DataFrame | None,
         base: bool,
-        bucket_b: int | None = None,
     ) -> None:
         """Mapping first, rows second: the rows ``_SUCCESS`` is the
-        commit point, so a committed epoch always has its mapping —
-        and, for bucketed BASES, its ``_BUCKETS_<B>`` marker (stamped
-        on the mapping dir so prunability is part of the same
-        commit-ordering guarantee). Epoch-keyed overwrite =>
-        replay-idempotent (exactly-once). Bucketed rows must already
-        carry the ``bucket`` column; ``repartition("bucket")`` puts
-        each bucket wholly in one task so the write emits <=B files,
-        an O(rows) shuffle amortized over compact_every epochs."""
+        commit point, so a committed epoch always has its mapping.
+        Epoch-keyed overwrite => replay-idempotent (exactly-once)."""
         m = mapping if mapping is not None else self._empty_mapping(spark)
         m.coalesce(1).write.mode("overwrite").parquet(self._map_dir(epoch_id))
-        if bucket_b is not None:
-            write_marker(
-                spark, self._map_dir(epoch_id), f"_BUCKETS_{bucket_b}"
-            )
-            rows.repartition("bucket").write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(self._rows_dir(epoch_id))
-        else:
-            rows.write.mode("overwrite").parquet(self._rows_dir(epoch_id))
+        rows.write.mode("overwrite").parquet(self._rows_dir(epoch_id))
         if base:
             write_marker(spark, self._rows_dir(epoch_id), "_BASE")
 
     # -- the per-batch merge --------------------------------------------------
 
     def _prev_for(self, spark: SparkSession, epoch_id: int):
-        """(base, deltas, mapping, bucket count, need_dedup) covering
-        epochs < epoch_id. The in-memory carry answers the sequential
-        case; a replay of an already-processed epoch (at-least-once
+        """(base, deltas, mapping, need_dedup) covering epochs <
+        epoch_id. The in-memory carry answers the sequential case; a
+        replay of an already-processed epoch (at-least-once
         foreachBatch) or a resume after crash misses and reconstructs
         from parquet."""
         if self._cache is not None and self._cache_epoch == epoch_id - 1:
@@ -388,41 +273,19 @@ class StreamingConnectedComponents:
                 batch, self.quotient_serial_limit
             ).localCheckpoint(eager=True)
             _mark("resolve")
-            b0 = self._choose_buckets(merged.count())
-            self._write_epoch(
-                spark, epoch_id, self._with_bucket(merged, b0),
-                mapping=None, base=True, bucket_b=b0,
-            )
+            self._write_epoch(spark, epoch_id, merged, mapping=None, base=True)
             _mark("write")
-            self._cache = (self._with_bucket(merged, b0), None, None, b0, False)
+            self._cache = (merged, None, None, False)
             self._cache_epoch = epoch_id
             return
-        base, deltas, mapping, b, need_dedup = prev
+        base, deltas, mapping, need_dedup = prev
         # 1. only vertices the batch touches can link components —
-        #    everything else passes through untouched. The BASE scan
-        #    is PRUNED to the batch's bucket set first (partition
-        #    filter on the bucketed base layout; deltas are O(batch)
-        #    and pass whole): base read ~ touched_buckets x
-        #    bucket_rows_target rows, flat in accumulated state
-        #    whenever batch vertices << B; with batch vertices >= B it
-        #    degrades to the full O(V) scan (never an O(V) shuffle —
-        #    the semi-join probe side is the batch vertex set, AQE
-        #    broadcasts it when small — and never an O(V) rewrite)
-        bl = None
-        if b is not None:
-            bl = [
-                r[0]
-                for r in batch.select(self._bucket_expr(b).alias("b"))
-                .distinct()
-                .collect()
-            ]
-        probe = self._combine(
-            base, deltas, b, bucket_list=bl, dedup=need_dedup
-        )
-        _mark("bucketset")
-        touched = probe.join(
-            batch.select("vertex"), "vertex", "leftsemi"
-        )
+        #    everything else passes through untouched. The semi-join
+        #    scans base + deltas whole; its other side is the batch
+        #    vertex set (AQE broadcasts it when small), and no O(V)
+        #    rows are rewritten
+        state = self._combine(base, deltas, dedup=need_dedup)
+        touched = state.join(batch.select("vertex"), "vertex", "leftsemi")
         touched_eff = self._apply_mapping(touched, mapping).localCheckpoint(
             eager=True
         )
@@ -464,44 +327,24 @@ class StreamingConnectedComponents:
         m_folded = m_folded.localCheckpoint(eager=True)
         _mark("mapfold")
         # 4. persist only vertices first seen this batch; touched-old
-        #    vertices are covered by the mapping. The anti-join probes
-        #    the PRUNED state: every merged vertex hashes into the
-        #    batch's bucket set, so pruning cannot hide an existing row
+        #    vertices are covered by the mapping
         delta = merged.join(
-            probe.select("vertex"), "vertex", "leftanti"
+            state.select("vertex"), "vertex", "leftanti"
         ).localCheckpoint(eager=True)
         _mark("delta")
         if epoch_id > 0 and epoch_id % self.compact_every == 0:
-            # compaction: fold mapping into a full snapshot, reset the
-            # mapping, and RE-CHOOSE the bucket count from the new
-            # state size (bucket size stays ~bucket_rows_target as
-            # state grows; the O(V) pass — and the B-file bucketed
-            # write — is amortized over compact_every batches)
+            # compaction: fold mapping into a full snapshot and reset
+            # the mapping (the O(V) pass is amortized over
+            # compact_every batches)
             full = (
-                self._apply_mapping(
-                    self._combine(base, deltas, b, dedup=need_dedup),
-                    m_folded,
-                )
+                self._apply_mapping(state, m_folded)
                 .unionByName(delta)
                 .distinct()
                 .localCheckpoint(eager=True)
             )
-            b_new = self._choose_buckets(full.count())
-            self._write_epoch(
-                spark, epoch_id, self._with_bucket(full, b_new),
-                mapping=None, base=True, bucket_b=b_new,
-            )
-            self._cache = (
-                self._read_base(spark, epoch_id)[0],
-                None,
-                None,
-                b_new,
-                False,
-            )
+            self._write_epoch(spark, epoch_id, full, mapping=None, base=True)
+            self._cache = (self._read_rows(spark, epoch_id), None, None, False)
         else:
-            # deltas stay UNBUCKETED plain parquet (LSM shape): they
-            # are O(batch)-sized and read whole, and bucket-
-            # partitioning them costs a tiny-file write storm
             self._write_epoch(
                 spark, epoch_id, delta, mapping=m_folded, base=False,
             )
@@ -513,7 +356,6 @@ class StreamingConnectedComponents:
                 new_delta if deltas is None
                 else deltas.unionByName(new_delta),
                 m_folded,
-                b,
                 need_dedup,
             )
         _mark("write")

@@ -48,25 +48,6 @@ def committed_epochs(
     return sorted(out)
 
 
-def read_marker_value(
-    spark: SparkSession, epoch_dir: str, prefix: str
-) -> int | None:
-    """Integer suffix of a ``{prefix}<n>`` marker file in
-    ``epoch_dir`` (e.g. ``_BUCKETS_64`` -> 64), or None when the dir
-    carries no such marker (legacy/unbucketed state)."""
-    jvm, fs, hpath = _fs_and_path(spark, epoch_dir)
-    if not fs.exists(hpath):
-        return None
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith(prefix):
-            try:
-                return int(name[len(prefix):])
-            except ValueError:
-                continue
-    return None
-
-
 def write_marker(spark: SparkSession, epoch_dir: str, marker: str) -> None:
     """Drop an empty marker file (e.g. ``_BASE`` on full-snapshot
     epochs) into a committed epoch directory, through the same

@@ -191,3 +191,22 @@ def test_repetition_and_pii_zero_shuffle(spark):
         plan = plan_of(df)
         assert "Exchange" not in plan, plan[:1500]
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_document_frequency_caps_have_no_key_window(spark):
+    """The hot-token and hot-shingle caps count document frequency
+    with an aggregate joined back, never a window partitioned on the
+    token: such a window puts every row of the hottest token into one
+    straggler task, where the aggregate combines map-side."""
+    import re
+
+    from gelly_streaming_spark.queries import QUERIES
+
+    keyed = {}
+    for name, key in (("jaccard_pairs", "tok"), ("contamination", "shingle")):
+        plan = plan_of(QUERIES[name][0](spark, SF))
+        keyed[name] = [
+            l for l in plan.splitlines()
+            if re.search(r"\bWindow\b", l) and re.search(rf"\[{key}#\d+\]\s*$", l)
+        ]
+    assert keyed == {"jaccard_pairs": [], "contamination": []}, keyed

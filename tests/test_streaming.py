@@ -181,7 +181,7 @@ def test_cc_state_on_file_uri(spark, transcripts_pdf, tmp_path):
     with open(os.path.join(partial, "part-0.parquet"), "wb") as f:
         f.write(b"garbage")
     assert committed_epochs(spark, f"{state}/state") == [0]
-    assert cc.read_state(spark).count() == len(expect)
+    assert cc.current_components(spark).count() == len(expect)
 
 
 def test_streaming_degrees_update_mode(spark, transcripts_pdf, tmp_path):
@@ -625,10 +625,9 @@ def test_incremental_cc_lazy_relabel_across_batches(spark, tmp_path):
         for r in cc.current_components(spark).collect()
     }
     assert got == expect
-    # merge-only batches persist EMPTY deltas (no new vertices).
-    # Empty bucketed deltas write no data file at all (dynamic
-    # partitioning), so raw dir reads need the schema spelled out —
-    # same contract the engine itself uses.
+    # merge-only batches persist EMPTY deltas (no new vertices). An
+    # empty delta may hold no data file to infer a schema from, so raw
+    # dir reads spell the schema out — same contract the engine uses.
     raw = "vertex string, component string"
     assert spark.read.schema(raw).parquet(f"{st}/state/epoch=1").count() == 0
     assert spark.read.schema(raw).parquet(f"{st}/state/epoch=2").count() == 0
@@ -661,6 +660,10 @@ def test_incremental_cc_compaction(spark, tmp_path):
     cc.process_batch(_edges(spark, [("y", "z")]), 2)  # compaction epoch
     cc.process_batch(_edges(spark, [("q", "r")]), 3)
     assert committed_epochs(spark, f"{st}/state", marker="_BASE") == [0, 2]
+    # bases are plain parquet like deltas: no partition directories
+    import glob as _glob
+
+    assert not _glob.glob(f"{st}/state/epoch=*/*=*")
     # epoch 2 is a full snapshot of all 5 vertices, mapping reset
     assert spark.read.parquet(f"{st}/state/epoch=2").count() == 5
     assert spark.read.parquet(f"{st}/mapping/epoch=2").count() == 0
@@ -737,64 +740,19 @@ def test_streaming_quotient_limit_crossing(spark, tmp_path):
     assert results["serial"] == results["contract"] == expect
 
 
-def test_bucketed_state_pruned_probe(spark, tmp_path):
-    """bucket_rows_target=1 forces a multi-bucket layout from epoch 0,
-    so the touched-vertex probe takes the PRUNED path (batch bucket
-    set < B) on every merge batch — results, compaction, and a cold
-    reader must all agree with the unbucketed semantics."""
-    import glob as _glob
-
-    from gelly_streaming_spark.streaming.state import read_marker_value
-
-    st = str(tmp_path / "s")
-    cc = StreamingConnectedComponents(
-        st, num_shards=4, bucket_rows_target=1, compact_every=3
-    )
-    cc.process_batch(_edges(spark, [("b", "c"), ("e", "f"), ("h", "i")]), 0)
-    cc.process_batch(_edges(spark, [("c", "e")]), 1)
-    cc.process_batch(_edges(spark, [("f", "h")]), 2)
-    cc.process_batch(_edges(spark, [("x", "y")]), 3)  # epoch 3: compaction
-    expect = {(v, "b") for v in "bcefhi"} | {("x", "x"), ("y", "x")}
-    got = {
-        (r["vertex"], r["component"])
-        for r in cc.current_components(spark).collect()
-    }
-    assert got == expect
-    # the layout is really bucketed and the bucket count is stamped
-    assert _glob.glob(f"{st}/state/epoch=0/bucket=*")
-    assert read_marker_value(spark, f"{st}/mapping/epoch=0", "_BUCKETS_")
-    # epoch 3 is a compaction base with its own stamp
-    assert read_marker_value(spark, f"{st}/mapping/epoch=3", "_BUCKETS_")
-    # cold reader (fresh object, no carry) agrees
-    cc2 = StreamingConnectedComponents(st, num_shards=4)
-    got2 = {
-        (r["vertex"], r["component"])
-        for r in cc2.current_components(spark).collect()
-    }
-    assert got2 == expect
-
-
-def test_bucket_count_mismatch_span_falls_back(spark, tmp_path):
+def test_compaction_without_base_marker_reads_as_delta(spark, tmp_path):
     """Crash corner: a compaction whose rows committed but whose
-    ``_BASE`` marker write died leaves one span holding TWO bucket
-    counts. The reader must detect the disagreeing ``_BUCKETS_``
-    stamps, skip pruning, and still produce the latest-epoch-wins
-    answer (correctness never depends on the marker)."""
-    from gelly_streaming_spark.streaming.state import read_marker_value
-
+    ``_BASE`` marker write died. The reader must take that full
+    snapshot as one more delta over the older base and still produce
+    the latest-epoch-wins answer (correctness never depends on the
+    marker)."""
     st = str(tmp_path / "s")
-    cc = StreamingConnectedComponents(
-        st, num_shards=4, bucket_rows_target=1, compact_every=2
-    )
-    # epoch 0: 12 vertices -> B=16; epoch 2 compaction: 20 -> B=32
+    cc = StreamingConnectedComponents(st, num_shards=4, compact_every=2)
     b0 = [(f"a{i}", f"b{i}") for i in range(6)]
     b1 = [(f"c{i}", f"d{i}") for i in range(4)]
     cc.process_batch(_edges(spark, b0), 0)
     cc.process_batch(_edges(spark, b1), 1)
     cc.process_batch(_edges(spark, [("a0", "c0")]), 2)  # compaction
-    ba = read_marker_value(spark, f"{st}/mapping/epoch=0", "_BUCKETS_")
-    bb = read_marker_value(spark, f"{st}/mapping/epoch=2", "_BUCKETS_")
-    assert ba and bb and ba != bb
     # simulate the crash: epoch 2's _BASE marker never landed
     import os
 
@@ -814,8 +772,7 @@ def test_bucket_count_mismatch_span_falls_back(spark, tmp_path):
         | {(f"d{i}", f"c{i}") for i in range(1, 4)}
     )
     assert got == expect
-    # and the engine can continue from the mixed span (writes land
-    # unbucketed until the next compaction re-stamps a uniform B)
+    # and the engine can continue from that span
     cc2.process_batch(_edges(spark, [("d0", "a1")]), 3)
     got2 = {
         (r["vertex"], r["component"])

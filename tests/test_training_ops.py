@@ -997,3 +997,25 @@ def test_corpus_report_exact(spark):
     assert s1["mean_tokens"] == 8 / 3 and s1["dup_frac"] == 1 / 3
     und = got["und"]
     assert (und["n_docs"], und["n_unique_texts"], und["dup_frac"]) == (1, 1, 0.0)
+
+
+def test_pair_volume_past_bigint_multiply(spark):
+    """The ``pairs`` diagnostic of token_df_stats and
+    cooccurrence_bucket_stats above n ≈ 3.04e9, where a BIGINT
+    n*(n-1) overflows: Spark must not wrap negative, DuckDB must not
+    raise, and the two engines must agree."""
+    import duckdb
+
+    from gelly_streaming_spark.queries import SQL_PAIR_VOLUME
+
+    n = 3_100_000_000
+    got = (
+        spark.createDataFrame([(n,)], "df bigint")
+        .select(dd.pair_volume("df").alias("pairs"))
+        .first()["pairs"]
+    )
+    want = duckdb.sql(
+        f"SELECT {SQL_PAIR_VOLUME.format(n='df')} AS pairs"
+        f" FROM (SELECT {n}::BIGINT AS df)"
+    ).fetchone()[0]
+    assert got > 0 and got == want == n * (n - 1) / 2

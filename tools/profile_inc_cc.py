@@ -3,20 +3,12 @@
 Mirrors tools/scale_job.py's streaming leg (same warmup discipline)
 but runs the CC query alone and wraps ``process_batch`` with a timer,
 so the warm per-epoch cost of the shipped engine is attributable
-separately from the session-degree leg.
+separately from the session-degree leg. Each epoch prints one JSON
+line with its wall time and ``last_phase_times``; a final line
+repeats them with the run's CC-only wall time.
 
 Usage: python tools/profile_inc_cc.py --cpus 32 \
            --input /tmp/gss_scaling/transcripts --files-per-trigger 16
-
-``--demo-locality`` (VERDICT r3 #4 evidence) synthesizes its own
-input instead: one bulk epoch that loads a large state (``--demo-base-
-convs``), then ``--demo-epochs`` constant-size small batches
-(``--demo-convs`` conversations each, fresh conv ids per epoch — the
-10^12-turn regime where per-batch arrivals touch a tiny fraction of
-all-time state). With the bucketed state layout the per-epoch
-``touched`` phase stays FLAT as deltas accumulate because the probe
-reads only the batch's bucket set (~touched_buckets x
-bucket_rows_target rows), not O(V).
 """
 
 from __future__ import annotations
@@ -38,41 +30,11 @@ TSCHEMA = (
 )
 
 
-def build_demo_input(spark, tmp, base_convs, small_convs, epochs):
-    """Bulk epoch 0 (big state) + constant small epochs with FRESH
-    conv ids each (arrival locality): one file per trigger."""
-    from pyspark.sql import functions as F
-
-    from gelly_streaming_spark.fixtures import make_transcripts_spark
-
-    src = f"{tmp}/demo_input"
-    base = make_transcripts_spark(
-        spark, n_convs=base_convs, turns_per_conv=4,
-        hot_conv_fraction=0.0, seed=7,
-    )
-    base.withColumn(
-        "conv_id", F.concat(F.lit("b_"), F.col("conv_id"))
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f000")
-    for i in range(epochs):
-        small = make_transcripts_spark(
-            spark, n_convs=small_convs, turns_per_conv=4,
-            hot_conv_fraction=0.0, seed=100 + i,
-        )
-        small.withColumn(
-            "conv_id", F.concat(F.lit(f"e{i:03d}_"), F.col("conv_id"))
-        ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f{i + 1:03d}")
-    return src
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int, default=32)
     ap.add_argument("--input", default="/tmp/gss_scaling/transcripts")
     ap.add_argument("--files-per-trigger", type=int, default=16)
-    ap.add_argument("--demo-locality", action="store_true")
-    ap.add_argument("--demo-base-convs", type=int, default=400000)
-    ap.add_argument("--demo-convs", type=int, default=200)
-    ap.add_argument("--demo-epochs", type=int, default=12)
     args = ap.parse_args()
 
     os.environ["SPARK_GRAFT_CPUS"] = str(args.cpus)
@@ -83,20 +45,8 @@ def main():
                       shuffle_partitions=args.cpus)
     tmp = tempfile.mkdtemp(prefix="gss_prof_inc_")
 
-    if args.demo_locality:
-        input_dir = build_demo_input(
-            spark, tmp, args.demo_base_convs, args.demo_convs,
-            args.demo_epochs,
-        )
-        files_per_trigger = 1
-        warm_glob = f"{input_dir}/f001/part-*.parquet"
-    else:
-        input_dir = args.input
-        files_per_trigger = args.files_per_trigger
-        warm_glob = f"{input_dir}/f0/part-*.parquet"
-
     # warmup: same as scale_job (one part-file, throwaway state)
-    warm_file = sorted(glob.glob(warm_glob))[0]
+    warm_file = sorted(glob.glob(f"{args.input}/f0/part-*.parquet"))[0]
     warm_dir = f"{tmp}/warm_input"
     os.makedirs(warm_dir)
     shutil.copy(warm_file, warm_dir)
@@ -110,8 +60,8 @@ def main():
 
     stream = (
         spark.readStream.schema(TSCHEMA)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(f"{input_dir}/f*")
+        .option("maxFilesPerTrigger", args.files_per_trigger)
+        .parquet(f"{args.input}/f*")
     )
     t0 = time.perf_counter()
     q, cc = run_streaming_cc(
@@ -136,8 +86,7 @@ def main():
     wall = time.perf_counter() - t0
     print(json.dumps({
         "cpus": args.cpus,
-        "files_per_trigger": files_per_trigger,
-        "demo_locality": args.demo_locality,
+        "files_per_trigger": args.files_per_trigger,
         "cc_only_wall_s": round(wall, 2), "epochs": epochs,
     }), flush=True)
     shutil.rmtree(tmp, ignore_errors=True)
