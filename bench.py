@@ -2,7 +2,8 @@
 
 Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``
-(default 32) and prints ONE JSON line:
+(default ``session.DEFAULT_CPUS``, the usable core count) and prints
+ONE JSON line:
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {name: sec, ...}, "queries_spread": {name: sec, ...},
@@ -51,8 +52,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from gelly_streaming_spark.session import DEFAULT_CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = DEFAULT_CPUS
 SKIP_STREAMING = os.environ.get("SPARK_GRAFT_SKIP_STREAMING", "") == "1"
 BENCH_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 

@@ -50,6 +50,15 @@ from gelly_streaming_spark.functions.text import TOKENS_EXPR
 # MOD * n_stratum must fit BIGINT: 10^6 * 10^12 = 10^18 < 2^63.
 SAMPLE_MOD = 1_000_000
 
+
+def _op_hash(op: str, col: str):
+    """hash60 of ``'<op>|' || <col>``: each op hashes its own domain,
+    so composing two selections (sample then pack, split of the
+    benchmark slice, ...) gives independent draws rather than one hash
+    reused under moduli that share factors."""
+    return F.expr(HASH60.format(x=f"concat('{op}|', cast({col} as string))"))
+
+
 def _n_tokens():
     """Token count via the ONE canonical tokenization
     (text.TOKENS_EXPR) so packing/report counts can never drift from
@@ -63,7 +72,7 @@ def benchmark_flagged(docs: DataFrame, bench_mod: int = 20) -> DataFrame:
     the corpus designated as the held-out benchmark/eval set (stand-in
     for an external benchmark table; swap in a real one behind the
     same two-column (doc_id, text) contract)."""
-    h = F.expr(HASH60.format(x="cast(doc_id as string)"))
+    h = _op_hash("bench", "doc_id")
     return docs.withColumn("is_bench", (h % bench_mod) == 0)
 
 
@@ -141,7 +150,7 @@ def split_assign(
     holds by construction and is pinned in pytest.
     """
     g = dedup_groups(docs, **dedup_kwargs)
-    b = F.expr(HASH60.format(x="cast(keep_id as string)")) % mod
+    b = _op_hash("split", "keep_id") % mod
     return g.select(
         "doc_id",
         "keep_id",
@@ -197,7 +206,7 @@ def pack_sequences(
     so a bucket's documents fit an executor's sort spill comfortably
     (at 100 TB: ~10^4-10^5 buckets); the fixture default 64 keeps
     test-scale buckets non-trivial."""
-    h = F.expr(HASH60.format(x="cast(doc_id as string)"))
+    h = _op_hash("pack", "doc_id")
     d = docs.select(
         "doc_id",
         _n_tokens().alias("n_tokens"),
@@ -281,7 +290,7 @@ def stratified_sample(
     st = F.coalesce(F.col(strata_col), F.lit("und")).alias("stratum")
     d = docs.select("doc_id", st)
     cnt = d.groupBy("stratum").agg(F.count(F.lit(1)).alias("n_stratum"))
-    h = F.expr(HASH60.format(x="cast(doc_id as string)")) % mod
+    h = _op_hash("sample", "doc_id") % mod
     # threshold computed driver-side in Python (arbitrary precision)
     # and bound as a 64-bit literal: quota * mod as two int32 column
     # literals would overflow for quota > 2^31/mod

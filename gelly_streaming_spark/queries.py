@@ -1336,10 +1336,11 @@ SELECT doc_id, keep_id FROM grp"""
 # splits, stratified sampling
 # ---------------------------------------------------------------------------
 
-# hash60 of a stringified id, DuckDB side (the Spark side is
-# HASH60.format(x="cast(<id> as string)") inside curation.py)
-_DUCK_ID_H = DUCK60.format(x="doc_id::VARCHAR")
-_DUCK_KEEP_H = DUCK60.format(x="keep_id::VARCHAR")
+
+def _duck_op_hash(op: str, col: str) -> str:
+    """DuckDB twin of curation._op_hash: hash60 of ``'<op>|' || id``."""
+    return DUCK60.format(x=f"'{op}|' || {col}::VARCHAR")
+
 
 CONTAM_BENCH_MOD = 20
 CONTAM_MAX_BENCH_DF = 1000
@@ -1358,7 +1359,7 @@ def q_contamination(spark, sf_dir):
 # drift apart. Bench-side hot shingles capped via QUALIFY, mirroring
 # the bench-df cap in curation.contamination_overlap.
 SQL_CONTAMINATION = f"""WITH {SQL_MINHASH_SIG_CTE},
-flag AS (SELECT doc_id, ({_DUCK_ID_H} % {CONTAM_BENCH_MOD} = 0) AS is_bench
+flag AS (SELECT doc_id, ({_duck_op_hash("bench", "doc_id")} % {CONTAM_BENCH_MOD} = 0) AS is_bench
          FROM documents),
 bs AS (SELECT s.doc_id AS bench_id, s.shingle
        FROM sh s JOIN flag f ON f.doc_id = s.doc_id WHERE f.is_bench
@@ -1380,8 +1381,9 @@ def q_split_assign(spark, sf_dir):
     return cu.split_assign(_tp(spark, sf_dir, "documents"))
 
 
-_SPLIT_CASE = f"""CASE WHEN ({_DUCK_KEEP_H} % 100) < 90 THEN 'train'
-            WHEN ({_DUCK_KEEP_H} % 100) < 95 THEN 'val'
+_SPLIT_H = _duck_op_hash("split", "keep_id")
+_SPLIT_CASE = f"""CASE WHEN ({_SPLIT_H} % 100) < 90 THEN 'train'
+            WHEN ({_SPLIT_H} % 100) < 95 THEN 'val'
             ELSE 'test' END"""
 
 SQL_SPLIT_ASSIGN = f"""WITH RECURSIVE {SQL_DEDUP_GROUPS_CTES}
@@ -1415,7 +1417,7 @@ SQL_PACK_SEQUENCES = f"""WITH d AS (
   SELECT doc_id,
          len(string_split(regexp_replace(trim(lower(text)),
              '\\s+', ' ', 'g'), ' '))::BIGINT AS n_tokens,
-         {_DUCK_ID_H} AS h
+         {_duck_op_hash("pack", "doc_id")} AS h
   FROM documents),
 b AS (SELECT doc_id, n_tokens, h, h % {PACK_BUCKETS} AS bucket FROM d),
 o AS (SELECT doc_id, bucket, n_tokens,
@@ -1466,7 +1468,7 @@ SQL_STRATIFIED_SAMPLE = f"""WITH d AS (
 c AS (SELECT stratum, count(*)::BIGINT AS n_stratum FROM d GROUP BY stratum)
 SELECT d.doc_id, d.stratum, c.n_stratum
 FROM d JOIN c USING (stratum)
-WHERE ({_DUCK_ID_H} % {cu.SAMPLE_MOD}) * c.n_stratum
+WHERE ({_duck_op_hash("sample", "doc_id")} % {cu.SAMPLE_MOD}) * c.n_stratum
       < {SAMPLE_QUOTA} * {cu.SAMPLE_MOD}"""
 
 

@@ -17,20 +17,28 @@ the source offsets and the last committed state epoch.
 Only vertices touched by the batch enter the quotient resolution;
 vertices whose component was merged away are relabelled lazily
 through a small component→root mapping that is applied at read time.
-Each epoch persists only (a) the rows for vertices first seen this
-batch (a delta) and (b) a full snapshot of the mapping (size =
-#components merged since the last compaction, not O(V)). Every
-``compact_every`` epochs a full snapshot is written (marker file
-``_BASE``) and the mapping resets — so a cold read unions one base +
-at most ``compact_every-1`` deltas.
+The state is three epoch-keyed parquet tables under ``state_path``:
 
-Bases and deltas are plain parquet. The touched-vertex probe and the
-new-vertex anti-join scan base + deltas whole; their other side is
-the batch's vertex set, which AQE broadcasts when small, and outside
-a compaction no epoch rewrites O(V) rows. Crash corner: a compaction
-whose rows committed but whose ``_BASE`` marker didn't reads as one
-more delta under latest-epoch-wins dedup — correctness never depends
-on the marker.
+- ``base/epoch=<id>``: a full (vertex, component) snapshot, written
+  by the first epoch and then every ``compact_every`` epochs, with
+  the mapping folded in;
+- ``delta/epoch=<id>``: the vertices first seen in that epoch. The
+  write-time anti-join against the state keeps deltas
+  vertex-disjoint from their base and from each other;
+- ``mapping/epoch=<id>``: a full snapshot of the mapping as of that
+  delta (size = #components merged since the last base, not O(V)),
+  written before the delta.
+
+Each table's only commit point is Spark's ``_SUCCESS`` job-commit
+marker, and an epoch is committed when its base or delta is. A read
+as of epoch e takes the latest committed base b <= e, the plain union
+of the committed deltas in (b, e] and the mapping of the last of
+those deltas — no dedup, since the rows are disjoint. An epoch whose
+write died before ``_SUCCESS`` is invisible, and the checkpoint
+replays it. The touched-vertex probe and the new-vertex anti-join
+scan that union whole; their other side is the batch's vertex set,
+which AQE broadcasts when small, and outside a compaction no epoch
+rewrites O(V) rows.
 """
 
 from __future__ import annotations
@@ -39,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gelly_streaming_spark.operators.aggregation import sharded_fold
-from gelly_streaming_spark.streaming.state import committed_epochs, write_marker
+from gelly_streaming_spark.streaming.state import committed_epochs
 from gelly_streaming_spark.plans.connected_components import (
     ConnectedComponents,
     resolve_partials,
@@ -52,11 +60,13 @@ class StreamingConnectedComponents:
     """Incremental CC over a streaming edge frame via foreachBatch.
 
     - ``state_path``: root of the persisted synopsis —
-      ``{state_path}/state/epoch=<id>`` vertex rows (full snapshots
-      carry a ``_BASE`` marker; other epochs are new-vertex deltas)
-      and ``{state_path}/mapping/epoch=<id>`` the lazy component→root
-      relabelling table, written per epoch for idempotent replay.
-    - ``compact_every``: write a full base snapshot (and reset the
+      ``{state_path}/base/epoch=<id>`` full vertex snapshots,
+      ``{state_path}/delta/epoch=<id>`` new-vertex deltas and
+      ``{state_path}/mapping/epoch=<id>`` the lazy component→root
+      relabelling table of each delta epoch. Every write is an
+      epoch-keyed overwrite that commits at its ``_SUCCESS`` marker,
+      so a replayed epoch rewrites the same directories.
+    - ``compact_every``: write a base snapshot (which starts an empty
       mapping) every this many epochs. Bounds both the cold-read
       fan-in (#delta dirs) and the mapping size.
     """
@@ -85,10 +95,9 @@ class StreamingConnectedComponents:
         self.shard_on = shard_on
         self.compact_every = max(1, int(compact_every))
         # in-memory carry between consecutive epochs of one run:
-        # (base rows, delta rows (checkpointed/lazy), mapping,
-        # need_dedup). Purely an optimization — any cache miss
-        # (resume, replay, first batch) reconstructs from committed
-        # parquet.
+        # (base + delta rows (checkpointed/lazy), mapping). Purely an
+        # optimization — any cache miss (resume, replay, first batch)
+        # reconstructs from committed parquet.
         self._cache = None
         self._cache_epoch: int | None = None
         # per-phase wall seconds of the last processed batch
@@ -97,65 +106,29 @@ class StreamingConnectedComponents:
 
     # -- state layout helpers -------------------------------------------------
 
-    def _rows_dir(self, epoch: int) -> str:
-        return f"{self.state_path}/state/epoch={epoch}"
+    def _dir(self, table: str, epoch: int) -> str:
+        return f"{self.state_path}/{table}/epoch={epoch}"
 
-    def _map_dir(self, epoch: int) -> str:
-        return f"{self.state_path}/mapping/epoch={epoch}"
-
-    def _committed(self, spark: SparkSession) -> list[int]:
-        """Epochs whose write fully committed. Spark drops a
-        ``_SUCCESS`` marker at job commit — a crash mid-write leaves
-        the directory without it and that epoch must stay invisible
-        to readers, or resume would read partial state and break
-        exactly-once. The rows ``_SUCCESS`` is the single commit
-        point: the mapping snapshot is written BEFORE the rows, so a
-        committed rows epoch always has its mapping, and an orphaned
-        mapping (rows write crashed) is invisible because discovery
-        keys off the rows dirs. Discovery goes through the Hadoop
-        FileSystem API
+    def _committed(self, spark: SparkSession, table: str) -> list[int]:
+        """Epochs of ``table`` whose write reached ``_SUCCESS``; a
+        crash mid-write leaves none, so that epoch stays invisible and
+        the checkpoint replays it. An orphaned mapping (its delta write
+        crashed) is never read, because reads key off the deltas.
+        Discovery goes through the Hadoop FileSystem API
         (streaming/state.py) so state may live on file:/, hdfs:/,
         s3a:/. state_path and checkpointLocation must be
-        created/destroyed together (a fresh checkpoint restarts
-        epoch ids at 0)."""
-        return committed_epochs(spark, f"{self.state_path}/state")
+        created/destroyed together (a fresh checkpoint restarts epoch
+        ids at 0)."""
+        return committed_epochs(spark, f"{self.state_path}/{table}")
 
-    def _base_for(self, spark: SparkSession, epochs: list[int]) -> int:
-        """Latest full-snapshot epoch at or before the target. Legacy
-        (r2) state dirs carry no ``_BASE`` markers because every
-        epoch was a full snapshot — fall back to the EARLIEST epoch:
-        an over-wide span is always safe (the latest-epoch-wins dedup
-        in ``_read_raw`` collapses it), whereas guessing a later
-        unmarked epoch to be full could silently read a delta alone."""
-        marked = set(
-            committed_epochs(spark, f"{self.state_path}/state", marker="_BASE")
-        )
-        bases = [e for e in epochs if e in marked]
-        return bases[-1] if bases else epochs[0]
-
-    def _read_rows(self, spark: SparkSession, epoch: int) -> DataFrame:
+    def _read_rows(
+        self, spark: SparkSession, table: str, epoch: int
+    ) -> DataFrame:
         """One epoch's (vertex, component) rows, base or delta.
         Explicit schema, so an epoch with no rows needs no data-file
         footer to infer from."""
         return spark.read.schema(self.algo.partial_schema).parquet(
-            self._rows_dir(epoch)
-        )
-
-    def _combine(
-        self, base: DataFrame, deltas: DataFrame | None, dedup: bool = False
-    ) -> DataFrame:
-        """(vertex, component) over base + deltas. ``dedup`` applies
-        latest-epoch-wins (the base ranks below every delta), needed
-        only on cold reads of multi-epoch spans."""
-        if deltas is None:
-            return base
-        if not dedup:
-            return base.unionByName(deltas.select("vertex", "component"))
-        rows = base.withColumn(
-            "epoch", F.lit(-1).cast("bigint")
-        ).unionByName(deltas)
-        return rows.groupBy("vertex").agg(
-            F.max_by("component", "epoch").alias("component")
+            self._dir(table, epoch)
         )
 
     def _apply_mapping(
@@ -174,79 +147,60 @@ class StreamingConnectedComponents:
         )
 
     def _read_raw(
-        self, spark: SparkSession, epochs: list[int]
-    ) -> tuple[DataFrame, DataFrame | None, DataFrame | None, bool]:
-        """(base rows, delta rows with epoch, mapping, need_dedup) as
-        of ``epochs[-1]``. need_dedup marks a multi-epoch span: in
-        normal operation deltas are vertex-disjoint from everything
-        before them (write-time anti-join), but a crash-corner
-        unmarked compaction snapshot among the deltas overlaps older
-        rows and latest-epoch-wins must apply."""
-        e = epochs[-1]
-        base_e = self._base_for(spark, epochs)
-        span = [x for x in epochs if base_e <= x <= e]
-        base = self._read_rows(spark, base_e)
-        deltas = None
-        for x in span[1:]:
-            d = self._read_rows(spark, x).withColumn(
-                "epoch", F.lit(x).cast("bigint")
-            )
-            deltas = d if deltas is None else deltas.unionByName(d)
+        self, spark: SparkSession, before: int | None = None
+    ) -> tuple[DataFrame, DataFrame | None] | None:
+        """(rows, mapping) as of the latest committed epoch below
+        ``before`` (or the latest at all): the latest committed base b,
+        unioned with the committed deltas after it, and the mapping of
+        the last of those deltas. None if no base has committed."""
+        bases = [
+            e for e in self._committed(spark, "base")
+            if before is None or e < before
+        ]
+        if not bases:
+            return None
+        b = bases[-1]
+        deltas = [
+            e for e in self._committed(spark, "delta")
+            if b < e and (before is None or e < before)
+        ]
+        rows = self._read_rows(spark, "base", b)
+        for e in deltas:
+            rows = rows.unionByName(self._read_rows(spark, "delta", e))
         mapping = None
-        if e in set(committed_epochs(spark, f"{self.state_path}/mapping")):
+        if deltas:
             mapping = spark.read.schema(MAPPING_SCHEMA).parquet(
-                self._map_dir(e)
+                self._dir("mapping", deltas[-1])
             )
-        return base, deltas, mapping, len(span) > 1
+        return rows, mapping
 
     # -- read API -------------------------------------------------------------
 
     def current_components(self, spark: SparkSession) -> DataFrame | None:
-        epochs = self._committed(spark)
-        if not epochs:
+        raw = self._read_raw(spark)
+        if raw is None:
             return None
-        base, deltas, mapping, need_dedup = self._read_raw(spark, epochs)
-        return self._apply_mapping(
-            self._combine(base, deltas, dedup=need_dedup), mapping
-        )
-
-    # -- write helpers --------------------------------------------------------
-
-    def _empty_mapping(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame([], schema=MAPPING_SCHEMA)
-
-    def _write_epoch(
-        self,
-        spark: SparkSession,
-        epoch_id: int,
-        rows: DataFrame,
-        mapping: DataFrame | None,
-        base: bool,
-    ) -> None:
-        """Mapping first, rows second: the rows ``_SUCCESS`` is the
-        commit point, so a committed epoch always has its mapping.
-        Epoch-keyed overwrite => replay-idempotent (exactly-once)."""
-        m = mapping if mapping is not None else self._empty_mapping(spark)
-        m.coalesce(1).write.mode("overwrite").parquet(self._map_dir(epoch_id))
-        rows.write.mode("overwrite").parquet(self._rows_dir(epoch_id))
-        if base:
-            write_marker(spark, self._rows_dir(epoch_id), "_BASE")
+        return self._apply_mapping(*raw)
 
     # -- the per-batch merge --------------------------------------------------
 
     def _prev_for(self, spark: SparkSession, epoch_id: int):
-        """(base, deltas, mapping, need_dedup) covering epochs <
-        epoch_id. The in-memory carry answers the sequential case; a
-        replay of an already-processed epoch (at-least-once
-        foreachBatch) or a resume after crash misses and reconstructs
-        from parquet."""
+        """(rows, mapping) covering epochs < epoch_id. The in-memory
+        carry answers the sequential case; a replay of an
+        already-processed epoch (at-least-once foreachBatch) or a
+        resume after crash misses and reconstructs from parquet."""
         if self._cache is not None and self._cache_epoch == epoch_id - 1:
             return self._cache
         self._cache, self._cache_epoch = None, None
-        epochs = [e for e in self._committed(spark) if e < epoch_id]
-        if not epochs:
-            return None
-        return self._read_raw(spark, epochs)
+        return self._read_raw(spark, before=epoch_id)
+
+    def _write_base(
+        self, spark: SparkSession, epoch_id: int, rows: DataFrame
+    ) -> None:
+        """Epoch-keyed overwrite => replay-idempotent (exactly-once).
+        The carry re-reads the written base, cutting the lineage."""
+        rows.write.mode("overwrite").parquet(self._dir("base", epoch_id))
+        self._cache = (self._read_rows(spark, "base", epoch_id), None)
 
     def process_batch(self, edges: DataFrame, epoch_id: int) -> None:
         import time as _time
@@ -273,18 +227,16 @@ class StreamingConnectedComponents:
                 batch, self.quotient_serial_limit
             ).localCheckpoint(eager=True)
             _mark("resolve")
-            self._write_epoch(spark, epoch_id, merged, mapping=None, base=True)
+            self._write_base(spark, epoch_id, merged)
             _mark("write")
-            self._cache = (merged, None, None, False)
             self._cache_epoch = epoch_id
             return
-        base, deltas, mapping, need_dedup = prev
+        state, mapping = prev
         # 1. only vertices the batch touches can link components —
         #    everything else passes through untouched. The semi-join
         #    scans base + deltas whole; its other side is the batch
         #    vertex set (AQE broadcasts it when small), and no O(V)
         #    rows are rewritten
-        state = self._combine(base, deltas, dedup=need_dedup)
         touched = state.join(batch.select("vertex"), "vertex", "leftsemi")
         touched_eff = self._apply_mapping(touched, mapping).localCheckpoint(
             eager=True
@@ -332,32 +284,23 @@ class StreamingConnectedComponents:
             state.select("vertex"), "vertex", "leftanti"
         ).localCheckpoint(eager=True)
         _mark("delta")
-        if epoch_id > 0 and epoch_id % self.compact_every == 0:
-            # compaction: fold mapping into a full snapshot and reset
-            # the mapping (the O(V) pass is amortized over
-            # compact_every batches)
+        if epoch_id % self.compact_every == 0:
+            # compaction: fold the mapping into a full snapshot (the
+            # O(V) pass is amortized over compact_every batches)
             full = (
                 self._apply_mapping(state, m_folded)
                 .unionByName(delta)
                 .distinct()
-                .localCheckpoint(eager=True)
             )
-            self._write_epoch(spark, epoch_id, full, mapping=None, base=True)
-            self._cache = (self._read_rows(spark, epoch_id), None, None, False)
+            self._write_base(spark, epoch_id, full)
         else:
-            self._write_epoch(
-                spark, epoch_id, delta, mapping=m_folded, base=False,
+            # mapping first, delta second: the delta's _SUCCESS is the
+            # epoch's commit point, so a committed delta has its mapping
+            m_folded.coalesce(1).write.mode("overwrite").parquet(
+                self._dir("mapping", epoch_id)
             )
-            new_delta = delta.withColumn(
-                "epoch", F.lit(int(epoch_id)).cast("bigint")
-            )
-            self._cache = (
-                base,
-                new_delta if deltas is None
-                else deltas.unionByName(new_delta),
-                m_folded,
-                need_dedup,
-            )
+            delta.write.mode("overwrite").parquet(self._dir("delta", epoch_id))
+            self._cache = (state.unionByName(delta), m_folded)
         _mark("write")
         self._cache_epoch = epoch_id
 

@@ -1,20 +1,16 @@
 """Epoch-state discovery through the Hadoop FileSystem API.
 
-The streaming pipelines persist their running synopsis as
-``{state_path}/state/epoch=<id>/`` parquet directories and must, on
-every micro-batch and on resume, find the latest COMMITTED epoch
-(one whose ``_SUCCESS`` job-commit marker exists — a crash mid-write
-leaves no marker, and that epoch must stay invisible or resume would
-read partial state and break exactly-once).
+The streaming writers persist each epoch as an ``<table>/epoch=<id>/``
+parquet directory and must, on every micro-batch and on resume, find
+the COMMITTED epochs: those whose ``_SUCCESS`` job-commit marker
+exists. A crash mid-write leaves no marker, and that epoch must stay
+invisible or resume would read partial state and break exactly-once.
 
-r1 walked the directory with ``os.listdir``/``os.path.exists``, which
-only works when state lives on the driver's local POSIX filesystem.
-On a real cluster state is on HDFS/S3/ABFS — so discovery goes
-through ``FileSystem.get(path, hadoopConf)`` here, which resolves the
-right filesystem from the path's scheme (``file:/``, ``hdfs:/``,
-``s3a:/``, …) and uses the same credentials/config as the writes.
-One listStatus + one exists per epoch dir: O(#epochs) RPCs, no data
-reads.
+Discovery goes through ``FileSystem.get(path, hadoopConf)``, which
+resolves the right filesystem from the path's scheme (``file:/``,
+``hdfs:/``, ``s3a:/``, …) and uses the same credentials/config as the
+writes. One listStatus + one exists per epoch dir: O(#epochs) RPCs, no
+data reads.
 """
 
 from __future__ import annotations
@@ -22,36 +18,20 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 
-def _fs_and_path(spark: SparkSession, base: str):
+def committed_epochs(spark: SparkSession, base: str) -> list[int]:
+    """Sorted ids of ``epoch=<id>`` children of ``base`` that carry a
+    ``_SUCCESS`` job-commit marker. ``base`` may be a bare path or any
+    Hadoop-supported URI."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(base)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, fs, hpath
-
-
-def committed_epochs(
-    spark: SparkSession, base: str, marker: str = "_SUCCESS"
-) -> list[int]:
-    """Sorted ids of ``epoch=<id>`` children of ``base`` that carry a
-    ``marker`` file (default ``_SUCCESS``, the job-commit marker).
-    ``base`` may be a bare path or any Hadoop-supported URI."""
-    jvm, fs, hpath = _fs_and_path(spark, base)
     if not fs.exists(hpath):
         return []
     out = []
     for st in fs.listStatus(hpath):
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith("epoch="):
-            mpath = jvm.org.apache.hadoop.fs.Path(st.getPath(), marker)
+            mpath = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
             if fs.exists(mpath):
                 out.append(int(name.split("=", 1)[1]))
     return sorted(out)
-
-
-def write_marker(spark: SparkSession, epoch_dir: str, marker: str) -> None:
-    """Drop an empty marker file (e.g. ``_BASE`` on full-snapshot
-    epochs) into a committed epoch directory, through the same
-    FileSystem API as discovery — works on any Hadoop scheme."""
-    jvm, fs, hpath = _fs_and_path(spark, epoch_dir)
-    mpath = jvm.org.apache.hadoop.fs.Path(hpath, marker)
-    fs.create(mpath, True).close()

@@ -64,9 +64,7 @@ def test_streaming_cc_matches_batch(
     )
     q.processAllAvailable()
     q.stop()
-    bases = committed_epochs(
-        spark, str(tmp_path / "state/state"), marker="_BASE"
-    )
+    bases = committed_epochs(spark, str(tmp_path / "state/base"))
     assert bases == ([0, 2] if compact_every == 2 else [0])
 
     got = {
@@ -161,7 +159,7 @@ def test_cc_state_on_file_uri(spark, transcripts_pdf, tmp_path):
     state = "file://" + str(tmp_path / "uri_state")
     cc = StreamingConnectedComponents(state, num_shards=4)
     cc.process_batch(edges, 0)
-    assert committed_epochs(spark, f"{state}/state") == [0]
+    assert committed_epochs(spark, f"{state}/base") == [0]
     got = {
         (r["vertex"], r["component"])
         for r in cc.current_components(spark).collect()
@@ -176,11 +174,11 @@ def test_cc_state_on_file_uri(spark, transcripts_pdf, tmp_path):
     # a fake partial epoch (no _SUCCESS) must be ignored
     import os
 
-    partial = str(tmp_path / "uri_state" / "state" / "epoch=1")
+    partial = str(tmp_path / "uri_state" / "delta" / "epoch=1")
     os.makedirs(partial)
     with open(os.path.join(partial, "part-0.parquet"), "wb") as f:
         f.write(b"garbage")
-    assert committed_epochs(spark, f"{state}/state") == [0]
+    assert committed_epochs(spark, f"{state}/delta") == []
     assert cc.current_components(spark).count() == len(expect)
 
 
@@ -629,8 +627,8 @@ def test_incremental_cc_lazy_relabel_across_batches(spark, tmp_path):
     # empty delta may hold no data file to infer a schema from, so raw
     # dir reads spell the schema out — same contract the engine uses.
     raw = "vertex string, component string"
-    assert spark.read.schema(raw).parquet(f"{st}/state/epoch=1").count() == 0
-    assert spark.read.schema(raw).parquet(f"{st}/state/epoch=2").count() == 0
+    assert spark.read.schema(raw).parquet(f"{st}/delta/epoch=1").count() == 0
+    assert spark.read.schema(raw).parquet(f"{st}/delta/epoch=2").count() == 0
     # the folded mapping is one hop: every stale label points at the
     # final root directly
     m = {
@@ -649,8 +647,8 @@ def test_incremental_cc_lazy_relabel_across_batches(spark, tmp_path):
 
 def test_incremental_cc_compaction(spark, tmp_path):
     """Every compact_every epochs the mapping folds into a full
-    _BASE snapshot and resets; reads after compaction span only
-    base..latest."""
+    base snapshot, which writes no mapping; reads after compaction
+    span only base..latest."""
     from gelly_streaming_spark.streaming.state import committed_epochs
 
     st = str(tmp_path / "s")
@@ -659,14 +657,15 @@ def test_incremental_cc_compaction(spark, tmp_path):
     cc.process_batch(_edges(spark, [("b", "x")]), 1)  # merge: x-comp -> a
     cc.process_batch(_edges(spark, [("y", "z")]), 2)  # compaction epoch
     cc.process_batch(_edges(spark, [("q", "r")]), 3)
-    assert committed_epochs(spark, f"{st}/state", marker="_BASE") == [0, 2]
+    assert committed_epochs(spark, f"{st}/base") == [0, 2]
+    assert committed_epochs(spark, f"{st}/delta") == [1, 3]
     # bases are plain parquet like deltas: no partition directories
     import glob as _glob
 
-    assert not _glob.glob(f"{st}/state/epoch=*/*=*")
+    assert not _glob.glob(f"{st}/*/epoch=*/*=*")
     # epoch 2 is a full snapshot of all 5 vertices, mapping reset
-    assert spark.read.parquet(f"{st}/state/epoch=2").count() == 5
-    assert spark.read.parquet(f"{st}/mapping/epoch=2").count() == 0
+    assert spark.read.parquet(f"{st}/base/epoch=2").count() == 5
+    assert committed_epochs(spark, f"{st}/mapping") == [1, 3]
     expect = {
         ("a", "a"), ("b", "a"), ("x", "a"), ("y", "a"), ("z", "a"),
         ("q", "q"), ("r", "q"),
@@ -740,12 +739,14 @@ def test_streaming_quotient_limit_crossing(spark, tmp_path):
     assert results["serial"] == results["contract"] == expect
 
 
-def test_compaction_without_base_marker_reads_as_delta(spark, tmp_path):
-    """Crash corner: a compaction whose rows committed but whose
-    ``_BASE`` marker write died. The reader must take that full
-    snapshot as one more delta over the older base and still produce
-    the latest-epoch-wins answer (correctness never depends on the
-    marker)."""
+def test_compaction_base_crash_reads_previous_epoch(spark, tmp_path):
+    """Crash corner: a compaction whose base write died before
+    ``_SUCCESS``. That epoch is uncommitted, so a cold reader answers
+    as of the epoch before it, and re-processing the crashed epoch (as
+    the checkpoint replays it) and the next one gives the same sets as
+    an uninterrupted run."""
+    from gelly_streaming_spark.streaming.state import committed_epochs
+
     st = str(tmp_path / "s")
     cc = StreamingConnectedComponents(st, num_shards=4, compact_every=2)
     b0 = [(f"a{i}", f"b{i}") for i in range(6)]
@@ -753,11 +754,23 @@ def test_compaction_without_base_marker_reads_as_delta(spark, tmp_path):
     cc.process_batch(_edges(spark, b0), 0)
     cc.process_batch(_edges(spark, b1), 1)
     cc.process_batch(_edges(spark, [("a0", "c0")]), 2)  # compaction
-    # simulate the crash: epoch 2's _BASE marker never landed
+    # simulate the crash: epoch 2's base never reached job commit
     import os
 
-    os.remove(f"{st}/state/epoch=2/_BASE")
-    cc2 = StreamingConnectedComponents(st, num_shards=4)
+    os.remove(f"{st}/base/epoch=2/_SUCCESS")
+    assert committed_epochs(spark, f"{st}/base") == [0]
+    cc2 = StreamingConnectedComponents(st, num_shards=4, compact_every=2)
+    got = {
+        (r["vertex"], r["component"])
+        for r in cc2.current_components(spark).collect()
+    }
+    assert got == (
+        {(f"a{i}", f"a{i}") for i in range(6)}
+        | {(f"b{i}", f"a{i}") for i in range(6)}
+        | {(f"c{i}", f"c{i}") for i in range(4)}
+        | {(f"d{i}", f"c{i}") for i in range(4)}
+    )
+    cc2.process_batch(_edges(spark, [("a0", "c0")]), 2)  # replay
     got = {
         (r["vertex"], r["component"])
         for r in cc2.current_components(spark).collect()
@@ -772,7 +785,7 @@ def test_compaction_without_base_marker_reads_as_delta(spark, tmp_path):
         | {(f"d{i}", f"c{i}") for i in range(1, 4)}
     )
     assert got == expect
-    # and the engine can continue from that span
+    # and the engine continues from the replayed base
     cc2.process_batch(_edges(spark, [("d0", "a1")]), 3)
     got2 = {
         (r["vertex"], r["component"])
@@ -781,30 +794,42 @@ def test_compaction_without_base_marker_reads_as_delta(spark, tmp_path):
     assert ("d0", "a0") in got2 and ("a1", "a0") in got2 and ("b1", "a0") in got2
 
 
-def test_legacy_full_epoch_layout_still_reads(spark, tmp_path):
-    """r2 state dirs (every epoch a full snapshot, no _BASE markers,
-    no mapping/) must read latest-epoch-wins, and the incremental
-    engine must be able to CONTINUE from one."""
-    st = str(tmp_path / "legacy")
-    spark.createDataFrame(
-        [("a", "a"), ("b", "b")], "vertex string, component string"
-    ).write.parquet(f"{st}/state/epoch=0")
-    spark.createDataFrame(
-        [("a", "a"), ("b", "a"), ("c", "a")], "vertex string, component string"
-    ).write.parquet(f"{st}/state/epoch=1")
+def test_cc_state_reads_plan_no_aggregate(spark, tmp_path):
+    """The base and delta tables are vertex-disjoint, so neither a
+    cold read nor the state a resumed batch probes aggregates over
+    ``vertex``: after one base and two deltas, a fresh object's
+    ``current_components`` plan and the touched-vertex probe of a
+    resumed ``process_batch`` hold no aggregate."""
+    st = str(tmp_path / "s")
     cc = StreamingConnectedComponents(st, num_shards=4)
+    cc.process_batch(_edges(spark, [("a", "b"), ("x", "y")]), 0)
+    cc.process_batch(_edges(spark, [("b", "x"), ("m", "n")]), 1)
+    cc.process_batch(_edges(spark, [("n", "p")]), 2)
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    cold = StreamingConnectedComponents(st, num_shards=4)
+    p = plan(cold.current_components(spark))
+    assert "max_by" not in p and "Aggregate" not in p, p
+    # the resumed batch's first _apply_mapping call receives the
+    # touched-vertex semi-join over the state it reconstructed
+    resumed = StreamingConnectedComponents(st, num_shards=4)
+    probed = []
+    apply_mapping = resumed._apply_mapping
+
+    def spy(rows, mapping):
+        probed.append(plan(rows))
+        return apply_mapping(rows, mapping)
+
+    resumed._apply_mapping = spy
+    resumed.process_batch(_edges(spark, [("p", "q")]), 3)
+    assert probed and "max_by" not in probed[0] and "Aggregate" not in probed[0], probed[0]
     got = {
         (r["vertex"], r["component"])
-        for r in cc.current_components(spark).collect()
+        for r in resumed.current_components(spark).collect()
     }
-    # epoch 1's labels win over epoch 0's stale (b, b)
-    assert got == {("a", "a"), ("b", "a"), ("c", "a")}
-    cc.process_batch(_edges(spark, [("c", "d")]), 2)
-    got2 = {
-        (r["vertex"], r["component"])
-        for r in cc.current_components(spark).collect()
-    }
-    assert got2 == {("a", "a"), ("b", "a"), ("c", "a"), ("d", "a")}
+    assert got == {(v, "a") for v in "abxy"} | {(v, "m") for v in "mnpq"}
 
 
 def test_streaming_transitions_boundary_exactness(spark, tmp_path):

@@ -777,8 +777,8 @@ def test_contamination_overlap(spark):
     from gelly_streaming_spark.functions import curation as cu
     from gelly_streaming_spark.functions.hashing import hash60_py
 
-    bench_ids = [i for i in range(200) if hash60_py(i) % 20 == 0]
-    corp_ids = [i for i in range(200) if hash60_py(i) % 20 != 0]
+    bench_ids = [i for i in range(200) if hash60_py(f"bench|{i}") % 20 == 0]
+    corp_ids = [i for i in range(200) if hash60_py(f"bench|{i}") % 20 != 0]
     assert len(bench_ids) >= 2
     b0, b1 = bench_ids[0], bench_ids[1]
     c_hit, c_miss = corp_ids[0], corp_ids[1]
@@ -840,6 +840,33 @@ def test_split_assign_leakage_invariant(docs, spark):
     assert sum(r["n_groups"] for r in stats.values()) == len(by_group)
 
 
+def test_curation_hash_selections_independent(spark):
+    """Each curation op hashes its own domain: over singleton docs
+    (every doc is its own near-dup survivor) the benchmark slice must
+    not fall wholly into one split. With one shared hash, h % 20 == 0
+    forces h % 100 into {0, 20, 40, 60, 80}, all in train."""
+    import random
+
+    from gelly_streaming_spark.functions import curation as cu
+
+    rng = random.Random(11)
+    words = [f"w{i}" for i in range(50_000)]
+    rows = [(i, " ".join(rng.sample(words, 8))) for i in range(2_000)]
+    docs = spark.createDataFrame(rows, schema="doc_id long, text string")
+    bench = cu.benchmark_flagged(docs).filter("is_bench").select("doc_id")
+    split = cu.split_assign(docs)
+    got = {
+        r["split"]: r["n"]
+        for r in split.join(bench, "doc_id")
+        .groupBy("split")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert split.filter("keep_id != doc_id").count() == 0
+    assert sum(got.values()) >= 50
+    assert got.get("val", 0) + got.get("test", 0) > 0, got
+
+
 def test_stratified_sample_deterministic(spark):
     """Hash-threshold stratified sampling: strata at/under quota kept
     whole; the kept set is EXACTLY the integer-math predicate (so any
@@ -856,7 +883,7 @@ def test_stratified_sample_deterministic(spark):
     expected = {
         i
         for i, s in rows
-        if (hash60_py(i) % cu.SAMPLE_MOD) * n[s] < 50 * cu.SAMPLE_MOD
+        if (hash60_py(f"sample|{i}") % cu.SAMPLE_MOD) * n[s] < 50 * cu.SAMPLE_MOD
     }
     assert kept == expected
     # small stratum (20 <= quota 50) kept whole
@@ -968,7 +995,7 @@ def test_pack_sequences_concat_and_chunk(spark):
     # python reference fold
     per_bucket = {}
     for i, text in rows:
-        h = hash60_py(i)
+        h = hash60_py(f"pack|{i}")
         per_bucket.setdefault(h % 4, []).append((h, i, len(text.split())))
     expect = {}
     for b, lst in per_bucket.items():
