@@ -3,31 +3,32 @@
 Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``
 (default ``session.DEFAULT_CPUS``, the usable core count) and prints
-ONE JSON line:
+two JSON lines. The last one is the headline (``headline_line``):
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {name: sec, ...}, "queries_spread": {name: sec, ...},
-     "calibration": {...}, "contended": bool, "sf": ..., "cpus": N,
+     "queries": {name: sec, ...}, "contended": bool,
+     "contended_by": [probe, ...], "sf": ..., "cpus": N,
      "streaming": {"turns": n, "wall_sec": s, "turns_per_sec": r}}
+
+The line before it carries the detail: ``queries_spread`` and the
+``calibration`` probes before and after the measured section.
 
 Contention robustness (VERDICT r3 #1): each query runs
 ``SPARK_GRAFT_BENCH_REPS`` (default 3) times with the BEST kept and
 the max-min spread reported, and fixed-work calibration probes (a
 single-thread form for per-core slowdown AND an all-cores form for
 multi-core squeeze) run before and after the measured section — their
-inflation over the quiet-host nominals marks the whole artifact
+inflation over the quiet-host nominals marks the whole run
 ``"contended": true`` so a slow run can be attributed to the
-timeshared host instead of the code. The regression diff compares
-against the newest PARSEABLE prior round artifact.
+timeshared host instead of the code.
 
 Each batch query is forced with a noop-format write (full pipeline
 execution, no driver collect). The streaming leg replays a
 deterministic transcript table (the BASELINE.json canonical input
 shape) through the flagship pipeline — incremental merge-tree CC +
-session-window degree agg, checkpointed foreachBatch — in 8
+session-window degree agg, checkpointed foreachBatch — in 4
 micro-batches and reports sustained turns/sec (the BASELINE.md
-metric; run with SPARK_GRAFT_CPUS=8 then 32 for the N-vs-4N scaling
-evidence).
+metric).
 
 Queries whose exact-oracle formulations are intentionally O(n²)-ish
 (token-join jaccard_pairs, brute-force embedding_neardup, dense-graph
@@ -39,6 +40,9 @@ because Catalyst prunes the whole triangle subtree via left-join
 elimination) are correctness-gate-only; the bench runs their
 scale-path equivalents (minhash_lsh_pairs, ann_lsh, simhash_pairs,
 window-bounded aggregations) instead.
+
+Per-layer numbers (Spark stages, streaming-CC phases, state-store
+commits) are measured by ``perfbench/run.py --trace 1``, not here.
 """
 
 from __future__ import annotations
@@ -87,24 +91,18 @@ CALIB_MEMBW_NOMINAL_SEC = float(
 )
 
 
-def run_calibration(spark, cpus: int | None = None) -> dict:
+def run_calibration(spark) -> dict:
     """Best/worst of 3 warm probes (2 untimed JIT warmups first), in
-    TWO forms. The single-partition probe detects per-core slowdown.
+    three forms. The single-partition probe detects per-core slowdown.
     The parallel probe runs the SAME per-core work on every core at
     once (cpus partitions x CALIB_ROWS rows each): on a quiet host its
     wall time ~= the single probe (each thread does identical work
     concurrently; only memory bandwidth adds), but when another tenant
     holds most cores the parallel probe inflates while the
-    single-thread probe stays clean — exactly the window that made the
-    8-core leg beat the 32-core leg in early r4 runs. ``contended`` is
-    True when either form exceeds its threshold — at that point the
-    query timings in this artifact measure the host, not the code.
-
-    Also imported by tools/scale_job.py so every SCALING artifact is
-    self-diagnosing too (the r4 232M pair was first recorded in a
-    contended window — 562/809 s legs that a clean window re-measured
-    at 309/~ s — with nothing in the JSON to say so)."""
-    cpus = cpus or CPUS
+    single-thread probe stays clean. The memory-bandwidth probe is
+    described below. ``contended`` is True when any form exceeds its
+    threshold — at that point the query timings of this run measure
+    the host, not the code."""
 
     def timed(n_parts: int) -> float:
         reps = []
@@ -122,7 +120,7 @@ def run_calibration(spark, cpus: int | None = None) -> dict:
             "bit_xor(xxhash64(id)) as c"
         ).collect()
     single = timed(1)
-    par = timed(cpus)
+    par = timed(CPUS)
     s_best, p_best = min(single), min(par)
 
     # Third form: driver-side memory-BANDWIDTH probe (single lane).
@@ -150,8 +148,7 @@ def run_calibration(spark, cpus: int | None = None) -> dict:
         tripped.append("single_thread")
     # quiet-host parallel/single floor measured at ~1.7x (SMT + memory
     # bandwidth at 32 threads); 2.5x leaves headroom above it while
-    # still catching the multi-core squeeze that inverted the 8-vs-32
-    # legs
+    # still catching a multi-core squeeze
     if p_best > max(s_best, CALIB_NOMINAL_SEC) * 2.5:
         tripped.append("parallel")
     if m_best > CALIB_MEMBW_NOMINAL_SEC * CALIB_CONTENDED_FACTOR:
@@ -216,7 +213,7 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def run_batch(spark) -> dict[str, float]:
+def run_batch(spark) -> tuple[dict[str, float], dict[str, float]]:
     from gelly_streaming_spark.queries import QUERIES
 
     # warm the JVM (codegen, parquet footer reads) so the first timed
@@ -242,14 +239,12 @@ def run_batch(spark) -> dict[str, float]:
         lambda key, pdf: _noop(key, pdf[["id"]]), schema="id long"
     ).write.format("noop").mode("overwrite").save()
 
-    # best-of-REPS per query, spread kept: the sandbox host is
-    # timeshared and interference only ever SLOWS a run, so the
-    # fastest repetition is the least-contaminated sample (same
-    # rationale as scale_job's internal repetitions; contended windows
-    # measured up to 10x — BENCH_r03 inflated EVERY query ~1.5-2x,
-    # VERDICT r3 #1). The per-query max-min spread makes residual
-    # contamination visible in the artifact instead of silently
-    # shaping the headline number.
+    # best-of-REPS per query, spread kept: the host is timeshared and
+    # interference only ever SLOWS a run, so the fastest repetition is
+    # the least-contaminated sample (contended windows measured up to
+    # 10x — BENCH_r03 inflated EVERY query ~1.5-2x, VERDICT r3 #1).
+    # The per-query max-min spread makes residual contamination
+    # visible instead of silently shaping the headline number.
     times: dict[str, float] = {}
     spread: dict[str, float] = {}
     for name in HEADLINE:
@@ -335,115 +330,37 @@ def run_streaming(spark) -> dict:
     }
 
 
-def _second_leg(cpus: int) -> dict | None:
-    """Re-run this script in a subprocess at a different core count
-    (fresh JVM → a real local[N] master) and return its JSON. The
-    N-vs-4N pair in ONE bench artifact is the sandbox evidence for
-    the north_rule's two-cluster-size scaling criterion."""
-    import subprocess
-
-    env = dict(os.environ)
-    env["SPARK_GRAFT_CPUS"] = str(cpus)
-    env["SPARK_GRAFT_SINGLE"] = "1"
-    try:
-        res = subprocess.run(
-            [sys.executable, os.path.abspath(__file__)],
-            env=env,
-            capture_output=True,
-            text=True,
-            timeout=1800,
-        )
-        for line in reversed(res.stdout.strip().splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                return json.loads(line)
-    except Exception:
-        pass
-    return None
-
-
-def _prev_round_bench() -> tuple[str, dict] | None:
-    """Latest PARSEABLE committed BENCH_r{N}.json, for automatic
-    regression diffing round over round (VERDICT r1 #9). Falls back
-    through older rounds when the newest artifact's capture is
-    unrecoverable (BENCH_r03's tail is front-truncated past its
-    top-level queries), so a bad capture costs one round of diff
-    granularity instead of the whole diff."""
-    import glob
-    import re
-
-    rounds = []
-    for p in glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            rounds.append((int(m.group(1)), p))
-    for n, p in sorted(rounds, reverse=True):
-        got = _parse_bench_artifact(n, p)
-        if got is not None:
-            return got
-    return None
-
-
-def _parse_bench_artifact(n: int, path: str) -> tuple[str, dict] | None:
-    best = (n, path)
-    try:
-        with open(best[1]) as f:
-            data = json.load(f)
-        # the driver wraps bench stdout under "parsed"; when parsed is
-        # null (e.g. truncated capture) the bench JSON is still the
-        # last '{'-prefixed line of the raw "tail" string (ADVICE r2)
-        if isinstance(data.get("parsed"), dict):
-            data = data["parsed"]
-        elif isinstance(data.get("tail"), str):
-            tail = data["tail"].strip()
-            recovered = None
-            for line in reversed(tail.splitlines()):
-                line = line.strip()
-                if line.startswith("{"):
-                    try:
-                        recovered = json.loads(line)
-                    except json.JSONDecodeError:
-                        pass
-                    break
-            if recovered is None:
-                # front-truncated capture (BENCH_r02 shape): the line
-                # lost its '{' prefix — regex out the headline total
-                # and the first "queries" object instead. Guard: if
-                # the truncation ate past the TOP-LEVEL queries (i.e.
-                # "leg_8cpu" appears before the first match), the only
-                # recoverable numbers belong to the 8-CPU leg — skip
-                # rather than diff against the wrong parallelism.
-                import re as _re
-
-                mv = _re.search(r'"value": ([0-9.]+)', tail)
-                mq = _re.search(r'"queries": (\{[^{}]*\})', tail)
-                leg = tail.find('"leg_8cpu"')
-                if (
-                    mv
-                    and mq
-                    and (leg == -1 or (mv.start() < leg and mq.start() < leg))
-                ):
-                    recovered = {
-                        "value": float(mv.group(1)),
-                        "queries": json.loads(mq.group(1)),
-                    }
-            if recovered is not None:
-                data = recovered
-        if "queries" not in data:
-            print(
-                f"# regression diff: {best[1]} has no parseable bench "
-                "JSON (no 'queries' key) — skipping",
-                file=sys.stderr,
-            )
-            return None
-        return f"r{best[0]:02d}", data
-    except Exception:
-        return None
+def headline_line(
+    times: dict[str, float],
+    calib_pre: dict,
+    calib_post: dict,
+    sf,
+    cpus: int,
+    streaming: dict | None,
+) -> str:
+    """The final stdout line: the headline total, the best time per
+    query, the contention verdict, and streaming turns/s. Spreads and
+    the calibration probes go on the detail line before it, which
+    keeps this one short enough to survive a 2,000-character tail
+    capture of stdout."""
+    out = {
+        "metric": "headline_queries_total_wall",
+        "value": round(sum(times.values()), 3),
+        "unit": "sec",
+        "queries": times,
+        "contended": calib_pre["contended"] or calib_post["contended"],
+        "contended_by": sorted(
+            set(calib_pre["contended_by"]) | set(calib_post["contended_by"])
+        ),
+        "sf": sf,
+        "cpus": cpus,
+    }
+    if streaming is not None:
+        out["streaming"] = streaming
+    return json.dumps(out)
 
 
 def main() -> None:
-    os.environ["SPARK_GRAFT_CPUS"] = str(CPUS)
-    single = os.environ.get("SPARK_GRAFT_SINGLE", "") == "1"
     from gelly_streaming_spark.session import get_spark
 
     # State store is volume-dependent (measured A/B, best-of-2 at 32
@@ -460,65 +377,12 @@ def main() -> None:
     streaming = None if SKIP_STREAMING else run_streaming(spark)
     calib_post = run_calibration(spark)
     sf = SF_DIR.rstrip("/").split("sf")[-1]
-    out = {
-        "metric": "headline_queries_total_wall",
-        "value": round(sum(times.values()), 3),
-        "unit": "sec",
-        "queries": times,
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
+    print(json.dumps({
         "queries_spread": spread,
         "calibration": {"pre": calib_pre, "post": calib_post},
-        "contended": calib_pre["contended"] or calib_post["contended"],
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "cpus": CPUS,
-    }
-    if streaming is not None:
-        out["streaming"] = streaming
-    if not single:
-        # N-vs-4N leg (local[8] vs local[CPUS]) in the same artifact
-        if CPUS != 8 and os.environ.get("SPARK_GRAFT_TWO_LEGS", "1") == "1":
-            leg = _second_leg(8)
-            if leg is not None:
-                out["leg_8cpu"] = {
-                    "value": leg.get("value"),
-                    "queries": leg.get("queries"),
-                    "streaming": leg.get("streaming"),
-                    "contended": leg.get("contended"),
-                }
-                scaling = {
-                    "cores_ratio": round(CPUS / 8, 2),
-                    "note": (
-                        "sf0.1 headline queries are sub-second and "
-                        "latency/overhead-bound, so this small-query leg is "
-                        "NOT the north-rule efficiency gate; the gate is the "
-                        "work-bound corpus/streaming scaling runs "
-                        "(tools/scaling_bench.py) recorded in BASELINE.md"
-                    ),
-                }
-                if leg.get("value"):
-                    su = leg["value"] / out["value"]
-                    scaling["headline_batch_speedup"] = round(su, 3)
-                if streaming and leg.get("streaming"):
-                    scaling["streaming_tps"] = {
-                        f"cpus{CPUS}": streaming["turns_per_sec"],
-                        "cpus8": leg["streaming"]["turns_per_sec"],
-                    }
-                out["scaling"] = scaling
-        prev = _prev_round_bench()
-        if prev is not None:
-            tag, pdata = prev
-            pq = pdata.get("queries", {})
-            shared = [name for name in times if name in pq]
-            delta = {name: round(times[name] - pq[name], 3) for name in shared}
-            out["regression"] = {
-                "vs": tag,
-                # compare over SHARED queries only, so adding headline
-                # queries in a round doesn't read as a regression
-                "shared_total_delta_sec": round(
-                    sum(times[n] for n in shared) - sum(pq[n] for n in shared), 3
-                ),
-                "per_query_delta_sec": delta,
-            }
-    print(json.dumps(out))
+    }))
+    print(headline_line(times, calib_pre, calib_post, sf, CPUS, streaming))
 
 
 if __name__ == "__main__":

@@ -22,7 +22,6 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool = False,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
@@ -31,12 +30,6 @@ def get_spark(
     - AQE + skew-join handling on (north_rule: skew handled explicitly).
     - shuffle.partitions ~ cores for local mode; a real cluster would
       set this to ~2-3x total cores.
-    - ``rocksdb_state``: switch Structured Streaming state to the
-      RocksDB provider — at 10^12-turn state volumes the default
-      HDFS-backed in-memory store OOMs executors (all state heap-
-      resident); RocksDB spills to local disk with incremental
-      checkpointing. Off by default locally (tiny state, and the
-      per-batch RocksDB open/commit adds latency at sandbox sizes).
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle = shuffle_partitions or cpus
@@ -54,9 +47,8 @@ def get_spark(
         # BEFORE the shuffle into the state store (semantics-preserving;
         # the final merge still happens in the store). Measured on the
         # 58M-turn session-degree leg at 32 cores / RocksDB: 114.9 s ->
-        # 80.4 s alone, -> 69.6 s combined with trackTotalNumberOfRows
-        # off (BASELINE.md round 4) — transcript turns arrive many-per-
-        # session-per-file, exactly the shape this pre-merge collapses.
+        # 80.4 s (BASELINE.md round 4) — transcript turns arrive many-
+        # per-session-per-file, exactly the shape this pre-merge collapses.
         .config(
             "spark.sql.streaming.sessionWindow.merge.sessions.in.local.partition",
             "true",
@@ -64,32 +56,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if rocksdb_state:
-        builder = (
-            builder.config(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            # Changelog checkpointing (vs full-snapshot upload per
-            # commit): turning it off measured no win (BASELINE.md
-            # round 5), and changelog replay keeps recovery cheap.
-            .config(
-                "spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled",
-                "true",
-            )
-            # Metrics-only knob: keeping the exact numRowsTotal count
-            # costs a full-store scan bracket per commit. Measured on
-            # the same 58M sd leg: 114.9 s -> 87.2 s alone. State
-            # totals then report 0 in query progress — numRowsUpdated
-            # (which all our observability uses) is unaffected.
-            .config(
-                "spark.sql.streaming.stateStore.rocksdb."
-                "trackTotalNumberOfRows",
-                "false",
-            )
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -39,6 +39,12 @@ replays it. The touched-vertex probe and the new-vertex anti-join
 scan that union whole; their other side is the batch's vertex set,
 which AQE broadcasts when small, and outside a compaction no epoch
 rewrites O(V) rows.
+
+At the end of epoch e, every epoch below the latest committed base
+b < e is deleted from all three tables. The bound is strict: epoch e
+may still replay, and its replay reads from b; no epoch before e can
+replay, because foreachBatch starts e only after the checkpoint has
+committed e - 1.
 """
 
 from __future__ import annotations
@@ -47,7 +53,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gelly_streaming_spark.operators.aggregation import sharded_fold
-from gelly_streaming_spark.streaming.state import committed_epochs
+from gelly_streaming_spark.streaming.state import (
+    committed_epochs,
+    delete_epochs_below,
+)
 from gelly_streaming_spark.plans.connected_components import (
     ConnectedComponents,
     resolve_partials,
@@ -68,7 +77,12 @@ class StreamingConnectedComponents:
       so a replayed epoch rewrites the same directories.
     - ``compact_every``: write a base snapshot (which starts an empty
       mapping) every this many epochs. Bounds both the cold-read
-      fan-in (#delta dirs) and the mapping size.
+      fan-in (#delta dirs) and the mapping size; the epochs before a
+      base are deleted once the epoch after that base has run.
+
+    ``current_components`` returns a lazy frame over the committed
+    files, so it stays readable until the epoch after the next
+    compaction deletes them.
     """
 
     def __init__(
@@ -301,6 +315,12 @@ class StreamingConnectedComponents:
             )
             delta.write.mode("overwrite").parquet(self._dir("delta", epoch_id))
             self._cache = (state.unionByName(delta), m_folded)
+        # superseded state: the first-batch path above has no committed
+        # base below it, so it has nothing to delete
+        bases = [b for b in self._committed(spark, "base") if b < epoch_id]
+        if bases:
+            for table in ("base", "delta", "mapping"):
+                delete_epochs_below(spark, f"{self.state_path}/{table}", bases[-1])
         _mark("write")
         self._cache_epoch = epoch_id
 

@@ -648,7 +648,8 @@ def test_incremental_cc_lazy_relabel_across_batches(spark, tmp_path):
 def test_incremental_cc_compaction(spark, tmp_path):
     """Every compact_every epochs the mapping folds into a full
     base snapshot, which writes no mapping; reads after compaction
-    span only base..latest."""
+    span only base..latest, and the epoch after the compaction deletes
+    the epochs before its base."""
     from gelly_streaming_spark.streaming.state import committed_epochs
 
     st = str(tmp_path / "s")
@@ -657,15 +658,19 @@ def test_incremental_cc_compaction(spark, tmp_path):
     cc.process_batch(_edges(spark, [("b", "x")]), 1)  # merge: x-comp -> a
     cc.process_batch(_edges(spark, [("y", "z")]), 2)  # compaction epoch
     cc.process_batch(_edges(spark, [("q", "r")]), 3)
-    assert committed_epochs(spark, f"{st}/base") == [0, 2]
-    assert committed_epochs(spark, f"{st}/delta") == [1, 3]
+    assert committed_epochs(spark, f"{st}/base") == [2]
+    assert committed_epochs(spark, f"{st}/delta") == [3]
     # bases are plain parquet like deltas: no partition directories
     import glob as _glob
+    import os
 
     assert not _glob.glob(f"{st}/*/epoch=*/*=*")
     # epoch 2 is a full snapshot of all 5 vertices, mapping reset
     assert spark.read.parquet(f"{st}/base/epoch=2").count() == 5
-    assert committed_epochs(spark, f"{st}/mapping") == [1, 3]
+    assert committed_epochs(spark, f"{st}/mapping") == [3]
+    assert [sorted(os.listdir(f"{st}/{t}")) for t in ("base", "delta", "mapping")] == [
+        ["epoch=2"], ["epoch=3"], ["epoch=3"],
+    ]
     expect = {
         ("a", "a"), ("b", "a"), ("x", "a"), ("y", "a"), ("z", "a"),
         ("q", "q"), ("r", "q"),
@@ -681,6 +686,16 @@ def test_incremental_cc_compaction(spark, tmp_path):
         for r in cc2.current_components(spark).collect()
     }
     assert got2 == expect
+    # epoch 3 may replay; its replay reads base 2, which it kept
+    cc2.process_batch(_edges(spark, [("q", "r")]), 3)
+    got3 = {
+        (r["vertex"], r["component"])
+        for r in cc2.current_components(spark).collect()
+    }
+    assert got3 == expect
+    assert committed_epochs(spark, f"{st}/base") == [2]
+    assert committed_epochs(spark, f"{st}/delta") == [3]
+    assert committed_epochs(spark, f"{st}/mapping") == [3]
 
 
 def test_incremental_cc_replay_midstream(spark, tmp_path):
