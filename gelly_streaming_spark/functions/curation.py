@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from gelly_streaming_spark.functions.dedup import dedup_groups, word_shingles
+from gelly_streaming_spark.functions.dedup import word_shingles
 from gelly_streaming_spark.functions.hashing import HASH60
 from gelly_streaming_spark.functions.text import TOKENS_EXPR
 
@@ -132,26 +132,26 @@ def contamination_overlap(
 
 
 def split_assign(
-    docs: DataFrame,
+    groups: DataFrame,
     mod: int = 100,
     train_lt: int = 90,
     val_lt: int = 95,
-    **dedup_kwargs,
 ) -> DataFrame:
     """Dedup-aware train/val/test assignment: (doc_id, keep_id,
-    split) for EVERY document, where ``split`` is decided by hashing
-    the document's near-duplicate-cluster survivor (``keep_id`` from
-    ``dedup.dedup_groups``), NOT the document itself — so a cluster of
-    near-identical docs can never straddle the split boundary (the
-    leakage failure mode of naive per-doc hashing). Default 90/5/5.
+    split) for EVERY document of the survivor map ``groups`` (the
+    (doc_id, keep_id) output of ``dedup.dedup_groups``), where
+    ``split`` is decided by hashing the document's near-duplicate
+    cluster survivor ``keep_id``, NOT the document itself — so a
+    cluster of near-identical docs can never straddle the split
+    boundary (the leakage failure mode of naive per-doc hashing).
+    Default 90/5/5.
 
     Composition of the already-hash-checked survivor map with one
     projection; the leakage invariant (one split per keep_id group)
     holds by construction and is pinned in pytest.
     """
-    g = dedup_groups(docs, **dedup_kwargs)
     b = _op_hash("split", "keep_id") % mod
-    return g.select(
+    return groups.select(
         "doc_id",
         "keep_id",
         F.when(b < train_lt, F.lit("train"))
@@ -161,20 +161,13 @@ def split_assign(
     )
 
 
-def split_stats(
-    docs: DataFrame,
-    mod: int = 100,
-    train_lt: int = 90,
-    val_lt: int = 95,
-    **dedup_kwargs,
-) -> DataFrame:
-    """Per-split rollup of ``split_assign``: (split, n_docs,
+def split_stats(assigned: DataFrame) -> DataFrame:
+    """Per-split rollup of ``split_assign``'s output: (split, n_docs,
     n_groups). ``n_groups`` counts distinct survivor ids — because
     assignment hashes the group, sum(n_groups) over splits equals the
     total number of near-dup clusters (no group is double-counted
     across splits; the oracle hash proves it cross-engine)."""
-    s = split_assign(docs, mod, train_lt, val_lt, **dedup_kwargs)
-    return s.groupBy("split").agg(
+    return assigned.groupBy("split").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("keep_id").alias("n_groups"),
     )

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gelly_streaming_spark.functions.hashing import HASH60  # noqa: F401 (canonical)
+from gelly_streaming_spark.functions.similarity import COSINE
 from gelly_streaming_spark.functions.text import with_tokens
 
 
@@ -426,11 +427,8 @@ def embedding_neardup_pairs(
     a = e.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
     b = e.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    dot = "aggregate(zip_with(va, vb, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    na = "sqrt(aggregate(transform(va, x -> x * x), cast(0.0 as double), (acc, x) -> acc + x))"
-    nb = "sqrt(aggregate(transform(vb, x -> x * x), cast(0.0 as double), (acc, x) -> acc + x))"
     return (
-        pairs.withColumn("cosine", F.expr(f"({dot}) / (({na}) * ({nb}))"))
+        pairs.withColumn("cosine", F.expr(COSINE))
         .filter(F.col("cosine") >= F.lit(threshold))
         .select("id_a", "id_b")
     )

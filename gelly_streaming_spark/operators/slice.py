@@ -80,8 +80,3 @@ class GraphWindowStream:
         emit 0..n rows (exact EdgesApply semantics). Arrow-vectorized.
         """
         return self._grouped().applyInPandas(fn, schema=output_schema)
-
-    def grouped_by_window(self):
-        """groupBy(window) only — for pane-global aggregations
-        (timeWindowAll analog)."""
-        return self.df.groupBy(self._win().alias("win"))

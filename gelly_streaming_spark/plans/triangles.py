@@ -119,14 +119,11 @@ def _canonical_distinct(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_list(edges: DataFrame) -> DataFrame:
-    """All triangles (a < b < c) via the classic 3-way self-join on
-    canonical edges. Catalyst orders/broadcasts the joins; each
-    triangle appears exactly once."""
-    e = _canonical_distinct(edges)
-    e1 = e.alias("e1")
-    e2 = e.alias("e2")
-    e3 = e.alias("e3")
+def _triangles(e: DataFrame) -> DataFrame:
+    """(a, b, c) with a < b < c: the classic 3-way self-join over the
+    canonical edge frame ``e``. Catalyst orders/broadcasts the joins;
+    each triangle appears exactly once."""
+    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     return (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))
         .join(
@@ -139,6 +136,12 @@ def triangle_list(edges: DataFrame) -> DataFrame:
             F.col("e2.v").alias("c"),
         )
     )
+
+
+def triangle_list(edges: DataFrame) -> DataFrame:
+    """All triangles (a < b < c) over the canonical undirected
+    distinct edge set."""
+    return _triangles(_canonical_distinct(edges))
 
 
 def clustering_coefficient(edges: DataFrame) -> DataFrame:
@@ -169,21 +172,8 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
         .groupBy("vertex")
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tris = (
-        e1.join(e2, F.col("e1.v") == F.col("e2.u"))
-        .join(
-            e3,
-            (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .select(
-            F.col("e1.u").alias("a"),
-            F.col("e1.v").alias("b"),
-            F.col("e2.v").alias("c"),
-        )
-    )
     local = (
-        tris.select(F.explode(F.array("a", "b", "c")).alias("vertex"))
+        _triangles(e).select(F.explode(F.array("a", "b", "c")).alias("vertex"))
         .groupBy("vertex")
         .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     )

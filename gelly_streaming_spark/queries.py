@@ -156,12 +156,13 @@ def cooccurrence_edges(
     ue = ev.select(
         "user_id", "event_type", F.window("ts", "1 hour")["start"].alias("wb")
     ).distinct()
-    bucket_w = Window.partitionBy("event_type", "wb")
-    ue = (
-        ue.withColumn("bucket_n", F.count(F.lit(1)).over(bucket_w))
-        .filter(F.col("bucket_n") <= max_bucket)
-        .drop("bucket_n")
-    )
+    # bucket size as an aggregate joined back, not a window on the
+    # bucket key: the window puts every row of the hottest bucket into
+    # one straggler task, where the aggregate combines map-side
+    n = ue.groupBy("event_type", "wb").agg(F.count(F.lit(1)).alias("bucket_n"))
+    ue = ue.join(
+        n.filter(F.col("bucket_n") <= max_bucket), ["event_type", "wb"]
+    ).select("user_id", "event_type", "wb")
     a, b = ue.alias("a"), ue.alias("b")
     return (
         a.join(
@@ -1378,7 +1379,7 @@ FROM hit h JOIN n ON n.doc_id = h.doc_id"""
 
 
 def q_split_assign(spark, sf_dir):
-    return cu.split_assign(_tp(spark, sf_dir, "documents"))
+    return cu.split_assign(q_dedup_groups(spark, sf_dir))
 
 
 _SPLIT_H = _duck_op_hash("split", "keep_id")
@@ -1391,7 +1392,7 @@ SELECT doc_id, keep_id, {_SPLIT_CASE} AS split FROM grp"""
 
 
 def q_split_stats(spark, sf_dir):
-    return cu.split_stats(_tp(spark, sf_dir, "documents"))
+    return cu.split_stats(q_split_assign(spark, sf_dir))
 
 
 SQL_SPLIT_STATS = f"""WITH RECURSIVE {SQL_DEDUP_GROUPS_CTES},

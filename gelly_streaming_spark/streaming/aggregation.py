@@ -8,6 +8,12 @@ running global state epoch-partitioned — the reference's incremental
 non-blocking Merger (GraphAggregation.java:80-117) with Structured
 Streaming checkpoints + idempotent epoch writes on top.
 
+The state is one epoch table, ``{state_path}/state/epoch=<id>``, under
+the epoch-state contract of streaming/state.py. It is its own cleanup
+anchor: at the end of epoch e, the epochs below the latest committed
+state b < e are deleted, so only b and e remain, and a replay of e
+still reads b.
+
 Unlike CC (which has the distributed quotient resolution,
 plans/connected_components.resolve_partials), the general combine
 funnels partial rows into algo.combine — safe because synopsis
@@ -27,7 +33,12 @@ from gelly_streaming_spark.operators.aggregation import (
     GraphAggregation,
     sharded_fold,
 )
-from gelly_streaming_spark.streaming.state import committed_epochs
+from gelly_streaming_spark.streaming.state import (
+    committed_epochs,
+    delete_superseded,
+    read_epoch,
+    write_epoch,
+)
 
 
 class StreamingGraphAggregation:
@@ -44,27 +55,22 @@ class StreamingGraphAggregation:
     ):
         self.algo = algo
         self.state_path = state_path
+        self._table = f"{state_path}/state"
         self.num_shards = num_shards
         self.salt = salt
         self.shard_on = shard_on
 
-    # -- epoch-partitioned state (same layout as streaming CC) -------------
-
-    def _committed_epochs(self, spark: SparkSession) -> list[int]:
-        # only _SUCCESS-marked epochs are committed (crash mid-write
-        # leaves no marker); discovery via the Hadoop FileSystem API
-        # (streaming/state.py) so state may live on any cluster FS
-        return committed_epochs(spark, f"{self.state_path}/state")
-
-    def read_state(
-        self, spark: SparkSession, upto_epoch: int | None = None
+    def _state_below(
+        self, spark: SparkSession, epoch: int | None
     ) -> DataFrame | None:
-        epochs = self._committed_epochs(spark)
-        if upto_epoch is not None:
-            epochs = [e for e in epochs if e < upto_epoch]
+        epochs = committed_epochs(spark, self._table, below=epoch)
         if not epochs:
             return None
-        return spark.read.parquet(f"{self.state_path}/state/epoch={epochs[-1]}")
+        return read_epoch(spark, self._table, epochs[-1], self.algo.partial_schema)
+
+    def read_state(self, spark: SparkSession) -> DataFrame | None:
+        """The latest committed running state, as partials."""
+        return self._state_below(spark, None)
 
     def current(self, spark: SparkSession) -> DataFrame | None:
         """The latest running global state, finalized."""
@@ -90,7 +96,7 @@ class StreamingGraphAggregation:
             salt=self.salt,
             shard_on=self.shard_on,
         )
-        prev = self.read_state(spark, upto_epoch=epoch_id)
+        prev = self._state_below(spark, epoch_id)
         if prev is not None:
             partials = partials.unionByName(prev)
 
@@ -100,9 +106,8 @@ class StreamingGraphAggregation:
         merged = partials.groupBy(F.lit(0).alias("g")).applyInPandas(
             combine, schema=self.algo.partial_schema
         )
-        merged.write.mode("overwrite").parquet(
-            f"{self.state_path}/state/epoch={epoch_id}"
-        )
+        write_epoch(merged, self._table, epoch_id)
+        delete_superseded(spark, self._table, epoch_id, [self._table])
 
     def __call__(self, edges: DataFrame, epoch_id: int) -> None:
         self.process_batch(edges, epoch_id)

@@ -29,22 +29,20 @@ The state is three epoch-keyed parquet tables under ``state_path``:
   delta (size = #components merged since the last base, not O(V)),
   written before the delta.
 
-Each table's only commit point is Spark's ``_SUCCESS`` job-commit
-marker, and an epoch is committed when its base or delta is. A read
-as of epoch e takes the latest committed base b <= e, the plain union
-of the committed deltas in (b, e] and the mapping of the last of
-those deltas — no dedup, since the rows are disjoint. An epoch whose
-write died before ``_SUCCESS`` is invisible, and the checkpoint
-replays it. The touched-vertex probe and the new-vertex anti-join
-scan that union whole; their other side is the batch's vertex set,
-which AQE broadcasts when small, and outside a compaction no epoch
-rewrites O(V) rows.
+Each table follows the epoch-state contract of streaming/state.py,
+and an epoch is committed when its base or delta is; an orphaned
+mapping (its delta write crashed) is never read, because reads key
+off the deltas. A read as of epoch e takes the latest committed base
+b <= e, the plain union of the committed deltas in (b, e] and the
+mapping of the last of those deltas — no dedup, since the rows are
+disjoint. The touched-vertex probe and the new-vertex anti-join scan
+that union whole; their other side is the batch's vertex set, which
+AQE broadcasts when small, and outside a compaction no epoch rewrites
+O(V) rows.
 
 At the end of epoch e, every epoch below the latest committed base
-b < e is deleted from all three tables. The bound is strict: epoch e
-may still replay, and its replay reads from b; no epoch before e can
-replay, because foreachBatch starts e only after the checkpoint has
-committed e - 1.
+b < e is deleted from all three tables (``state.delete_superseded``
+with the base table as its anchor).
 """
 
 from __future__ import annotations
@@ -55,7 +53,9 @@ from pyspark.sql import functions as F
 from gelly_streaming_spark.operators.aggregation import sharded_fold
 from gelly_streaming_spark.streaming.state import (
     committed_epochs,
-    delete_epochs_below,
+    delete_superseded,
+    read_epoch,
+    write_epoch,
 )
 from gelly_streaming_spark.plans.connected_components import (
     ConnectedComponents,
@@ -72,9 +72,8 @@ class StreamingConnectedComponents:
       ``{state_path}/base/epoch=<id>`` full vertex snapshots,
       ``{state_path}/delta/epoch=<id>`` new-vertex deltas and
       ``{state_path}/mapping/epoch=<id>`` the lazy component→root
-      relabelling table of each delta epoch. Every write is an
-      epoch-keyed overwrite that commits at its ``_SUCCESS`` marker,
-      so a replayed epoch rewrites the same directories.
+      relabelling table of each delta epoch, each written through
+      ``state.write_epoch``.
     - ``compact_every``: write a base snapshot (which starts an empty
       mapping) every this many epochs. Bounds both the cold-read
       fan-in (#delta dirs) and the mapping size; the epochs before a
@@ -120,30 +119,8 @@ class StreamingConnectedComponents:
 
     # -- state layout helpers -------------------------------------------------
 
-    def _dir(self, table: str, epoch: int) -> str:
-        return f"{self.state_path}/{table}/epoch={epoch}"
-
-    def _committed(self, spark: SparkSession, table: str) -> list[int]:
-        """Epochs of ``table`` whose write reached ``_SUCCESS``; a
-        crash mid-write leaves none, so that epoch stays invisible and
-        the checkpoint replays it. An orphaned mapping (its delta write
-        crashed) is never read, because reads key off the deltas.
-        Discovery goes through the Hadoop FileSystem API
-        (streaming/state.py) so state may live on file:/, hdfs:/,
-        s3a:/. state_path and checkpointLocation must be
-        created/destroyed together (a fresh checkpoint restarts epoch
-        ids at 0)."""
-        return committed_epochs(spark, f"{self.state_path}/{table}")
-
-    def _read_rows(
-        self, spark: SparkSession, table: str, epoch: int
-    ) -> DataFrame:
-        """One epoch's (vertex, component) rows, base or delta.
-        Explicit schema, so an epoch with no rows needs no data-file
-        footer to infer from."""
-        return spark.read.schema(self.algo.partial_schema).parquet(
-            self._dir(table, epoch)
-        )
+    def _table(self, name: str) -> str:
+        return f"{self.state_path}/{name}"
 
     def _apply_mapping(
         self, rows: DataFrame, mapping: DataFrame | None
@@ -167,24 +144,22 @@ class StreamingConnectedComponents:
         ``before`` (or the latest at all): the latest committed base b,
         unioned with the committed deltas after it, and the mapping of
         the last of those deltas. None if no base has committed."""
-        bases = [
-            e for e in self._committed(spark, "base")
-            if before is None or e < before
-        ]
+        bases = committed_epochs(spark, self._table("base"), below=before)
         if not bases:
             return None
         b = bases[-1]
         deltas = [
-            e for e in self._committed(spark, "delta")
-            if b < e and (before is None or e < before)
+            e for e in committed_epochs(spark, self._table("delta"), below=before)
+            if b < e
         ]
-        rows = self._read_rows(spark, "base", b)
+        schema = self.algo.partial_schema
+        rows = read_epoch(spark, self._table("base"), b, schema)
         for e in deltas:
-            rows = rows.unionByName(self._read_rows(spark, "delta", e))
+            rows = rows.unionByName(read_epoch(spark, self._table("delta"), e, schema))
         mapping = None
         if deltas:
-            mapping = spark.read.schema(MAPPING_SCHEMA).parquet(
-                self._dir("mapping", deltas[-1])
+            mapping = read_epoch(
+                spark, self._table("mapping"), deltas[-1], MAPPING_SCHEMA
             )
         return rows, mapping
 
@@ -213,8 +188,12 @@ class StreamingConnectedComponents:
     ) -> None:
         """Epoch-keyed overwrite => replay-idempotent (exactly-once).
         The carry re-reads the written base, cutting the lineage."""
-        rows.write.mode("overwrite").parquet(self._dir("base", epoch_id))
-        self._cache = (self._read_rows(spark, "base", epoch_id), None)
+        base = self._table("base")
+        write_epoch(rows, base, epoch_id)
+        self._cache = (
+            read_epoch(spark, base, epoch_id, self.algo.partial_schema),
+            None,
+        )
 
     def process_batch(self, edges: DataFrame, epoch_id: int) -> None:
         import time as _time
@@ -310,17 +289,13 @@ class StreamingConnectedComponents:
         else:
             # mapping first, delta second: the delta's _SUCCESS is the
             # epoch's commit point, so a committed delta has its mapping
-            m_folded.coalesce(1).write.mode("overwrite").parquet(
-                self._dir("mapping", epoch_id)
-            )
-            delta.write.mode("overwrite").parquet(self._dir("delta", epoch_id))
+            write_epoch(m_folded.coalesce(1), self._table("mapping"), epoch_id)
+            write_epoch(delta, self._table("delta"), epoch_id)
             self._cache = (state.unionByName(delta), m_folded)
         # superseded state: the first-batch path above has no committed
         # base below it, so it has nothing to delete
-        bases = [b for b in self._committed(spark, "base") if b < epoch_id]
-        if bases:
-            for table in ("base", "delta", "mapping"):
-                delete_epochs_below(spark, f"{self.state_path}/{table}", bases[-1])
+        tables = [self._table(t) for t in ("base", "delta", "mapping")]
+        delete_superseded(spark, tables[0], epoch_id, tables)
         _mark("write")
         self._cache_epoch = epoch_id
 

@@ -28,7 +28,7 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from gelly_streaming_spark.streaming.state import committed_epochs
+from gelly_streaming_spark.streaming.state import read_committed, write_epoch
 
 
 class IdempotentUpsertSink:
@@ -55,25 +55,21 @@ class IdempotentUpsertSink:
         out = df.withColumn("_epoch", F.lit(int(epoch_id))).observe(
             obs, F.count(F.lit(1)).alias("rows_in")
         )
-        out.write.mode("overwrite").parquet(f"{self.path}/data/epoch={epoch_id}")
+        write_epoch(out, f"{self.path}/data", epoch_id)
         # a JVM-side one-row frame: createDataFrame from a Python list
         # would start Python workers just to write this row
-        df.sparkSession.range(1, numPartitions=1).select(
+        metrics = df.sparkSession.range(1, numPartitions=1).select(
             F.lit(int(epoch_id)).alias("epoch"),
             F.lit(int(obs.get["rows_in"])).cast("long").alias("rows_in"),
             F.lit(time.time() - t0).alias("wall_s"),
-        ).write.mode("overwrite").parquet(f"{self.path}/metrics/epoch={epoch_id}")
+        )
+        write_epoch(metrics, f"{self.path}/metrics", epoch_id)
 
     def __call__(self, df: DataFrame, epoch_id: int) -> None:
         self.write_batch(df, epoch_id)
 
-    def _read_committed(self, spark: SparkSession, table: str) -> DataFrame:
-        base = f"{self.path}/{table}"
-        dirs = [f"{base}/epoch={e}" for e in committed_epochs(spark, base)]
-        return spark.read.option("basePath", base).parquet(*dirs)
-
     def read_all(self, spark: SparkSession) -> DataFrame:
-        return self._read_committed(spark, "data")
+        return read_committed(spark, f"{self.path}/data")
 
     def read_upserted(self, spark: SparkSession) -> DataFrame:
         """Latest row per key across epochs (the upsert view)."""
@@ -88,4 +84,4 @@ class IdempotentUpsertSink:
         )
 
     def read_metrics(self, spark: SparkSession) -> DataFrame:
-        return self._read_committed(spark, "metrics")
+        return read_committed(spark, f"{self.path}/metrics")

@@ -1,21 +1,61 @@
-"""Epoch-state discovery through the Hadoop FileSystem API.
+"""The epoch-state contract shared by every exactly-once writer.
 
-The streaming writers persist each epoch as an ``<table>/epoch=<id>/``
-parquet directory and must, on every micro-batch and on resume, find
-the COMMITTED epochs: those whose ``_SUCCESS`` job-commit marker
-exists. A crash mid-write leaves no marker, and that epoch must stay
-invisible or resume would read partial state and break exactly-once.
+The streaming writers (the upsert sink, the streaming CC, the generic
+streaming aggregation) persist each epoch of a table as an
+``<table>/epoch=<id>/`` parquet directory, and this module is the only
+code that knows that layout:
 
-Discovery goes through ``FileSystem.get(path, hadoopConf)``, which
-resolves the right filesystem from the path's scheme (``file:/``,
-``hdfs:/``, ``s3a:/``, …) and uses the same credentials/config as the
-writes. One listStatus + one exists per epoch dir: O(#epochs) RPCs, no
-data reads. Superseded epochs are deleted the same way.
+- ``write_epoch`` is the one write boundary: an overwrite of the
+  epoch's directory, so a replayed epoch (at-least-once foreachBatch)
+  rewrites the same directory and the write stays idempotent.
+- An epoch is committed only when its ``_SUCCESS`` job-commit marker
+  exists. A crash mid-write leaves no marker, so that epoch stays
+  invisible to every reader and the checkpoint replays it; resume
+  never reads partial state.
+- Readers take either one committed epoch with an explicit schema
+  (``read_epoch``: an epoch with no rows has no data-file footer to
+  infer one from) or the union of all committed epochs with their
+  ``epoch`` partition column (``read_committed``).
+- ``delete_superseded`` is the one cleanup rule: at the end of epoch
+  e, with b the latest committed epoch below e in an anchor table,
+  every epoch below b is deleted. The bound is strict: e itself may
+  still replay, and its replay reads from b; no epoch before e can
+  replay, because foreachBatch starts e only after the checkpoint has
+  committed e - 1.
+
+Discovery and deletion go through ``FileSystem.get(path,
+hadoopConf)``, which resolves the filesystem from the path's scheme
+(``file:/``, ``hdfs:/``, ``s3a:/``, ...) and uses the same credentials
+and config as the writes: one listStatus plus one exists per epoch
+directory, no data reads. A table's directory and the query's
+checkpointLocation must be created and destroyed together, because a
+fresh checkpoint restarts epoch ids at 0.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def _epoch_dir(base: str, epoch: int) -> str:
+    return f"{base}/epoch={epoch}"
+
+
+def write_epoch(df: DataFrame, base: str, epoch: int) -> None:
+    """Overwrite epoch ``epoch`` of table ``base``; it commits at the
+    write's ``_SUCCESS``."""
+    df.write.mode("overwrite").parquet(_epoch_dir(base, epoch))
+
+
+def read_epoch(spark: SparkSession, base: str, epoch: int, schema) -> DataFrame:
+    return spark.read.schema(schema).parquet(_epoch_dir(base, epoch))
+
+
+def read_committed(spark: SparkSession, base: str) -> DataFrame:
+    """The union of every committed epoch of ``base``, with the
+    ``epoch`` partition column."""
+    dirs = [_epoch_dir(base, e) for e in committed_epochs(spark, base)]
+    return spark.read.option("basePath", base).parquet(*dirs)
 
 
 def _epoch_dirs(spark: SparkSession, base: str):
@@ -32,20 +72,29 @@ def _epoch_dirs(spark: SparkSession, base: str):
     ]
 
 
-def committed_epochs(spark: SparkSession, base: str) -> list[int]:
-    """Sorted ids of ``epoch=<id>`` children of ``base`` that carry a
-    ``_SUCCESS`` job-commit marker. ``base`` may be a bare path or any
+def committed_epochs(
+    spark: SparkSession, base: str, below: int | None = None
+) -> list[int]:
+    """Sorted ids of the committed epochs of ``base`` (those below
+    ``below`` when given). ``base`` may be a bare path or any
     Hadoop-supported URI."""
     Path = spark._jvm.org.apache.hadoop.fs.Path
     return sorted(
         e for fs, path, e in _epoch_dirs(spark, base)
-        if fs.exists(Path(path, "_SUCCESS"))
+        if (below is None or e < below) and fs.exists(Path(path, "_SUCCESS"))
     )
 
 
-def delete_epochs_below(spark: SparkSession, base: str, bound: int) -> None:
-    """Recursively delete every ``epoch=<id>`` child of ``base`` with
-    id < ``bound``, committed or not."""
-    for fs, path, e in _epoch_dirs(spark, base):
-        if e < bound:
-            fs.delete(path, True)
+def delete_superseded(
+    spark: SparkSession, anchor: str, epoch: int, tables: list[str]
+) -> None:
+    """End of epoch ``epoch``: with b the latest committed epoch of
+    ``anchor`` below ``epoch``, recursively delete every epoch of each
+    of ``tables`` below b, committed or not."""
+    kept = committed_epochs(spark, anchor, below=epoch)
+    if not kept:
+        return
+    for base in tables:
+        for fs, path, e in _epoch_dirs(spark, base):
+            if e < kept[-1]:
+                fs.delete(path, True)

@@ -8,7 +8,8 @@ state is ``applyInPandasWithState`` — Arrow-batched per-key state, no
 per-row Python, exactly the "flatMapGroupsWithState-style stateful
 aggregation" the north_star names. Most aggregations in this repo
 deliberately use plain ``groupBy().agg`` in update mode instead
-(Catalyst-native state is faster and AQE-planned); this module is for
+(Catalyst-native state is faster and AQE-planned; the running degree
+is ``EdgeStream.get_degrees()`` on a streaming frame); this module is for
 semantics the built-ins cannot express — state transitions that need
 custom code per key, like the signed degree floor below.
 """
@@ -48,38 +49,6 @@ def signed_deltas(edges_with_op: DataFrame) -> DataFrame:
     return edges_with_op.select(
         F.explode(F.array("src", "dst")).alias("vertex"),
         F.when(F.col("op") == "-", F.lit(-1)).otherwise(F.lit(1)).alias("delta"),
-    )
-
-
-def streaming_running_degrees(edges: DataFrame, vertex_type: str = "string") -> DataFrame:
-    """Per-vertex RUNNING degree over a streaming edge frame, emitted
-    once per (vertex, micro-batch) — the managed-state port of the
-    reference's per-update DegreeMapFunction (SimpleEdgeStream.java:
-    445-462; per-record emission becomes per-batch emission under
-    micro-batching, converging to the same final counts).
-
-    State per key: a single int64 counter — O(V) total state, the
-    synopsis property that makes 10^12-turn streams feasible."""
-    vertices = edges.select(
-        F.explode(F.array("src", "dst")).alias("vertex")
-    )
-
-    def update(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        count = state.get[0] if state.exists else 0
-        count += sum(len(p) for p in pdfs)
-        state.update((count,))
-        yield pd.DataFrame({"vertex": [key[0]], "degree": [count]})
-
-    return vertices.groupBy("vertex").applyInPandasWithState(
-        update,
-        outputStructType=f"vertex {vertex_type}, degree long",
-        stateStructType="degree long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -194,19 +194,26 @@ def test_repetition_and_pii_zero_shuffle(spark):
 
 
 def test_document_frequency_caps_have_no_key_window(spark):
-    """The hot-token and hot-shingle caps count document frequency
+    """The hot-token, hot-shingle and hot-bucket caps count frequency
     with an aggregate joined back, never a window partitioned on the
-    token: such a window puts every row of the hottest token into one
-    straggler task, where the aggregate combines map-side."""
+    capped key: such a window puts every row of the hottest key into
+    one straggler task, where the aggregate combines map-side. The
+    co-occurrence bucket cap is reached through ``triangle_count``."""
     import re
 
     from gelly_streaming_spark.queries import QUERIES
 
+    cases = (
+        ("jaccard_pairs", "tok"),
+        ("contamination", "shingle"),
+        ("triangle_count", "event_type"),
+    )
     keyed = {}
-    for name, key in (("jaccard_pairs", "tok"), ("contamination", "shingle")):
+    for name, key in cases:
         plan = plan_of(QUERIES[name][0](spark, SF))
         keyed[name] = [
             l for l in plan.splitlines()
-            if re.search(r"\bWindow\b", l) and re.search(rf"\[{key}#\d+\]\s*$", l)
+            if re.search(r"\bWindow\b", l)
+            and re.search(rf"\[[^\[\]]*\b{key}#\d+[^\[\]]*\]\s*$", l)
         ]
-    assert keyed == {"jaccard_pairs": [], "contamination": []}, keyed
+    assert keyed == {name: [] for name, _ in cases}, keyed

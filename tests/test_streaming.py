@@ -429,45 +429,28 @@ def test_generic_streaming_aggregation_degree(spark, tmp_path):
     assert got == {1: 3, 2: 2, 3: 4, 4: 2, 5: 3}
 
 
-def test_apply_in_pandas_with_state_running_degrees(spark, transcripts_pdf, tmp_path):
-    """Custom stateful operator on MANAGED state
-    (applyInPandasWithState — the flatMapGroupsWithState-style API the
-    north_star names): running per-vertex degrees across micro-batches
-    converge to the batch degrees, with per-batch improving emissions."""
-    from gelly_streaming_spark.edges import EdgeStream
-    from gelly_streaming_spark.streaming.stateful import (
-        streaming_running_degrees,
+def test_streaming_aggregation_deletes_superseded_state(spark, tmp_path):
+    """The generic streaming aggregation keeps one state epoch per
+    replayable read: after epoch e only the latest committed state
+    below e and e itself remain, and a replay of e still reads the
+    kept epoch, so the running degrees stay the batch degrees."""
+    from gelly_streaming_spark.plans.degree_check import DegreeCheck
+    from gelly_streaming_spark.streaming.aggregation import (
+        StreamingGraphAggregation,
     )
+    from gelly_streaming_spark.streaming.state import committed_epochs
 
-    src = str(tmp_path / "st_in")
-    write_chunks(spark, transcripts_pdf, src, 3)
-    stream = (
-        spark.readStream.schema(TSCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/f*")
-    )
-    out = streaming_running_degrees(edges_from_transcripts(stream).df)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("st_deg")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "st_ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    updates = spark.sql("select * from st_deg")
-    assert updates.count() > updates.select("vertex").distinct().count()
-    got = {
-        r["vertex"]: r["degree"]
-        for r in updates.groupBy("vertex").agg(F.max("degree").alias("degree")).collect()
-    }
-    batch = spark.createDataFrame(transcripts_pdf, schema=TSCHEMA)
-    expect = {
-        r["vertex"]: r["degree"]
-        for r in EdgeStream(edges_from_transcripts(batch).df).get_degrees().collect()
-    }
-    assert got == expect
+    st = str(tmp_path / "agg")
+    batches = [[(1, 2)], [(2, 3)], [(3, 1)], [(1, 4)]]
+    agg = StreamingGraphAggregation(DegreeCheck(), st, num_shards=4)
+    for e, pairs in enumerate(batches):
+        agg.process_batch(spark.createDataFrame(pairs, "src long, dst long"), e)
+    expect = {1: 3, 2: 2, 3: 2, 4: 1}
+    assert committed_epochs(spark, f"{st}/state") == [2, 3]
+    assert {r["vertex"]: r["degree"] for r in agg.current(spark).collect()} == expect
+    agg.process_batch(spark.createDataFrame(batches[3], "src long, dst long"), 3)
+    assert committed_epochs(spark, f"{st}/state") == [2, 3]
+    assert {r["vertex"]: r["degree"] for r in agg.current(spark).collect()} == expect
 
 
 def test_apply_in_pandas_with_state_signed_floor(spark, tmp_path):
@@ -564,40 +547,6 @@ def test_streaming_agg_under_rocksdb_state_store(spark, transcripts_pdf, tmp_pat
     state_files = glob.glob(str(tmp_path / "rk_ckpt" / "state" / "**"), recursive=True)
     exts = {os.path.splitext(f)[1] for f in state_files if os.path.isfile(f)}
     assert ".delta" not in exts and ({".zip", ".changelog"} & exts), exts
-
-
-def test_throughput_listener(spark, transcripts_pdf, tmp_path):
-    from gelly_streaming_spark.streaming.metrics import ThroughputListener
-    from gelly_streaming_spark.streaming.pipeline import run_streaming_cc
-
-    listener = ThroughputListener()
-    spark.streams.addListener(listener)
-    try:
-        path = str(tmp_path / "tl_src")
-        write_chunks(spark, transcripts_pdf, path, 2)
-        stream = (
-            spark.readStream.schema(TSCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{path}/f*")
-        )
-        q, cc = run_streaming_cc(
-            stream, str(tmp_path / "tl_state"), str(tmp_path / "tl_ckpt"),
-            num_shards=4,
-        )
-        q.processAllAvailable()
-        q.stop()
-        # listener callbacks are delivered asynchronously — drain
-        import time as _time
-
-        for _ in range(40):
-            if listener.totals()["batches"] >= 2:
-                break
-            _time.sleep(0.25)
-    finally:
-        spark.streams.removeListener(listener)
-    t = listener.totals()
-    assert t["batches"] >= 2 and t["rows"] > 0 and t["rows_per_sec"] > 0
-    assert listener.as_dataframe(spark).count() == t["batches"]
 
 
 # -- incremental state engine (delta epochs + lazy relabel) -------------------

@@ -822,7 +822,8 @@ def test_split_assign_leakage_invariant(docs, spark):
     split (hash-of-keep_id, not hash-of-doc), all docs are assigned."""
     from gelly_streaming_spark.functions import curation as cu
 
-    out = cu.split_assign(docs).collect()
+    assigned = cu.split_assign(dd.dedup_groups(docs))
+    out = assigned.collect()
     assert len(out) == docs.count()
     assert {r["split"] for r in out} <= {"train", "val", "test"}
     by_group = {}
@@ -835,7 +836,7 @@ def test_split_assign_leakage_invariant(docs, spark):
     assert ids[0]["keep_id"] == ids[1]["keep_id"] == ids[2]["keep_id"] == 0
     assert ids[0]["split"] == ids[1]["split"] == ids[2]["split"]
 
-    stats = {r["split"]: r for r in cu.split_stats(docs).collect()}
+    stats = {r["split"]: r for r in cu.split_stats(assigned).collect()}
     assert sum(r["n_docs"] for r in stats.values()) == len(out)
     assert sum(r["n_groups"] for r in stats.values()) == len(by_group)
 
@@ -854,7 +855,7 @@ def test_curation_hash_selections_independent(spark):
     rows = [(i, " ".join(rng.sample(words, 8))) for i in range(2_000)]
     docs = spark.createDataFrame(rows, schema="doc_id long, text string")
     bench = cu.benchmark_flagged(docs).filter("is_bench").select("doc_id")
-    split = cu.split_assign(docs)
+    split = cu.split_assign(dd.dedup_groups(docs))
     got = {
         r["split"]: r["n"]
         for r in split.join(bench, "doc_id")
