@@ -16,9 +16,8 @@ Scale notes (designed for 100 TB, tested at sf0.1):
   ONE equi-join on the shingle; the benchmark side is tiny by
   construction (an eval set), and its hot shingles (boilerplate
   n-grams shared by > ``max_bench_df`` benchmark docs) are dropped
-  before the join — the same observable-cap discipline as
-  ``jaccard_pairs``/``minhash_lsh_pairs``, so the join can never
-  degenerate quadratically. This is the standard n-gram
+  before the join by the bucket cap of ``buckets.py``, so the join
+  can never degenerate quadratically. This is the standard n-gram
   decontamination shape (GPT-3 appendix C / PaLM-style 13-gram
   overlap; the fixture corpus uses word-3-grams so tiny docs still
   shingle).
@@ -42,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.functions.buckets import cap_buckets
 from gelly_streaming_spark.functions.dedup import word_shingles
 from gelly_streaming_spark.functions.hashing import HASH60
 from gelly_streaming_spark.functions.text import TOKENS_EXPR
@@ -107,11 +107,7 @@ def contamination_overlap(
     bs = word_shingles(bench, shingle_n).select(
         F.col("doc_id").alias("bench_id"), "shingle"
     )
-    # same aggregate-joined-back shape as jaccard_pairs' df cap
-    bdf = bs.groupBy("shingle").agg(F.count(F.lit(1)).alias("bdf"))
-    bs = bs.join(bdf.filter(F.col("bdf") <= max_bench_df), "shingle").select(
-        "bench_id", "shingle"
-    )
+    bs = cap_buckets(bs, ["shingle"], max_bench_df)
     cs = word_shingles(corpus, shingle_n)  # (doc_id, shingle), distinct
 
     n = cs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))

@@ -13,10 +13,9 @@ Scale notes (the designs are chosen for 100 TB, tested at sf0.1):
   signature aggregate, then pair generation happens ONLY inside an
   LSH band bucket (equi-join on (band, band_hash) — a shuffle-hash
   join on a high-cardinality key, never a cross join). Hot buckets
-  (boilerplate docs) are the skew risk — AQE skew-join handles the
-  join, and the per-bucket pair blow-up is bounded upstream by
-  dropping buckets larger than ``max_bucket`` (standard practice,
-  logged, documented).
+  (boilerplate docs) are the skew risk: AQE skew-join handles the
+  join, and the bucket cap of ``buckets.py`` bounds the per-bucket
+  pair blow-up, as it does for every pair generator here.
 - SimHash: one aggregate with 2×bits column expressions (JVM-side,
   single shuffle); near-dup candidates via a (max_hamming+1)-band
   equi-join (exact pigeonhole coverage), same no-cross-join property.
@@ -35,17 +34,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gelly_streaming_spark.functions.hashing import HASH60  # noqa: F401 (canonical)
-from gelly_streaming_spark.functions.similarity import COSINE
+from gelly_streaming_spark.functions.buckets import (
+    bucket_pairs,
+    cap_buckets,
+    cap_report,
+)
+from gelly_streaming_spark.functions.hashing import HASH60
+from gelly_streaming_spark.functions.similarity import COSINE, rhp_neardup_pairs
 from gelly_streaming_spark.functions.text import with_tokens
-
-
-def pair_volume(n: str):
-    """``n·(n−1)/2``, the pairs a join bucket of ``n`` rows emits, as
-    a double. The multiply runs in double: as BIGINT it overflows
-    above n ≈ 3.04e9, where Spark wraps silently and DuckDB raises.
-    ``queries.SQL_PAIR_VOLUME`` is the DuckDB twin."""
-    return F.col(n).cast("double") * (F.col(n) - 1) / 2
 
 
 def token_df_stats(docs: DataFrame, max_df: int = 1000) -> DataFrame:
@@ -53,18 +49,13 @@ def token_df_stats(docs: DataFrame, max_df: int = 1000) -> DataFrame:
     (the ``band_occupancy`` pattern: no silent caps). One row per
     distinct token: document frequency, the df² pair volume its join
     bucket would emit, and whether the cap drops it."""
-    toks = with_tokens(docs).select(
+    return cap_report(_doc_tokens(docs), ["tok"], "df", max_df)
+
+
+def _doc_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, tok): each doc's distinct tokens."""
+    return with_tokens(docs).select(
         "doc_id", F.explode(F.array_distinct("tokens")).alias("tok")
-    )
-    return (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        .select(
-            "tok",
-            "df",
-            pair_volume("df").alias("pairs"),
-            (F.col("df") > max_df).alias("dropped"),
-        )
     )
 
 
@@ -112,21 +103,12 @@ def jaccard_pairs(
     ``token_df_stats`` reports per-token df + dropped flags. The
     production path for web-scale near-dup remains MinHash LSH below;
     this stays the exact-Jaccard oracle with a bounded worst case."""
-    toks = with_tokens(docs).select(
-        "doc_id", F.explode(F.array_distinct("tokens")).alias("tok")
-    )
-    # df as an aggregate joined back, not a window on tok: the window
-    # would put the hottest token's rows in one straggler task
-    df = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    toks = toks.join(df.filter(F.col("df") <= max_df), "tok").select(
-        "doc_id", "tok"
-    )
+    toks = cap_buckets(_doc_tokens(docs), ["tok"], max_df)
     # sizes AFTER the prune: jaccard is exact over the surviving
     # vocabulary (both engines, identically)
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_toks"))
-    a, b = toks.alias("a"), toks.alias("b")
     inter = (
-        a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        bucket_pairs(toks, "doc_id", ["tok"])
         .groupBy(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
@@ -211,18 +193,8 @@ def minhash_lsh_pairs(
     per-bucket O(k²) pair blow-up; at 100 TB this is the difference
     between a skewed-but-finite join and an accidental cross join)."""
     bb = minhash_band_buckets(docs, num_hashes, bands, shingle_n)
-    sizes = bb.groupBy("band", "band_hash").agg(F.count(F.lit(1)).alias("bn"))
-    bb = bb.join(
-        sizes.filter(F.col("bn") <= max_bucket), ["band", "band_hash"]
-    ).select("doc_id", "band", "band_hash")
-    a, b = bb.alias("a"), bb.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        bucket_pairs(bb, "doc_id", ["band", "band_hash"], max_bucket)
         .select(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
@@ -286,10 +258,6 @@ def embedding_dedup_groups(
     the dominant cost and embarrassingly parallel, the pair graph is
     sparse relative to the corpus, and the CC stage is the
     distributed pointer-doubling resolver (no O(V) funnel)."""
-    from gelly_streaming_spark.functions.similarity import (
-        rhp_neardup_pairs,
-    )
-
     pairs = rhp_neardup_pairs(
         embeddings, threshold, planes, bands, max_bucket
     )
@@ -389,14 +357,8 @@ def simhash_neardup_pairs(
         "simhash",
         F.posexplode(F.array(*band_cols)).alias("band_idx", "band_val"),
     )
-    a, b = bands_df.alias("a"), bands_df.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        bucket_pairs(bands_df, "doc_id", ["band_idx", "band_val"])
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),

@@ -21,9 +21,12 @@ EXPECTED bucket occupancy n / 2^bits stays near a target — at 10⁹
 vectors that is 2 bands × 22 bits (the 60-plane signature budget
 trades band count, never band width). ``band_occupancy`` materializes
 the realized histogram so skew (not just the expectation) is
-observable; the ``max_bucket`` guard in ``rhp_neardup_pairs`` then
-only trims true outlier buckets instead of silently collapsing
+observable; the bucket cap of ``buckets.py`` in ``rhp_neardup_pairs``
+then only trims true outlier buckets instead of silently collapsing
 recall.
+
+Every top-k here (exact cosine, ties to the lowest id) is ``_top_k``;
+both ANN tiers re-rank their candidates with ``_rerank``.
 
 Doubles are used only inside ranking; outputs expose ids + integer
 ranks so cross-engine float noise cannot break value hashes.
@@ -35,6 +38,8 @@ import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from gelly_streaming_spark.functions.buckets import bucket_pairs
 
 
 def rhp_params_for(
@@ -75,9 +80,36 @@ NORM_B = "sqrt(aggregate(transform(vb, x -> x * x), cast(0.0 as double), (acc, x
 COSINE = f"({DOT}) / (({NORM_A}) * ({NORM_B}))"
 
 
-def _as_double(embeddings: DataFrame) -> DataFrame:
+def _as_double(
+    embeddings: DataFrame, id_as: str = "vec_id", v_as: str = "v"
+) -> DataFrame:
     return embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        F.col("vec_id").alias(id_as),
+        F.col("embedding").cast("array<double>").alias(v_as),
+    )
+
+
+def _top_k(scored: DataFrame, part: str, tie: str, k: int) -> DataFrame:
+    """The rows of ``scored`` ranked 1..k by ``cosine`` (descending)
+    within each ``part``, ties to the lowest ``tie``; adds ``rank``."""
+    w = Window.partitionBy(part).orderBy(F.col("cosine").desc(), F.col(tie).asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _rerank(
+    cand: DataFrame, embeddings: DataFrame, queries: DataFrame, k: int
+) -> DataFrame:
+    """(query_id, neighbor_id, rank): the candidate pairs ``cand``
+    ranked by exact cosine, top ``k`` per query."""
+    scored = (
+        cand.join(_as_double(embeddings, "neighbor_id", "vb"), "neighbor_id")
+        .join(F.broadcast(_as_double(queries, "query_id", "va")), "query_id")
+        .withColumn("cosine", F.expr(COSINE))
+    )
+    return _top_k(scored, "query_id", "neighbor_id", k).select(
+        "query_id", "neighbor_id", "rank"
     )
 
 
@@ -92,23 +124,14 @@ def cosine_topk(
     scored rows; at scale, pre-aggregate per partition via the same
     window trick AQE already handles). Self-matches are excluded;
     ties broken by neighbor_id ascending (deterministic)."""
-    corpus = _as_double(embeddings).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("vb")
-    )
-    q = _as_double(queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("va")
-    )
+    corpus = _as_double(embeddings, "neighbor_id", "vb")
+    q = _as_double(queries, "query_id", "va")
     scored = F.broadcast(q).crossJoin(corpus).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
     scored = scored.withColumn("cosine", F.expr(COSINE))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
+    return _top_k(scored, "query_id", "neighbor_id", k).select(
+        "query_id", "neighbor_id", "rank"
     )
 
 
@@ -185,25 +208,7 @@ def ann_topk_lsh(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    corpus_v = _as_double(embeddings).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("vb")
-    )
-    query_v = _as_double(queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("va")
-    )
-    scored = (
-        cand.join(corpus_v, "neighbor_id")
-        .join(F.broadcast(query_v), "query_id")
-        .withColumn("cosine", F.expr(COSINE))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
+    return _rerank(cand, embeddings, queries, k)
 
 
 def ivf_centroids(embeddings: DataFrame, n_centroids: int = 16) -> DataFrame:
@@ -236,17 +241,10 @@ def ivf_assign(
     standard IVF build cost; with C ≈ √n the whole index build is
     O(n^1.5) embarrassingly-parallel rows, and the centroid side is
     tiny (broadcast)."""
-    e = _as_double(embeddings).select("vec_id", F.col("v").alias("va"))
+    e = _as_double(embeddings, v_as="va")
     c = centroids.select("list_id", F.col("centroid").alias("vb"))
     scored = e.join(F.broadcast(c)).withColumn("cosine", F.expr(COSINE))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cosine").desc(), F.col("list_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "list_id")
-    )
+    return _top_k(scored, "vec_id", "list_id", 1).select("vec_id", "list_id")
 
 
 def ann_topk_ivf(
@@ -268,48 +266,21 @@ def ann_topk_ivf(
     broadcast centroid scoring; recall is governed by nprobe."""
     cents = ivf_centroids(embeddings, n_centroids)
     assign = ivf_assign(embeddings, cents)
-    q = _as_double(queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("va")
-    )
+    q = _as_double(queries, "query_id", "va")
     c = cents.select("list_id", F.col("centroid").alias("vb"))
     qprobe = (
         F.broadcast(q)
         .join(F.broadcast(c))
         .withColumn("cosine", F.expr(COSINE))
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("list_id").asc()
-    )
-    probes = (
-        qprobe.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "list_id")
-    )
+    probes = _top_k(qprobe, "query_id", "list_id", nprobe)
     cand = (
         probes.join(assign, "list_id")
         .filter(F.col("query_id") != F.col("vec_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()
     )
-    corpus_v = _as_double(embeddings).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("vb")
-    )
-    query_v = _as_double(queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("va")
-    )
-    scored = (
-        cand.join(corpus_v, "neighbor_id")
-        .join(F.broadcast(query_v), "query_id")
-        .withColumn("cosine", F.expr(COSINE))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
+    return _rerank(cand, embeddings, queries, k)
 
 
 def rhp_neardup_pairs(
@@ -324,27 +295,14 @@ def rhp_neardup_pairs(
     ``dedup.embedding_neardup_pairs`` but never materializes O(n²)
     pairs; recall is governed by (planes, bands)."""
     bb = rhp_bands(embeddings, planes, bands)
-    sizes = bb.groupBy("band", "band_sig").agg(F.count(F.lit(1)).alias("bn"))
-    bb = bb.join(sizes.filter(F.col("bn") <= max_bucket), ["band", "band_sig"]).select(
-        "vec_id", "band", "band_sig"
-    )
-    a, b = bb.alias("a"), bb.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
+        bucket_pairs(bb, "vec_id", ["band", "band_sig"], max_bucket)
         .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
         .distinct()
     )
-    e = _as_double(embeddings)
-    va = e.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
-    vb = e.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
     return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
+        cand.join(_as_double(embeddings, "id_a", "va"), "id_a")
+        .join(_as_double(embeddings, "id_b", "vb"), "id_b")
         .withColumn("cosine", F.expr(COSINE))
         .filter(F.col("cosine") >= F.lit(threshold))
         .select("id_a", "id_b")

@@ -29,6 +29,7 @@ from gelly_streaming_spark.functions import dedup as dd
 from gelly_streaming_spark.functions import multimodal as mm
 from gelly_streaming_spark.functions import similarity as sim
 from gelly_streaming_spark.functions import text as tx
+from gelly_streaming_spark.functions.buckets import bucket_pairs, cap_report
 from gelly_streaming_spark.plans import triangles as tri
 from gelly_streaming_spark.plans.bipartiteness import BipartitenessCheck
 from gelly_streaming_spark.plans.connected_components import ConnectedComponents
@@ -113,9 +114,20 @@ SQL_TOKS = (
     " '\\s+', ' ', 'g'), ' ') AS tokens FROM documents)"
 )
 
-# twin of dedup.pair_volume: n*(n-1)/2 multiplied in DOUBLE, since the
+# twin of buckets.pair_volume: n*(n-1)/2 multiplied in DOUBLE, since the
 # BIGINT multiply raises above n ~ 3.04e9
 SQL_PAIR_VOLUME = "{n}::DOUBLE * ({n} - 1) / 2"
+
+
+def _user_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, event_type, wb): the distinct users of each
+    (event_type, 1-hour bucket), the co-occurrence join's buckets."""
+    _utc(spark)
+    return (
+        _t(spark, sf_dir, "events")
+        .select("user_id", "event_type", F.window("ts", "1 hour")["start"].alias("wb"))
+        .distinct()
+    )
 
 
 COOC_MAX_BUCKET = 1000
@@ -138,8 +150,6 @@ def cooccurrence_edges(
     bucket = 10 users, sf0.1 max = 51). Dropped buckets are
     observable, not silent: ``cooccurrence_bucket_stats`` reports
     per-bucket sizes and the dropped set."""
-    _utc(spark)
-    ev = _t(spark, sf_dir, "events")
     # Plan-shape note (r4, measured): a join-free formulation — one
     # groupBy(collect_set) + JVM-side pair explosion, 2 exchanges vs
     # this self-join's 4 — is ~1.5 s faster STANDALONE at sf0.1, but
@@ -153,24 +163,9 @@ def cooccurrence_edges(
     # (verified via explain: SortMergeJoin under this formulation,
     # BroadcastExchange under the explode one). The self-join's
     # honest stats are worth more than the two saved exchanges.
-    ue = ev.select(
-        "user_id", "event_type", F.window("ts", "1 hour")["start"].alias("wb")
-    ).distinct()
-    # bucket size as an aggregate joined back, not a window on the
-    # bucket key: the window puts every row of the hottest bucket into
-    # one straggler task, where the aggregate combines map-side
-    n = ue.groupBy("event_type", "wb").agg(F.count(F.lit(1)).alias("bucket_n"))
-    ue = ue.join(
-        n.filter(F.col("bucket_n") <= max_bucket), ["event_type", "wb"]
-    ).select("user_id", "event_type", "wb")
-    a, b = ue.alias("a"), ue.alias("b")
+    ue = _user_buckets(spark, sf_dir)
     return (
-        a.join(
-            b,
-            (F.col("a.event_type") == F.col("b.event_type"))
-            & (F.col("a.wb") == F.col("b.wb"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
+        bucket_pairs(ue, "user_id", ["event_type", "wb"], max_bucket)
         .select(
             F.col("a.user_id").alias("src"),
             F.col("b.user_id").alias("dst"),
@@ -181,13 +176,14 @@ def cooccurrence_edges(
     )
 
 
-SQL_COOC = f"""ue AS MATERIALIZED (
-  SELECT user_id, event_type, wb FROM (
-    SELECT DISTINCT user_id, event_type,
-           time_bucket(INTERVAL '1 hour', ts) AS wb
-    FROM events
-  ) QUALIFY count(*) OVER (PARTITION BY event_type, wb) <= {COOC_MAX_BUCKET}
-),
+# twin of _user_buckets
+SQL_USER_BUCKETS = """ue0 AS (SELECT DISTINCT user_id, event_type,
+                       time_bucket(INTERVAL '1 hour', ts) AS wb
+                FROM events)"""
+
+SQL_COOC = f"""{SQL_USER_BUCKETS},
+ue AS MATERIALIZED (SELECT user_id, event_type, wb FROM ue0
+  QUALIFY count(*) OVER (PARTITION BY event_type, wb) <= {COOC_MAX_BUCKET}),
 cooc AS MATERIALIZED (
   SELECT DISTINCT a.user_id AS src, b.user_id AS dst, a.wb AS ts
   FROM ue a JOIN ue b
@@ -202,32 +198,12 @@ def cooccurrence_bucket_stats(
     ``band_occupancy`` pattern: no silent caps). One row per
     (event_type, hour bucket): distinct-user count, the k² pair
     volume it would emit, and whether the cap drops it."""
-    _utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.select(
-            "user_id",
-            "event_type",
-            F.window("ts", "1 hour")["start"].alias("wb"),
-        )
-        .distinct()
-        .groupBy("event_type", "wb")
-        .agg(F.count(F.lit(1)).alias("users"))
-        .select(
-            "event_type",
-            "wb",
-            "users",
-            dd.pair_volume("users").alias("pairs"),
-            (F.col("users") > max_bucket).alias("dropped"),
-        )
+    return cap_report(
+        _user_buckets(spark, sf_dir), ["event_type", "wb"], "users", max_bucket
     )
 
 
-SQL_COOC_BUCKET_STATS = f"""WITH ue0 AS (
-  SELECT DISTINCT user_id, event_type,
-         time_bucket(INTERVAL '1 hour', ts) AS wb
-  FROM events
-),
+SQL_COOC_BUCKET_STATS = f"""WITH {SQL_USER_BUCKETS},
 g AS (SELECT event_type, wb, count(*)::BIGINT AS users
       FROM ue0 GROUP BY 1, 2)
 SELECT event_type, wb, users, {SQL_PAIR_VOLUME.format(n="users")} AS pairs,
@@ -507,15 +483,18 @@ def q_connected_components(spark, sf_dir):
     return EdgeStream(e).aggregate(ConnectedComponents(vertex_type="long"))
 
 
+# the recursive reachability walk over a symmetric edge CTE sym(a, b):
+# min(comp) per v is v's connected-component id (the min vertex id)
+SQL_WALK = """walk(v, comp) AS (
+  SELECT a, a FROM (SELECT DISTINCT a FROM sym)
+  UNION
+  SELECT s.b, w.comp FROM walk w JOIN sym s ON s.a = w.v
+)"""
+
 SQL_CONNECTED_COMPONENTS = f"""WITH RECURSIVE {SQL_EDGES},
 de AS (SELECT DISTINCT src, dst FROM edges),
 sym AS (SELECT src AS a, dst AS b FROM de UNION SELECT dst, src FROM de),
-vs AS (SELECT DISTINCT a AS v FROM sym),
-walk(v, comp) AS (
-  SELECT v, v FROM vs
-  UNION
-  SELECT s.b, w.comp FROM walk w JOIN sym s ON s.a = w.v
-)
+{SQL_WALK}
 SELECT v AS vertex, min(comp) AS component FROM walk GROUP BY v"""
 
 
@@ -537,12 +516,7 @@ def q_bipartiteness(spark, sf_dir):
 SQL_BIPARTITENESS = f"""WITH RECURSIVE {SQL_EDGES},
 de AS (SELECT DISTINCT src, dst FROM edges),
 sym AS (SELECT src AS a, dst AS b FROM de UNION SELECT dst, src FROM de),
-vs AS (SELECT DISTINCT a AS v FROM sym),
-walk(v, comp) AS (
-  SELECT v, v FROM vs
-  UNION
-  SELECT s.b, w.comp FROM walk w JOIN sym s ON s.a = w.v
-),
+{SQL_WALK},
 comps AS (SELECT v, min(comp) AS comp FROM walk GROUP BY v),
 anchors AS (SELECT DISTINCT comp FROM comps),
 walk2(v, color) AS (
@@ -1287,20 +1261,22 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 # scale, not just where nothing is dropped (VERDICT r4's reading)
 MINHASH_MAX_BUCKET = 1000
 
-# banded buckets + the bucket-size cap, shared by the pair query and
-# the dedup_groups closure
+# banded buckets, the bucket-size cap and the candidate pairs, shared
+# by the pair query and the dedup_groups closure
 SQL_MINHASH_BANDS_CTE = f"""bands AS (SELECT doc_id, j // 4 AS band,
                  md5(string_agg(minhash::VARCHAR, ',' ORDER BY j)) AS band_hash
           FROM hx GROUP BY doc_id, j // 4),
 bb AS (SELECT doc_id, band, band_hash FROM bands
        QUALIFY count(*) OVER (PARTITION BY band, band_hash)
-               <= {MINHASH_MAX_BUCKET})"""
+               <= {MINHASH_MAX_BUCKET}),
+prs AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       FROM bb a JOIN bb b
+         ON a.band = b.band AND a.band_hash = b.band_hash
+        AND a.doc_id < b.doc_id)"""
 
 SQL_MINHASH_LSH_PAIRS = f"""WITH {SQL_MINHASH_SIG_CTE},
 {SQL_MINHASH_BANDS_CTE}
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM bb a JOIN bb b
-  ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id"""
+SELECT doc_a, doc_b FROM prs"""
 
 
 def q_dedup_groups(spark, sf_dir):
@@ -1313,17 +1289,9 @@ def q_dedup_groups(spark, sf_dir):
 # (grp = the survivor map, one row per document)
 SQL_DEDUP_GROUPS_CTES = f"""{SQL_MINHASH_SIG_CTE},
 {SQL_MINHASH_BANDS_CTE},
-prs AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       FROM bb a JOIN bb b
-         ON a.band = b.band AND a.band_hash = b.band_hash
-        AND a.doc_id < b.doc_id),
 sym AS MATERIALIZED (SELECT doc_a AS a, doc_b AS b FROM prs
        UNION SELECT doc_b, doc_a FROM prs),
-walk(v, comp) AS (
-  SELECT a, a FROM (SELECT DISTINCT a FROM sym)
-  UNION
-  SELECT s.b, w.comp FROM walk w JOIN sym s ON s.a = w.v
-),
+{SQL_WALK},
 cc AS (SELECT v AS doc_id, min(comp) AS keep FROM walk GROUP BY v),
 grp AS (SELECT d.doc_id, coalesce(cc.keep, d.doc_id) AS keep_id
         FROM documents d LEFT JOIN cc USING (doc_id))"""
@@ -1550,7 +1518,24 @@ def q_knn_bruteforce(spark, sf_dir):
     return out.withColumnRenamed("rank", "nn_rank")
 
 
-SQL_KNN_BRUTEFORCE = """WITH q AS (
+# top-5 per query of scored(query_id, neighbor_id, cosine), ties to
+# the lowest neighbor_id: the twin of similarity._top_k
+SQL_TOP5 = """r AS (SELECT query_id, neighbor_id,
+             row_number() OVER (PARTITION BY query_id
+                                ORDER BY cosine DESC, neighbor_id) AS rnk
+      FROM scored)
+SELECT query_id, neighbor_id, CAST(rnk AS INT) AS nn_rank FROM r WHERE rnk <= 5"""
+
+# exact-cosine re-rank of the candidate CTE cand(query_id, neighbor_id):
+# the twin of similarity._rerank, shared by both ANN tiers
+SQL_RERANK = f"""scored AS (SELECT cand.query_id, cand.neighbor_id,
+                  list_cosine_similarity(CAST(qe.embedding AS DOUBLE[]),
+                                         CAST(ne.embedding AS DOUBLE[])) AS cosine
+           FROM cand JOIN embeddings qe ON qe.vec_id = cand.query_id
+           JOIN embeddings ne ON ne.vec_id = cand.neighbor_id),
+{SQL_TOP5}"""
+
+SQL_KNN_BRUTEFORCE = f"""WITH q AS (
   SELECT vec_id, embedding FROM embeddings WHERE vec_id % 100 = 0
 ),
 scored AS (
@@ -1559,11 +1544,7 @@ scored AS (
                                 CAST(e.embedding AS DOUBLE[])) AS cosine
   FROM q, embeddings e WHERE e.vec_id <> q.vec_id
 ),
-r AS (SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id) AS rnk
-      FROM scored)
-SELECT query_id, neighbor_id, CAST(rnk AS INT) AS nn_rank FROM r WHERE rnk <= 5"""
+{SQL_TOP5}"""
 
 
 def q_rhp_signatures(spark, sf_dir):
@@ -1610,16 +1591,7 @@ qb AS (SELECT vec_id AS query_id, band, band_sig FROM bands
 cand AS (SELECT DISTINCT qb.query_id, c.vec_id AS neighbor_id
          FROM qb JOIN bands c ON c.band = qb.band AND c.band_sig = qb.band_sig
          WHERE c.vec_id <> qb.query_id),
-scored AS (SELECT cand.query_id, cand.neighbor_id,
-                  list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                         CAST(e.embedding AS DOUBLE[])) AS cosine
-           FROM cand JOIN embeddings q ON q.vec_id = cand.query_id
-           JOIN embeddings e ON e.vec_id = cand.neighbor_id),
-r AS (SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id) AS rnk
-      FROM scored)
-SELECT query_id, neighbor_id, CAST(rnk AS INT) AS nn_rank FROM r WHERE rnk <= 5"""
+{SQL_RERANK}"""
 
 
 def q_ann_ivf(spark, sf_dir):
@@ -1633,47 +1605,34 @@ def q_ann_ivf(spark, sf_dir):
     return out.withColumnRenamed("rank", "nn_rank")
 
 
-SQL_ANN_IVF = """WITH cents AS MATERIALIZED (
+def _sql_nearest_lists(rel: str, id_col: str, n: int) -> str:
+    """The ``n`` centroids of ``cents`` nearest each row of
+    ``rel(id_col, embedding)`` by cosine, ties to the lowest list_id:
+    the twin of similarity._top_k over centroid cosines."""
+    return f"""SELECT {id_col}, list_id FROM (
+    SELECT r.{id_col}, c.list_id,
+           row_number() OVER (
+             PARTITION BY r.{id_col}
+             ORDER BY list_cosine_similarity(CAST(r.embedding AS DOUBLE[]),
+                                             c.centroid) DESC, c.list_id) AS rn
+    FROM {rel} r CROSS JOIN cents c)
+  WHERE rn <= {n}"""
+
+
+SQL_ANN_IVF = f"""WITH cents AS MATERIALIZED (
   SELECT vec_id AS list_id, CAST(embedding AS DOUBLE[]) AS centroid
   FROM embeddings
   ORDER BY (('0x' || substr(md5('ivf|' || vec_id::VARCHAR), 1, 15))::UBIGINT)::BIGINT,
            vec_id
   LIMIT 16
 ),
-assign AS MATERIALIZED (
-  SELECT vec_id, list_id FROM (
-    SELECT e.vec_id, c.list_id,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-                                             c.centroid) DESC, c.list_id) AS rn
-    FROM embeddings e CROSS JOIN cents c)
-  WHERE rn = 1
-),
+assign AS MATERIALIZED ({_sql_nearest_lists("embeddings", "vec_id", 1)}),
 q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id % 100 = 0),
-probes AS (
-  SELECT query_id, list_id FROM (
-    SELECT q.query_id, c.list_id,
-           row_number() OVER (
-             PARTITION BY q.query_id
-             ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                             c.centroid) DESC, c.list_id) AS rn
-    FROM q CROSS JOIN cents c)
-  WHERE rn <= 4
-),
+probes AS ({_sql_nearest_lists("q", "query_id", 4)}),
 cand AS (SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
          FROM probes p JOIN assign a ON a.list_id = p.list_id
          WHERE a.vec_id <> p.query_id),
-scored AS (SELECT cand.query_id, cand.neighbor_id,
-                  list_cosine_similarity(CAST(qq.embedding AS DOUBLE[]),
-                                         CAST(e.embedding AS DOUBLE[])) AS cosine
-           FROM cand JOIN embeddings qq ON qq.vec_id = cand.query_id
-           JOIN embeddings e ON e.vec_id = cand.neighbor_id),
-r AS (SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id) AS rnk
-      FROM scored)
-SELECT query_id, neighbor_id, CAST(rnk AS INT) AS nn_rank FROM r WHERE rnk <= 5"""
+{SQL_RERANK}"""
 
 
 def q_rhp_neardup(spark, sf_dir):
@@ -1731,14 +1690,10 @@ def q_embedding_dedup_groups(spark, sf_dir):
 
 SQL_EMBEDDING_DEDUP_GROUPS = f"""WITH RECURSIVE {_sql_rhp_sig_cte(32)},
 {_SQL_RHP_PAIRS_CTES},
-esym AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM eprs
+sym AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM eprs
        UNION SELECT id_b, id_a FROM eprs),
-ewalk(v, comp) AS (
-  SELECT a, a FROM (SELECT DISTINCT a FROM esym)
-  UNION
-  SELECT s.b, w.comp FROM ewalk w JOIN esym s ON s.a = w.v
-),
-ecc AS (SELECT v AS vec_id, min(comp) AS keep FROM ewalk GROUP BY v)
+{SQL_WALK},
+ecc AS (SELECT v AS vec_id, min(comp) AS keep FROM walk GROUP BY v)
 SELECT e.vec_id, coalesce(ecc.keep, e.vec_id) AS keep_id
 FROM embeddings e LEFT JOIN ecc USING (vec_id)"""
 

@@ -68,14 +68,18 @@ class IdempotentUpsertSink:
     def __call__(self, df: DataFrame, epoch_id: int) -> None:
         self.write_batch(df, epoch_id)
 
-    def read_all(self, spark: SparkSession) -> DataFrame:
+    def read_all(self, spark: SparkSession) -> DataFrame | None:
+        """Every committed row; ``None`` before the first commit."""
         return read_committed(spark, f"{self.path}/data")
 
-    def read_upserted(self, spark: SparkSession) -> DataFrame:
-        """Latest row per key across epochs (the upsert view)."""
+    def read_upserted(self, spark: SparkSession) -> DataFrame | None:
+        """Latest row per key across epochs (the upsert view);
+        ``None`` before the first commit."""
         from pyspark.sql import Window as W
 
         df = self.read_all(spark)
+        if df is None:
+            return None
         w = W.partitionBy(*self.keys).orderBy(F.desc("_epoch"))
         return (
             df.withColumn("_rn", F.row_number().over(w))
@@ -83,5 +87,6 @@ class IdempotentUpsertSink:
             .drop("_rn", "_epoch", "epoch")
         )
 
-    def read_metrics(self, spark: SparkSession) -> DataFrame:
+    def read_metrics(self, spark: SparkSession) -> DataFrame | None:
+        """Per-epoch (epoch, rows_in, wall_s); ``None`` before any commit."""
         return read_committed(spark, f"{self.path}/metrics")

@@ -15,7 +15,8 @@ code that knows that layout:
 - Readers take either one committed epoch with an explicit schema
   (``read_epoch``: an epoch with no rows has no data-file footer to
   infer one from) or the union of all committed epochs with their
-  ``epoch`` partition column (``read_committed``).
+  ``epoch`` partition column (``read_committed``, ``None`` while no
+  epoch has committed).
 - ``delete_superseded`` is the one cleanup rule: at the end of epoch
   e, with b the latest committed epoch below e in an anchor table,
   every epoch below b is deleted. The bound is strict: e itself may
@@ -51,10 +52,12 @@ def read_epoch(spark: SparkSession, base: str, epoch: int, schema) -> DataFrame:
     return spark.read.schema(schema).parquet(_epoch_dir(base, epoch))
 
 
-def read_committed(spark: SparkSession, base: str) -> DataFrame:
+def read_committed(spark: SparkSession, base: str) -> DataFrame | None:
     """The union of every committed epoch of ``base``, with the
-    ``epoch`` partition column."""
+    ``epoch`` partition column; ``None`` before the first commit."""
     dirs = [_epoch_dir(base, e) for e in committed_epochs(spark, base)]
+    if not dirs:
+        return None
     return spark.read.option("basePath", base).parquet(*dirs)
 
 

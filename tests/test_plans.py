@@ -162,8 +162,8 @@ def test_iterative_plans_stay_jvm_side(spark):
 
 
 def test_cooccurrence_cap_prefilters_the_join(spark):
-    """The bucket cap must sit BELOW the self-join (a window + filter
-    on the build side), not above it — otherwise the k^2 fan-out
+    """The bucket cap must sit BELOW the self-join (an aggregate +
+    filter on the build side), not above it — otherwise the k^2 fan-out
     happens before the guard. (The join formulation is deliberate:
     see the r4 note in cooccurrence_edges — a join-free explode
     carries a falsely-tiny size estimate through localCheckpoint and
@@ -174,7 +174,7 @@ def test_cooccurrence_cap_prefilters_the_join(spark):
     opt = optimized_of(df)
     join_pos = opt.find("Join")
     assert join_pos >= 0
-    # the windowed count filter appears in the join's subtree (after
+    # the aggregate count filter appears in the join's subtree (after
     # the first Join line in the tree print = inside its children)
     assert "bucket_n" in opt[join_pos:], opt[:500]
 
@@ -198,7 +198,8 @@ def test_document_frequency_caps_have_no_key_window(spark):
     with an aggregate joined back, never a window partitioned on the
     capped key: such a window puts every row of the hottest key into
     one straggler task, where the aggregate combines map-side. The
-    co-occurrence bucket cap is reached through ``triangle_count``."""
+    co-occurrence bucket cap is reached through ``triangle_count``,
+    the RHP band cap through ``rhp_neardup``."""
     import re
 
     from gelly_streaming_spark.queries import QUERIES
@@ -207,6 +208,8 @@ def test_document_frequency_caps_have_no_key_window(spark):
         ("jaccard_pairs", "tok"),
         ("contamination", "shingle"),
         ("triangle_count", "event_type"),
+        ("minhash_lsh_pairs", "band_hash"),
+        ("rhp_neardup", "band_sig"),
     )
     keyed = {}
     for name, key in cases:

@@ -292,17 +292,26 @@ def test_streaming_session_degrees_match_batch(spark, transcripts_pdf, tmp_path)
 
 def test_sink_readers_skip_uncommitted_epoch(spark, tmp_path):
     """An epoch directory a crash left without ``_SUCCESS`` stays
-    invisible to the sink's readers, as it does for the CC state."""
+    invisible to the sink's readers, as it does for the CC state; with
+    no committed epoch at all, every reader returns ``None``."""
     import os
 
     sink = IdempotentUpsertSink(str(tmp_path / "sink"), keys=["k"])
+    readers = (sink.read_all, sink.read_upserted, sink.read_metrics)
+    assert [read(spark) for read in readers] == [None, None, None]
     schema = "k int, v string"
+
+    def write_partial(epoch):
+        partial = str(tmp_path / f"sink/data/epoch={epoch}")
+        spark.createDataFrame([(1, "partial")], schema).withColumn(
+            "_epoch", F.lit(epoch)
+        ).coalesce(1).write.parquet(partial)
+        os.remove(os.path.join(partial, "_SUCCESS"))
+
+    write_partial(0)
+    assert [read(spark) for read in readers] == [None, None, None]
     sink.write_batch(spark.createDataFrame([(1, "a"), (2, "b")], schema), 0)
-    partial = str(tmp_path / "sink/data/epoch=1")
-    spark.createDataFrame([(1, "partial")], schema).withColumn(
-        "_epoch", F.lit(1)
-    ).coalesce(1).write.parquet(partial)
-    os.remove(os.path.join(partial, "_SUCCESS"))
+    write_partial(1)
     got = {(r["k"], r["v"]) for r in sink.read_upserted(spark).collect()}
     assert got == {(1, "a"), (2, "b")}
     m = sink.read_metrics(spark).collect()

@@ -659,25 +659,32 @@ def test_cooccurrence_bucket_stats_and_cap(spark):
     sf = "/root/testdata/sf0.001"
     stats = cooccurrence_bucket_stats(spark, sf, max_bucket=2).collect()
     ev = spark.read.parquet(f"{sf}/events.parquet")
-    direct = {
-        (r["event_type"], r["wb"]): r["users"]
-        for r in ev.select(
+    buckets = (
+        ev.select(
             "user_id", "event_type", F.window("ts", "1 hour")["start"].alias("wb")
         )
         .distinct()
         .groupBy("event_type", "wb")
-        .agg(F.count(F.lit(1)).alias("users"))
+        .agg(F.sort_array(F.collect_list("user_id")).alias("us"))
         .collect()
-    }
+    )
+    direct = {(r["event_type"], r["wb"]): len(r["us"]) for r in buckets}
     assert {(r["event_type"], r["wb"]): r["users"] for r in stats} == direct
     for r in stats:
         assert r["dropped"] == (r["users"] > 2)
         assert r["pairs"] == r["users"] * (r["users"] - 1) / 2
     dropped = sum(1 for r in stats if r["dropped"])
     assert dropped > 0  # the tiny cap actually bites at sf0.001
-    capped = cooccurrence_edges(spark, sf, max_bucket=2).count()
+    # buckets of exactly max_bucket users are kept and give their pair
+    assert any(r["users"] == 2 for r in stats)
+    kept = {(r["us"][0], r["us"][1], r["wb"]) for r in buckets if len(r["us"]) == 2}
+    capped = {
+        (r["src"], r["dst"], r["ts"])
+        for r in cooccurrence_edges(spark, sf, max_bucket=2).collect()
+    }
+    assert capped == kept
     uncapped = cooccurrence_edges(spark, sf, max_bucket=10**9).count()
-    assert capped < uncapped
+    assert len(capped) < uncapped
 
 
 # -- repetition / PII ----------------------------------------------------------
@@ -1034,12 +1041,13 @@ def test_pair_volume_past_bigint_multiply(spark):
     raise, and the two engines must agree."""
     import duckdb
 
+    from gelly_streaming_spark.functions.buckets import pair_volume
     from gelly_streaming_spark.queries import SQL_PAIR_VOLUME
 
     n = 3_100_000_000
     got = (
         spark.createDataFrame([(n,)], "df bigint")
-        .select(dd.pair_volume("df").alias("pairs"))
+        .select(pair_volume("df").alias("pairs"))
         .first()["pairs"]
     )
     want = duckdb.sql(
