@@ -19,6 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.operators.aggregation import (
+    GraphAggregation,
+    window_graph_aggregation,
+)
+
 EDGE_COLS = ["src", "dst", "val", "ts"]
 
 
@@ -304,11 +309,12 @@ class EdgeStream:
         partials). Emit-on-change ≡ update mode in streaming."""
         return self.df.agg(*aggs)
 
-    # -- merge-tree aggregation (WindowGraphAggregation.java) ----------------
+    # -- merge engine (GraphAggregation.java) ---------------------------------
 
-    def aggregate(self, algorithm, **kwargs) -> DataFrame:
-        """Run a merge-tree graph aggregation (the reference's core
-        WindowGraphAggregation.run, WindowGraphAggregation.java:47-66).
-        ``algorithm`` is a GraphAggregation from
-        gelly_streaming_spark.operators.aggregation."""
-        return algorithm.run(self, **kwargs)
+    def aggregate(
+        self, algorithm: GraphAggregation, num_shards: int = 32, salt: int = 1
+    ) -> DataFrame:
+        """Run a GraphAggregation as the reference's core operator does
+        (GraphAggregation.java:80-117): a sharded partial fold, then one
+        single-group combine (operators.aggregation)."""
+        return window_graph_aggregation(self.df, algorithm, num_shards, salt)

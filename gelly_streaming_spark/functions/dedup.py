@@ -64,7 +64,10 @@ def dedup_exact(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     ``keep_id`` = min doc_id of the group (the canonical survivor).
     One hash aggregate; at 100 TB this is a single shuffle on a
-    uniformly distributed key."""
+    uniformly distributed key. On a document stream in update mode it
+    is the running dedup: Catalyst keeps one state row per distinct
+    text, and the min-id survivor makes the upserted table invariant
+    to batching and arrival order."""
     return docs.groupBy(F.md5(text_col).alias("text_hash")).agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_id")
     )

@@ -1,5 +1,2 @@
-from gelly_streaming_spark.operators.aggregation import (  # noqa: F401
-    GraphAggregation,
-    WindowGraphAggregation,
-)
+from gelly_streaming_spark.operators.aggregation import GraphAggregation  # noqa: F401
 from gelly_streaming_spark.operators.slice import GraphWindowStream  # noqa: F401

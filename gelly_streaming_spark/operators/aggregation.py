@@ -1,6 +1,6 @@
-"""The merge-tree engine — Spark rebuild of WindowGraphAggregation.
+"""The merge engine: one sharded fold, then one single-group combine.
 
-The reference's core operator (WindowGraphAggregation.java:47-66,
+The reference's core operator (its windowed graph aggregation,
 GraphAggregation.java:80-117) runs every library algorithm as:
 
   1. tag each edge with its physical partition        (InitialMapper)
@@ -12,23 +12,23 @@ shard column — ``pmod(xxhash64(src), num_shards)`` — rather than by
 physical partition (deterministic, skew-controllable, salting-ready),
 then:
 
-  stage A: groupBy([window?,] shard).applyInPandas(fold)   # partial
-  stage B: log-depth tree: repeatedly divide the shard id by
-           ``fanout`` and groupBy([window?,] shard).applyInPandas(
-           combine) until one group remains               # merge tree
-  stage C: finalize partial rows -> output rows
+  stage A: groupBy(shard).applyInPandas(fold)         # sharded_fold
+  stage B: one pandas group combines all partials and  # single_group
+           finalizes them — the parallelism-1 Merger
 
-All stages are Arrow-vectorized grouped-map UDFs; the shuffles are
+Both stages are Arrow-vectorized grouped-map UDFs; the shuffles are
 ordinary Exchanges Catalyst plans. Partials are synopsis rows
 (components / colorings / spanner edges), not edges — so the data
-volume entering the funnel is O(V'), bounded, which is what makes the
-single final group safe at 100 TB edge scale. At 1000 executors the
-tree depth grows logarithmically (fanout^depth >= shards) instead of
-funnelling all partials to one task in one hop.
+volume entering the single group is O(V'), bounded. One merge level at
+every shard count also keeps the spanner's k² stretch bound.
 
-Batch and streaming share this code: streaming pipelines call it per
-micro-batch inside foreachBatch, folding the previous global state in
-as one more partial (see gelly_streaming_spark.streaming.pipeline).
+This module is the only code that merges partials. Batch
+(``window_graph_aggregation``) and stream
+(streaming.aggregation.StreamingGraphAggregation, which folds the
+previous epoch's state in as one more partial) both run
+``sharded_fold`` and then ``single_group``; connected components
+swaps stage B for the distributed quotient resolution
+(plans.connected_components.resolve_partials).
 """
 
 from __future__ import annotations
@@ -41,12 +41,12 @@ from pyspark.sql import functions as F
 
 
 class GraphAggregation:
-    """A merge-tree algorithm definition.
+    """A merge-engine algorithm definition.
 
     Subclasses (or instances) provide:
 
-    - ``partial_schema``: DDL string for synopsis rows (engine adds
-      the ``shard`` / window columns).
+    - ``partial_schema``: DDL string for synopsis rows (the engine adds
+      the ``shard`` column).
     - ``output_schema``: DDL string for the final result rows.
     - ``fold(pdf)``: edges (pandas: src, dst, val, ts) -> partial rows.
     - ``combine(pdf)``: concatenated partial rows -> partial rows.
@@ -68,42 +68,12 @@ class GraphAggregation:
     def finalize(self, pdf: pd.DataFrame) -> pd.DataFrame:
         return pdf
 
-    def run(self, edge_stream, **kwargs) -> DataFrame:
-        return window_graph_aggregation(edge_stream.df, self, **kwargs)
-
-
-class WindowGraphAggregation(GraphAggregation):
-    """Convenience wrapper building an algorithm from plain callables
-    (the reference's ctor takes updateFun/combineFun/transform the
-    same way, WindowGraphAggregation.java:30-45)."""
-
-    def __init__(
-        self,
-        fold: Callable[[pd.DataFrame], pd.DataFrame],
-        combine: Callable[[pd.DataFrame], pd.DataFrame],
-        partial_schema: str,
-        output_schema: str | None = None,
-        finalize: Callable[[pd.DataFrame], pd.DataFrame] | None = None,
-    ):
-        self._fold, self._combine, self._finalize = fold, combine, finalize
-        self.partial_schema = partial_schema
-        self.output_schema = output_schema or partial_schema
-
-    def fold(self, pdf):
-        return self._fold(pdf)
-
-    def combine(self, pdf):
-        return self._combine(pdf)
-
-    def finalize(self, pdf):
-        return self._finalize(pdf) if self._finalize else pdf
-
 
 def with_shard(
     df: DataFrame, num_shards: int, salt: int = 1, shard_on=None
 ) -> DataFrame:
     """Explicit deterministic shard tag (≡ the reference's subtask
-    tag, WindowGraphAggregation.java:69-82, but key-hash based).
+    tag, InitialMapper, but key-hash based).
     ``salt`` > 1 spreads each src key over ``salt`` sub-shards —
     hot-key mitigation per north_rule; correctness is unaffected
     because the combine phase re-merges synopses.
@@ -147,77 +117,27 @@ def sharded_fold(
     ).drop("shard")
 
 
+def single_group(
+    df: DataFrame, fn: Callable[[pd.DataFrame], pd.DataFrame], schema: str
+) -> DataFrame:
+    """Run ``fn(pdf) -> pdf`` over the whole frame as ONE pandas group:
+    the reference's parallelism-1 operator. The merges feed it partials,
+    O(state); the sequential parity ops (partitioners, matching events)
+    feed it their whole edge stream, as the reference does."""
+    return df.groupBy(F.lit(0).alias("g")).applyInPandas(
+        lambda key, pdf: fn(pdf), schema=schema
+    )
+
+
 def window_graph_aggregation(
     edges: DataFrame,
     algo: GraphAggregation,
     num_shards: int = 32,
     salt: int = 1,
-    fanout: int = 8,
-    window_duration: str | None = None,
 ) -> DataFrame:
-    """Run ``algo`` as a sharded fold + log-depth merge tree.
-
-    With ``window_duration``, every stage is additionally keyed by the
-    tumbling event-time window (window-scoped state, the reference's
-    transient mode, flattened to win_start/win_end timestamps);
-    without it the aggregation is global.
-    """
-    windowed = window_duration is not None
-    win_keys = ["win_start", "win_end"] if windowed else []
-    df = edges
-    if windowed:
-        w = F.window("ts", window_duration)
-        df = df.withColumn("win_start", w["start"]).withColumn("win_end", w["end"])
-
-    df = with_shard(df, num_shards, salt)
-
-    partial_cols = f"shard long, {algo.partial_schema}"
-    if windowed:
-        partial_cols = f"win_start timestamp, win_end timestamp, {partial_cols}"
-
-    def _emit(key, out: pd.DataFrame) -> pd.DataFrame:
-        # re-attach grouping cols (applyInPandas does not carry them)
-        if windowed:
-            out.insert(0, "win_start", key[0])
-            out.insert(1, "win_end", key[1])
-            out.insert(2, "shard", int(key[2]))
-        else:
-            out.insert(0, "shard", int(key[0]))
-        return out
-
-    def fold_wrapper(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _emit(key, algo.fold(pdf))
-
-    partials = df.groupBy(*win_keys, "shard").applyInPandas(
-        fold_wrapper, schema=partial_cols
-    )
-
-    def combine_wrapper(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        drop = win_keys + ["shard"]
-        return _emit(key, algo.combine(pdf.drop(columns=drop)))
-
-    shards = num_shards * salt
-    level_df = partials
-    while shards > 1:
-        shards = max(1, (shards + fanout - 1) // fanout)
-        level_df = level_df.withColumn(
-            "shard", F.pmod(F.col("shard"), F.lit(shards)).cast("long")
-        )
-        level_df = level_df.groupBy(*win_keys, "shard").applyInPandas(
-            combine_wrapper, schema=partial_cols
-        )
-
-    out_schema = algo.output_schema
-    if windowed:
-        out_schema = f"win_start timestamp, win_end timestamp, {out_schema}"
-
-    def finalize_wrapper(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        out = algo.finalize(pdf.drop(columns=win_keys + ["shard"]))
-        if windowed:
-            out.insert(0, "win_start", key[0])
-            out.insert(1, "win_end", key[1])
-        return out
-
-    return level_df.groupBy(*win_keys, "shard").applyInPandas(
-        finalize_wrapper, schema=out_schema
+    """Run ``algo`` as a sharded fold plus one single-group combine
+    that also finalizes."""
+    partials = sharded_fold(edges, algo, num_shards=num_shards, salt=salt)
+    return single_group(
+        partials, lambda pdf: algo.finalize(algo.combine(pdf)), algo.output_schema
     )

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from gelly_streaming_spark.functions.hashing import HASH60 as _HASH60
 from gelly_streaming_spark.functions.hashing import hash60_py
+from gelly_streaming_spark.operators.aggregation import single_group
 
 # hash of a value cast to string (vertex ids may be longs or labels)
 H60 = _HASH60.format(x="cast({x} as string)")
@@ -318,10 +319,7 @@ def _single_group_fold(
     string labels or longs), plus ``part int``."""
     if schema is None:
         schema = ", ".join(f"{c} {t}" for c, t in df.dtypes) + ", part int"
-    return df.groupBy(F.lit(0).alias("g")).applyInPandas(
-        lambda key, pdf: fold(pdf.drop(columns=["g"], errors="ignore")),
-        schema=schema,
-    )
+    return single_group(df, fold, schema)
 
 
 def _sequential_edge_partition(

@@ -18,7 +18,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gelly_streaming_spark.functions.synopses import DisjointSet
-from gelly_streaming_spark.operators.aggregation import GraphAggregation
+from gelly_streaming_spark.operators.aggregation import (
+    GraphAggregation,
+    sharded_fold,
+    single_group,
+)
 
 
 def _pairs_to_pdf(ds: DisjointSet) -> pd.DataFrame:
@@ -191,7 +195,7 @@ def resolve_partials(
         mapping = _contract_min_labels(quotient, comp_type)
     else:
 
-        def tiny_cc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def tiny_cc(pdf: pd.DataFrame) -> pd.DataFrame:
             ds = DisjointSet()
             ds.union_edges(pdf["comp"].values, pdf["min_comp"].values)
             comps = ds.components()
@@ -199,8 +203,8 @@ def resolve_partials(
                 {"comp": list(comps.keys()), "root": list(comps.values())}
             )
 
-        mapping = quotient.groupBy(spark_f.lit(0).alias("g")).applyInPandas(
-            tiny_cc, schema=f"comp {comp_type}, root {comp_type}"
+        mapping = single_group(
+            quotient, tiny_cc, f"comp {comp_type}, root {comp_type}"
         )
     resolved = (
         partials.join(
@@ -229,8 +233,6 @@ def connected_components(
     quotient resolution (no O(V) funnel). Pass ``shard_on`` = a
     connectivity-local key (e.g. the conv_id prefix of transcript
     vertex labels) to make the quotient near-empty."""
-    from gelly_streaming_spark.operators.aggregation import sharded_fold
-
     if vertex_type is None:
         vertex_type = "string" if dict(edges.dtypes)["src"] == "string" else "long"
     partials = sharded_fold(

@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gelly_streaming_spark.operators.aggregation import single_group
+
 _EVENT_SCHEMA = "op string, src long, dst long, val long, seq long"
 
 
@@ -171,11 +173,8 @@ def dominant_matching(edges: DataFrame, rounds: int = 4) -> DataFrame:
 
 def greedy_matching_events(edges: DataFrame) -> DataFrame:
     """The ADD/REMOVE MatchingEvent stream: (op, src, dst, val, seq)."""
-    return (
-        edges.select("src", "dst", "val", "ts")
-        .groupBy(F.lit(0).alias("g"))
-        .applyInPandas(
-            lambda key, pdf: _fold_matching(pdf, emit_events=True),
-            schema=_EVENT_SCHEMA,
-        )
+    return single_group(
+        edges.select("src", "dst", "val", "ts"),
+        lambda pdf: _fold_matching(pdf, emit_events=True),
+        _EVENT_SCHEMA,
     )

@@ -114,6 +114,12 @@ SQL_TOKS = (
     " '\\s+', ' ', 'g'), ' ') AS tokens FROM documents)"
 )
 
+# distinct tokens per doc (x) and document frequency per token (d):
+# the shared base of the jaccard, df-stats and vocabulary twins
+SQL_DOC_DF = f"""{SQL_TOKS},
+x AS (SELECT doc_id, unnest(list_distinct(tokens)) AS tok FROM toks),
+d AS (SELECT tok, count(*)::BIGINT AS df FROM x GROUP BY tok)"""
+
 # twin of buckets.pair_volume: n*(n-1)/2 multiplied in DOUBLE, since the
 # BIGINT multiply raises above n ~ 3.04e9
 SQL_PAIR_VOLUME = "{n}::DOUBLE * ({n} - 1) / 2"
@@ -1167,13 +1173,11 @@ def q_jaccard_pairs(spark, sf_dir):
     )
 
 
-SQL_JACCARD_PAIRS = f"""WITH {SQL_TOKS},
-x AS (SELECT doc_id, tok FROM
-        (SELECT doc_id, unnest(list_distinct(tokens)) AS tok FROM toks)
-      QUALIFY count(*) OVER (PARTITION BY tok) <= {JACCARD_MAX_DF}),
-s AS (SELECT doc_id, count(*) AS n FROM x GROUP BY doc_id),
+SQL_JACCARD_PAIRS = f"""WITH {SQL_DOC_DF},
+xc AS (SELECT doc_id, tok FROM x JOIN d USING (tok) WHERE df <= {JACCARD_MAX_DF}),
+s AS (SELECT doc_id, count(*) AS n FROM xc GROUP BY doc_id),
 i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS n_common
-      FROM x a JOIN x b ON a.tok = b.tok AND a.doc_id < b.doc_id
+      FROM xc a JOIN xc b ON a.tok = b.tok AND a.doc_id < b.doc_id
       GROUP BY 1, 2)
 SELECT doc_a, doc_b, n_common,
        n_common::DOUBLE / (sa.n + sb.n - n_common)::DOUBLE AS jaccard
@@ -1188,9 +1192,7 @@ def q_jaccard_df_stats(spark, sf_dir):
     )
 
 
-SQL_JACCARD_DF_STATS = f"""WITH {SQL_TOKS},
-x AS (SELECT doc_id, unnest(list_distinct(tokens)) AS tok FROM toks),
-d AS (SELECT tok, count(*)::BIGINT AS df FROM x GROUP BY tok)
+SQL_JACCARD_DF_STATS = f"""WITH {SQL_DOC_DF}
 SELECT tok, df, {SQL_PAIR_VOLUME.format(n="df")} AS pairs,
        df > {JACCARD_MAX_DF} AS dropped
 FROM d"""
@@ -1221,9 +1223,7 @@ def q_vocab_topk(spark, sf_dir):
     )
 
 
-SQL_VOCAB_TOPK = f"""WITH {SQL_TOKS},
-x AS (SELECT doc_id, unnest(list_distinct(tokens)) AS tok FROM toks),
-d AS (SELECT tok, count(*)::BIGINT AS df FROM x GROUP BY tok)
+SQL_VOCAB_TOPK = f"""WITH {SQL_DOC_DF}
 SELECT tok, df,
        row_number() OVER (ORDER BY df DESC, tok) AS rank
 FROM d
@@ -1570,6 +1570,11 @@ sig AS (SELECT vec_id,
 SQL_RHP_SIGNATURES = f"""WITH {_sql_rhp_sig_cte()}
 SELECT vec_id, sig FROM sig"""
 
+# 4 bands x 8 bits of a 32-plane ``sig``: the banding shared by the
+# ann_lsh, rhp_neardup and embedding_dedup_groups twins
+_SQL_RHP_BANDS = """bands AS (SELECT vec_id, b AS band, (sig >> (b * 8)) & 255 AS band_sig
+          FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b) bs)"""
+
 
 def q_ann_lsh(spark, sf_dir):
     # corpus-sized LSH params (sim.rhp_params_for logic): the sandbox
@@ -1584,8 +1589,7 @@ def q_ann_lsh(spark, sf_dir):
 
 
 SQL_ANN_LSH = f"""WITH {_sql_rhp_sig_cte(32)},
-bands AS (SELECT vec_id, b AS band, (sig >> (b * 8)) & 255 AS band_sig
-          FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b) bs),
+{_SQL_RHP_BANDS},
 qb AS (SELECT vec_id AS query_id, band, band_sig FROM bands
        WHERE vec_id % 100 = 0),
 cand AS (SELECT DISTINCT qb.query_id, c.vec_id AS neighbor_id
@@ -1655,13 +1659,11 @@ RHP_MAX_BUCKET = 10000
 
 # capped-bucket RHP pair CTE chain (shared by the pair query and the
 # embedding dedup-groups closure)
-_SQL_RHP_PAIRS_CTES = f"""bands AS (
-  SELECT vec_id, band, band_sig FROM (
-    SELECT vec_id, b AS band, (sig >> (b * 8)) & 255 AS band_sig
-    FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b) bs)
-  QUALIFY count(*) OVER (PARTITION BY band, band_sig) <= {RHP_MAX_BUCKET}),
+_SQL_RHP_PAIRS_CTES = f"""{_SQL_RHP_BANDS},
+kept AS (SELECT * FROM bands
+         QUALIFY count(*) OVER (PARTITION BY band, band_sig) <= {RHP_MAX_BUCKET}),
 cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         FROM bands a JOIN bands b
+         FROM kept a JOIN kept b
            ON a.band = b.band AND a.band_sig = b.band_sig
           AND a.vec_id < b.vec_id),
 eprs AS MATERIALIZED (

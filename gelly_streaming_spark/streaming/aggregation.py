@@ -14,9 +14,10 @@ anchor: at the end of epoch e, the epochs below the latest committed
 state b < e are deleted, so only b and e remain, and a replay of e
 still reads b.
 
-Unlike CC (which has the distributed quotient resolution,
-plans/connected_components.resolve_partials), the general combine
-funnels partial rows into algo.combine — safe because synopsis
+The combine is the batch engine's (operators.aggregation): sharded_fold,
+then single_group(algo.combine). Unlike CC (which has the distributed
+quotient resolution, plans/connected_components.resolve_partials), the
+general combine funnels partial rows into one group — safe because synopsis
 exports are O(state), not O(edges): bipartiteness exports one signed
 root per vertex and fails fast to a single sentinel row; spanner
 exports its (bounded) edge set; degree maps export one counter per
@@ -25,13 +26,12 @@ vertex.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from gelly_streaming_spark.operators.aggregation import (
     GraphAggregation,
     sharded_fold,
+    single_group,
 )
 from gelly_streaming_spark.streaming.state import (
     committed_epochs,
@@ -77,13 +77,7 @@ class StreamingGraphAggregation:
         st = self.read_state(spark)
         if st is None:
             return None
-
-        def fin(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            return self.algo.finalize(pdf)
-
-        return st.groupBy(F.lit(0).alias("g")).applyInPandas(
-            fin, schema=self.algo.output_schema
-        )
+        return single_group(st, self.algo.finalize, self.algo.output_schema)
 
     # -- per-batch ----------------------------------------------------------
 
@@ -99,12 +93,8 @@ class StreamingGraphAggregation:
         prev = self._state_below(spark, epoch_id)
         if prev is not None:
             partials = partials.unionByName(prev)
-
-        def combine(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            return self.algo.combine(pdf)
-
-        merged = partials.groupBy(F.lit(0).alias("g")).applyInPandas(
-            combine, schema=self.algo.partial_schema
+        merged = single_group(
+            partials, self.algo.combine, self.algo.partial_schema
         )
         write_epoch(merged, self._table, epoch_id)
         delete_superseded(spark, self._table, epoch_id, [self._table])

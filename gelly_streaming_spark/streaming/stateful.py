@@ -9,7 +9,8 @@ per-row Python, exactly the "flatMapGroupsWithState-style stateful
 aggregation" the north_star names. Most aggregations in this repo
 deliberately use plain ``groupBy().agg`` in update mode instead
 (Catalyst-native state is faster and AQE-planned; the running degree
-is ``EdgeStream.get_degrees()`` on a streaming frame); this module is for
+is ``EdgeStream.get_degrees()`` and running exact dedup is
+``functions.dedup.dedup_exact`` on a streaming frame); this module is for
 semantics the built-ins cannot express — state transitions that need
 custom code per key, like the signed degree floor below.
 """
@@ -328,74 +329,6 @@ def triangle_estimate_from_samplers(
                 / F.lit(float(num_samplers))
             ).alias("estimate"),
         )
-    )
-
-
-def streaming_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Streaming twin of ``functions.dedup.dedup_exact``: running
-    exact-duplicate groups over a document STREAM — the form a
-    training-data pipeline runs while continuously ingesting a crawl,
-    where "have I seen this text before?" must span micro-batches.
-
-    Keyed by ``md5(text)`` — Spark shards managed state by key hash,
-    so state is one (keep_id, n_docs) pair per DISTINCT text (the
-    synopsis property; duplicates add no state). Emits per
-    (text_hash, batch) the updated (text_hash, keep_id, n_docs);
-    an exactly-once UPSERT sink keyed on text_hash therefore
-    converges to EXACTLY the batch ``dedup_exact`` table.
-
-    The survivor is the global MIN ``id_col`` — an order-independent
-    choice, so the final table is invariant to micro-batch boundaries
-    AND to arrival order (strictly stronger than first-arrival-wins,
-    and it matches the batch twin's ``min(doc_id)`` keep rule
-    bit-for-bit; pytest replays the same corpus at different
-    batchings and asserts equality with ``dedup_exact``). A stateless
-    per-batch dedup cannot express this: a duplicate pair split
-    across two batches would survive twice.
-    """
-    keyed = docs.select(
-        F.md5(F.col(text_col)).alias("text_hash"),
-        F.col(id_col).cast("long").alias("doc_id"),
-    )
-
-    def update(
-        key_t: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        th = key_t[0]
-        keep_id, n_docs = state.get if state.exists else (None, 0)
-        parts = [p for p in pdfs if len(p)]
-        if not parts:
-            yield pd.DataFrame(
-                {"text_hash": [], "keep_id": [], "n_docs": []}
-            ).astype({"keep_id": "int64", "n_docs": "int64"})
-            return
-        ids = pd.concat(parts)["doc_id"]
-        # batch-twin null semantics: n_docs counts every row, keep_id
-        # is min over NON-null ids (Spark's min skips nulls) and stays
-        # null while only null-id rows have arrived — dedup_exact
-        # returns exactly that for an all-null group
-        non_null = ids.dropna()
-        if len(non_null):
-            batch_min = int(non_null.min())
-            keep_id = (
-                batch_min if keep_id is None else min(keep_id, batch_min)
-            )
-        n_docs += int(len(ids))
-        state.update((keep_id, n_docs))
-        yield pd.DataFrame(
-            {"text_hash": [th], "keep_id": [keep_id], "n_docs": [n_docs]}
-        )
-
-    return keyed.groupBy("text_hash").applyInPandasWithState(
-        update,
-        outputStructType="text_hash string, keep_id long, n_docs long",
-        stateStructType="keep_id long, n_docs long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

@@ -80,15 +80,17 @@ def test_degree_check_merge_tree_matches_native(spark, sample_edges):
     assert tree == native == {(1, 3), (2, 2), (3, 4), (4, 2), (5, 3)}
 
 
-def test_spanner_properties(spark, sample_edges):
+@pytest.mark.parametrize("num_shards", [2, 32])
+def test_spanner_properties(spark, sample_edges, num_shards):
     """Spanner output preserves connectivity within the stretch bound
     on the sample graph (edge set is arrival-order dependent, like
-    the reference — assert properties, not an exact edge list)."""
+    the reference — assert properties, not an exact edge list), at a
+    few shards and at the default 32."""
     from gelly_streaming_spark.functions.synopses import AdjacencyListGraph
 
     k = 2
     es = EdgeStream(sample_edges)
-    out = es.aggregate(Spanner(k=k), num_shards=2)
+    out = es.aggregate(Spanner(k=k), num_shards=num_shards)
     spanner = AdjacencyListGraph()
     for r in out.collect():
         spanner.add_edge(r["src"], r["dst"])

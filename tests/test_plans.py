@@ -220,3 +220,23 @@ def test_document_frequency_caps_have_no_key_window(spark):
             and re.search(rf"\[[^\[\]]*\b{key}#\d+[^\[\]]*\]\s*$", l)
         ]
     assert keyed == {name: [] for name, _ in cases}, keyed
+
+
+def test_graph_aggregation_has_one_combine_stage(spark):
+    """EdgeStream.aggregate runs one sharded fold and ONE single-group
+    combine (which also finalizes) at every shard count — the
+    reference's parallel fold + parallelism-1 Merger. A merge tree of
+    32 shards would add combine levels, and the spanner's k² stretch
+    bound only holds after a single merge level."""
+    from gelly_streaming_spark import fixtures
+    from gelly_streaming_spark.edges import EdgeStream
+    from gelly_streaming_spark.plans import ConnectedComponents
+
+    edges = spark.createDataFrame(
+        fixtures.edges_pdf(fixtures.SAMPLE_GRAPH),
+        schema="src long, dst long, val long, ts timestamp",
+    )
+    opt = optimized_of(
+        EdgeStream(edges).aggregate(ConnectedComponents(), num_shards=32)
+    )
+    assert opt.count("FlatMapGroupsInPandas") == 2, opt

@@ -364,22 +364,31 @@ def test_reconcile_detects_text_mismatch(spark, transcripts_pdf):
     assert s["n_turns"] == 50 and s["n_mismatch"] == 1
 
 
-def test_generic_streaming_aggregation_bipartiteness(spark, tmp_path):
-    """Any merge-tree algorithm runs incrementally via foreachBatch:
+@pytest.mark.parametrize(
+    "graph,epochs",
+    [
+        ("BIPARTITE_GRAPH", [[0, 1, 2], [3, 4, 5]]),
+        # the odd cycle 1-2-3 closes with (3, 1) in epoch 1
+        ("NON_BIPARTITE_GRAPH", [[0, 1, 3], [2, 4, 5]]),
+    ],
+    ids=["bipartite", "odd_cycle"],
+)
+def test_generic_streaming_aggregation_bipartiteness(spark, tmp_path, graph, epochs):
+    """Any merge-engine algorithm runs incrementally via foreachBatch:
     streaming bipartiteness over replayed chunks must match the batch
-    golden (positive fixture stays bipartite across epochs)."""
+    golden — the positive fixture stays bipartite across epochs, and an
+    odd cycle closed by a later epoch yields the (false, {}) sentinel."""
     from gelly_streaming_spark import fixtures
     from gelly_streaming_spark.plans.bipartiteness import BipartitenessCheck
     from gelly_streaming_spark.streaming.aggregation import (
         run_streaming_aggregation,
     )
 
-    pdf = fixtures.edges_pdf(fixtures.BIPARTITE_GRAPH, with_val=False)
+    pdf = fixtures.edges_pdf(getattr(fixtures, graph), with_val=False)
     path = str(tmp_path / "bip_src")
-    for i in range(2):
-        part = pdf.iloc[i * 3 : (i + 1) * 3]
+    for i, rows in enumerate(epochs):
         spark.createDataFrame(
-            part, schema="src long, dst long, val long, ts timestamp"
+            pdf.iloc[rows], schema="src long, dst long, val long, ts timestamp"
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/f{i}")
     stream = (
         spark.readStream.schema("src long, dst long, val long, ts timestamp")
@@ -395,7 +404,11 @@ def test_generic_streaming_aggregation_bipartiteness(spark, tmp_path):
     )
     q.processAllAvailable()
     q.stop()
-    out = {r["vertex"]: (r["color"], r["is_bipartite"]) for r in agg.current(spark).collect()}
+    rows = agg.current(spark).collect()
+    if graph == "NON_BIPARTITE_GRAPH":
+        assert [tuple(r) for r in rows] == [(-1, -1, False)]
+        return
+    out = {r["vertex"]: (r["color"], r["is_bipartite"]) for r in rows}
     assert all(ok for _, ok in out.values())
     part0 = {v for v, (c, _) in out.items() if c == 0}
     part1 = {v for v, (c, _) in out.items() if c == 1}
@@ -1112,7 +1125,6 @@ def test_streaming_dedup_converges_to_batch(spark, tmp_path):
     micro-batches is still collapsed (the stateless-per-batch failure
     mode), and the survivor map is batching-invariant."""
     from gelly_streaming_spark.functions.dedup import dedup_exact
-    from gelly_streaming_spark.streaming.stateful import streaming_dedup
 
     schema = "doc_id long, text string"
     # dup group A spans files (ids 0, 3), dup group B inside file 1
@@ -1134,7 +1146,7 @@ def test_streaming_dedup_converges_to_batch(spark, tmp_path):
             .parquet(src + "/f*")
         )
         q = (
-            streaming_dedup(stream)
+            dedup_exact(stream)
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("update")
@@ -1172,7 +1184,6 @@ def test_streaming_dedup_resume_from_checkpoint(spark, tmp_path):
     first copy arrived BEFORE the crash is still collapsed after it,
     and the final upsert view equals batch dedup_exact over all data."""
     from gelly_streaming_spark.functions.dedup import dedup_exact
-    from gelly_streaming_spark.streaming.stateful import streaming_dedup
 
     schema = "doc_id long, text string"
     pre = [(3, "same text alpha"), (1, "unique one")]
@@ -1195,7 +1206,7 @@ def test_streaming_dedup_resume_from_checkpoint(spark, tmp_path):
         # per-batch upsert rows to parquet via foreachBatch (the
         # repo's epoch-sink pattern) and take the last row per key
         return (
-            streaming_dedup(stream)
+            dedup_exact(stream)
             .writeStream.foreachBatch(
                 lambda df, _bid: df.write.mode("append").parquet(out)
             )
@@ -1242,7 +1253,6 @@ def test_streaming_dedup_null_ids_match_batch(spark, tmp_path):
     keep_id is min over NON-null ids (null while only null-id rows
     arrived) — and the stream survives an all-null first batch."""
     from gelly_streaming_spark.functions.dedup import dedup_exact
-    from gelly_streaming_spark.streaming.stateful import streaming_dedup
 
     schema = "doc_id long, text string"
     f0 = [(None, "ghost text"), (None, "ghost text"), (7, "real")]
@@ -1260,7 +1270,7 @@ def test_streaming_dedup_null_ids_match_batch(spark, tmp_path):
         .parquet(src + "/f*")
     )
     q = (
-        streaming_dedup(stream)
+        dedup_exact(stream)
         .writeStream.format("memory")
         .queryName("ddn")
         .outputMode("update")
