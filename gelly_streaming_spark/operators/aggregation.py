@@ -107,7 +107,9 @@ def sharded_fold(
     df = with_shard(edges, num_shards, salt, shard_on=shard_on)
     partial_cols = f"shard long, {algo.partial_schema}"
 
-    def fold_wrapper(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # unannotated: applyInPandas warns on every call when only some
+    # parameters carry type hints
+    def fold_wrapper(key, pdf):
         out = algo.fold(pdf)
         out.insert(0, "shard", int(key[0]))
         return out

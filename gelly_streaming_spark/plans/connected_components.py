@@ -14,7 +14,7 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from gelly_streaming_spark.functions.synopses import DisjointSet
@@ -154,45 +154,49 @@ def resolve_partials(
     Instead of merging ALL O(V) pairs in one task (the reference's
     parallelism-1 Merger, GraphAggregation.java:80-117 — fine on one
     box, impossible at 10^9 vertices), only the QUOTIENT graph of
-    local components is globally resolved:
+    local components is globally resolved, with ONE shuffle over the
+    partials:
 
-      1. groupBy(vertex): a vertex spanning k local components links
-         them — emit (component, min_component) edges. Distributed.
+      1. groupBy(vertex) -> (vertex, comps, min_comp), materialized
+         once. A vertex spanning k local components links them: its
+         (comp, min_comp) pairs with comp != min_comp are the
+         quotient edges. The same job counts them with an
+         ``Observation`` (sum(size(comps) - 1), i.e. quotient edges
+         BEFORE dedup); when none exist, (vertex, min_comp) is the
+         answer.
       2. exact CC on the quotient edges. Under connectivity-local
          sharding (conv-prefix / salted hot convs) the quotient is
          near-empty and a single vectorized union-find task resolves
-         it; when it exceeds ``quotient_serial_limit`` rows
+         it; when its edge count exceeds ``quotient_serial_limit``
          (pathological sharding: e.g. one giant hash-sharded path
          component, VERDICT r2 #3) the fully-distributed pointer-
-         doubling contraction takes over — no O(V) single task, no
-         O(V) driver broadcast.
-      3. join the component→root mapping back. No pinned broadcast:
-         AQE broadcasts the mapping when it is actually small.
+         doubling contraction takes over on the deduplicated edges —
+         no O(V) single task, no O(V) driver broadcast.
+      3. left-join the component→root mapping on ``min_comp``: every
+         comp of a vertex has the same root, so one lookup per vertex
+         suffices and no second aggregate over ``vertex`` is needed.
+         No pinned broadcast: AQE broadcasts the mapping when it is
+         actually small.
 
     Output: (vertex, component) with component = global min vertex.
     """
-    spark_f = F
-    linked = (
+    obs = Observation()
+    grouped = (
         partials.groupBy("vertex")
-        .agg(spark_f.collect_set("component").alias("comps"))
-        .select(
-            "vertex",
-            spark_f.explode("comps").alias("comp"),
-            spark_f.array_min("comps").alias("min_comp"),
-        )
-    )
-    quotient = (
-        linked.filter(spark_f.col("comp") != spark_f.col("min_comp"))
-        .select("comp", "min_comp")
-        .distinct()
-        # materialize once: sized for the serial-vs-distributed
-        # decision AND reused as the mapping build side (previously
-        # the whole partials lineage ran twice to derive it)
+        .agg(F.collect_set("component").alias("comps"))
+        .select("vertex", "comps", F.array_min("comps").alias("min_comp"))
+        .observe(obs, F.sum(F.size("comps") - 1).alias("n"))
         .localCheckpoint(eager=True)
     )
+    n_quotient = obs.get["n"] or 0
+    if n_quotient == 0:
+        return grouped.select("vertex", F.col("min_comp").alias("component"))
+    quotient = grouped.select(
+        F.explode("comps").alias("comp"), "min_comp"
+    ).filter(F.col("comp") != F.col("min_comp"))
     comp_type = dict(partials.dtypes)["component"]
-    if quotient.count() > quotient_serial_limit:
-        mapping = _contract_min_labels(quotient, comp_type)
+    if n_quotient > quotient_serial_limit:
+        mapping = _contract_min_labels(quotient.distinct(), comp_type)
     else:
 
         def tiny_cc(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -206,20 +210,9 @@ def resolve_partials(
         mapping = single_group(
             quotient, tiny_cc, f"comp {comp_type}, root {comp_type}"
         )
-    resolved = (
-        partials.join(
-            mapping,
-            partials["component"] == mapping["comp"],
-            "left",
-        )
-        .select(
-            "vertex",
-            spark_f.coalesce("root", "component").alias("component"),
-        )
-        .groupBy("vertex")
-        .agg(spark_f.min("component").alias("component"))
-    )
-    return resolved
+    return grouped.join(
+        mapping, grouped["min_comp"] == mapping["comp"], "left"
+    ).select("vertex", F.coalesce("root", "min_comp").alias("component"))
 
 
 def connected_components(

@@ -12,9 +12,10 @@ Like the reference (env.setParallelism(1),
 CentralizedWeightedMatching.java:59), the algorithm is inherently
 sequential — implemented as a single-group ``applyInPandas``
 (vectorized transport, sequential fold inside, processing edges in
-(ts, src, dst) order for determinism). Documented serial point:
-excluded from scaling claims; at 100 TB you run it per key-partition
-(e.g. per conv_id) where per-group sequentiality is fine.
+(ts, src, dst) order for determinism) through
+``operators.aggregation.single_group``. Documented serial point:
+excluded from scaling claims; ``dominant_matching`` is the
+distributed twin.
 """
 
 from __future__ import annotations
@@ -61,24 +62,12 @@ def _fold_matching(pdf: pd.DataFrame, emit_events: bool) -> pd.DataFrame:
     )
 
 
-def greedy_matching(edges: DataFrame, partition_on=None) -> DataFrame:
-    """Final 2-approx matching: (src, dst, val).
-
-    ``partition_on``: optional column expression defining independent
-    sub-streams (e.g. a conversation/tenant key whose subgraphs never
-    share vertices). The sequential fold then runs PER GROUP in
-    parallel — the 100 TB deployment mode from the module docstring —
-    while the default single group stays the faithful parallelism-1
-    parity op. Groups must be vertex-disjoint for the union of
-    matchings to be a valid matching."""
-    key = partition_on if partition_on is not None else F.lit(0)
-    return (
-        edges.select("src", "dst", "val", "ts", key.alias("g"))
-        .groupBy("g")
-        .applyInPandas(
-            lambda key, pdf: _fold_matching(pdf, emit_events=False),
-            schema="src long, dst long, val long",
-        )
+def greedy_matching(edges: DataFrame) -> DataFrame:
+    """Final 2-approx matching: (src, dst, val)."""
+    return single_group(
+        edges.select("src", "dst", "val", "ts"),
+        lambda pdf: _fold_matching(pdf, emit_events=False),
+        "src long, dst long, val long",
     )
 
 

@@ -45,7 +45,7 @@ _CAND_SCHEMA = (
 )
 
 
-def _gen_candidates(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _gen_candidates(key, pdf):
     """GenerateCandidateEdges (WindowTriangles.java:82-115): within a
     (window, vertex) pane over the UNDIRECTED slice, the vertex emits
     (a, b, candidate=True) for every pair of strictly-higher-ID

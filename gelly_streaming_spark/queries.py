@@ -445,7 +445,7 @@ def q_slice_apply(spark, sf_dir):
     _utc(spark)
     s = EdgeStream(edges_from_events(spark, sf_dir)).slice("1 day", "out")
 
-    def apply_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def apply_fn(key, pdf):
         return pd.DataFrame(
             {
                 "win_start": [key[0]["start"]],

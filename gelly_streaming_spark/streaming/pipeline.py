@@ -22,9 +22,10 @@ The state is three epoch-keyed parquet tables under ``state_path``:
 - ``base/epoch=<id>``: a full (vertex, component) snapshot, written
   by the first epoch and then every ``compact_every`` epochs, with
   the mapping folded in;
-- ``delta/epoch=<id>``: the vertices first seen in that epoch. The
-  write-time anti-join against the state keeps deltas
-  vertex-disjoint from their base and from each other;
+- ``delta/epoch=<id>``: the vertices first seen in that epoch: the
+  resolved batch vertices that the touched-vertex probe did not find
+  in the state, so deltas are vertex-disjoint from their base and
+  from each other;
 - ``mapping/epoch=<id>``: a full snapshot of the mapping as of that
   delta (size = #components merged since the last base, not O(V)),
   written before the delta.
@@ -35,10 +36,21 @@ mapping (its delta write crashed) is never read, because reads key
 off the deltas. A read as of epoch e takes the latest committed base
 b <= e, the plain union of the committed deltas in (b, e] and the
 mapping of the last of those deltas — no dedup, since the rows are
-disjoint. The touched-vertex probe and the new-vertex anti-join scan
-that union whole; their other side is the batch's vertex set, which
-AQE broadcasts when small, and outside a compaction no epoch rewrites
+disjoint. The touched-vertex probe is the only scan of that union; its
+other side is the batch's vertex set, which AQE broadcasts when small.
+One left join of the resolved batch with the touched vertices' old
+labels then yields both the delta (no old label) and the new mapping
+entries (a changed label), and outside a compaction no epoch rewrites
 O(V) rows.
+
+Between consecutive epochs of one run the state is carried in memory
+as the same file-backed frames a cold read builds: the previous
+state unioned with a read of the delta just written, and a read of
+the mapping just written. A carried checkpoint of the epoch's joins
+would keep Catalyst's size estimate of those joins, the product of
+their inputs' estimates, and that estimate compounds epoch over epoch
+until join planning itself stalls in big-integer arithmetic; file
+reads restart it from the files' sizes.
 
 At the end of epoch e, every epoch below the latest committed base
 b < e is deleted from all three tables (``state.delete_superseded``
@@ -79,6 +91,12 @@ class StreamingConnectedComponents:
       fan-in (#delta dirs) and the mapping size; the epochs before a
       base are deleted once the epoch after that base has run.
 
+    Each epoch folds the batch, probes the state for the vertices it
+    touches, resolves the two together (``resolve_partials``), and
+    writes the delta and the mapping straight from one left join of
+    the result with the touched vertices' old labels. The next epoch
+    reads what was written, not a checkpoint of that join.
+
     ``current_components`` returns a lazy frame over the committed
     files, so it stays readable until the epoch after the next
     compaction deletes them.
@@ -108,9 +126,9 @@ class StreamingConnectedComponents:
         self.shard_on = shard_on
         self.compact_every = max(1, int(compact_every))
         # in-memory carry between consecutive epochs of one run:
-        # (base + delta rows (checkpointed/lazy), mapping). Purely an
-        # optimization — any cache miss (resume, replay, first batch)
-        # reconstructs from committed parquet.
+        # (base + delta rows, mapping), read from the files the epoch
+        # wrote. Purely an optimization — any cache miss (resume,
+        # replay, first batch) reconstructs from committed parquet.
         self._cache = None
         self._cache_epoch: int | None = None
         # per-phase wall seconds of the last processed batch
@@ -240,18 +258,26 @@ class StreamingConnectedComponents:
         #    min-vertex ids, so the merged labels stay canonical)
         merged = resolve_partials(
             batch.unionByName(touched_eff), self.quotient_serial_limit
-        ).localCheckpoint(eager=True)
-        _mark("resolve")
-        # 3. lazy relabel: components whose label changed get a
-        #    mapping entry old_root -> new_root; the existing mapping
-        #    is path-compressed through the new entries so reads stay
-        #    one hop
+        )
+        # 3. one left join with the touched vertices' old labels,
+        #    materialized once for both writes. Every merged vertex the
+        #    state holds is touched, so a null old label is a vertex
+        #    first seen this batch (the delta), and a changed label is a
+        #    component merged away: a mapping entry old_root ->
+        #    new_root, through which the existing mapping is
+        #    path-compressed so reads stay one hop
         old_lab = touched_eff.select(
             "vertex", F.col("component").alias("old_comp")
         )
+        relabel = merged.join(old_lab, "vertex", "left").localCheckpoint(
+            eager=True
+        )
+        _mark("resolve")
+        delta = relabel.filter(F.col("old_comp").isNull()).select(
+            "vertex", "component"
+        )
         m_new = (
-            merged.join(old_lab, "vertex")
-            .filter(F.col("component") != F.col("old_comp"))
+            relabel.filter(F.col("component") != F.col("old_comp"))
             .select(
                 F.col("old_comp").alias("comp"),
                 F.col("component").alias("root"),
@@ -269,14 +295,6 @@ class StreamingConnectedComponents:
             )
         else:
             m_folded = m_new
-        m_folded = m_folded.localCheckpoint(eager=True)
-        _mark("mapfold")
-        # 4. persist only vertices first seen this batch; touched-old
-        #    vertices are covered by the mapping
-        delta = merged.join(
-            state.select("vertex"), "vertex", "leftanti"
-        ).localCheckpoint(eager=True)
-        _mark("delta")
         if epoch_id % self.compact_every == 0:
             # compaction: fold the mapping into a full snapshot (the
             # O(V) pass is amortized over compact_every batches)
@@ -288,10 +306,18 @@ class StreamingConnectedComponents:
             self._write_base(spark, epoch_id, full)
         else:
             # mapping first, delta second: the delta's _SUCCESS is the
-            # epoch's commit point, so a committed delta has its mapping
+            # epoch's commit point, so a committed delta has its mapping.
+            # The carry re-reads both, so its size estimates come from
+            # the files, not from this epoch's joins (module docstring)
             write_epoch(m_folded.coalesce(1), self._table("mapping"), epoch_id)
             write_epoch(delta, self._table("delta"), epoch_id)
-            self._cache = (state.unionByName(delta), m_folded)
+            schema = self.algo.partial_schema
+            self._cache = (
+                state.unionByName(
+                    read_epoch(spark, self._table("delta"), epoch_id, schema)
+                ),
+                read_epoch(spark, self._table("mapping"), epoch_id, MAPPING_SCHEMA),
+            )
         # superseded state: the first-batch path above has no committed
         # base below it, so it has nothing to delete
         tables = [self._table(t) for t in ("base", "delta", "mapping")]

@@ -149,10 +149,21 @@ def test_quotient_contraction_pathological_sharding(spark):
     assert mapping.count() == n
 
 
-def test_resolve_partials_distributed_fallback(spark):
+@pytest.mark.parametrize(
+    "num_shards,limit,branch",
+    [(1, 1_000_000, "empty"), (16, 1_000_000, "serial"), (16, 1, "distributed")],
+    ids=["empty_quotient", "serial_quotient", "distributed_quotient"],
+)
+def test_resolve_partials_distributed_fallback(spark, num_shards, limit, branch):
     """resolve_partials switches to the distributed contraction when
     the quotient exceeds quotient_serial_limit; results must be
-    IDENTICAL to the serial union-find path (same oracle)."""
+    IDENTICAL to the serial union-find path (same oracle), and to the
+    one-shard fold, whose quotient is empty. In every case the
+    partials are shuffled once: the returned plan joins the quotient
+    mapping on ``min_comp`` (no mapping at all for an empty quotient)
+    and holds no second aggregate over ``vertex``."""
+    import re
+
     from gelly_streaming_spark.operators.aggregation import sharded_fold
     from gelly_streaming_spark.plans.connected_components import (
         ConnectedComponents,
@@ -169,20 +180,18 @@ def test_resolve_partials_distributed_fallback(spark):
     df = spark.createDataFrame(
         edges, schema="src long, dst long, val long, sec long"
     ).selectExpr("src", "dst", "val", "timestamp_seconds(sec) as ts")
-    partials = sharded_fold(df, ConnectedComponents(), num_shards=16)
-    serial = {
-        (r["vertex"], r["component"])
-        for r in resolve_partials(partials).collect()
+    partials = sharded_fold(df, ConnectedComponents(), num_shards=num_shards)
+    out = resolve_partials(partials, quotient_serial_limit=limit)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert not re.search(r"Aggregate \[vertex#\d+", plan), plan
+    assert ("Join" in plan) == (branch != "empty"), plan
+    assert ("FlatMapGroupsInPandas" in plan) == (branch == "serial"), plan
+    comp = {r["vertex"]: r["component"] for r in out.collect()}
+    assert comp == {
+        **{v: 0 for v in range(0, 402, 2)},
+        **{v: 1 for v in range(1, 402, 2)},
+        **{1000 + a: 1000 for a in range(5)},
     }
-    distributed = {
-        (r["vertex"], r["component"])
-        for r in resolve_partials(partials, quotient_serial_limit=1).collect()
-    }
-    assert serial == distributed
-    comp = dict(distributed)
-    assert all(comp[v] == 0 for v in range(0, 402, 2))
-    assert all(comp[v] == 1 for v in range(1, 401, 2))
-    assert all(comp[1000 + a] == 1000 for a in range(5))
 
 
 def test_sssp_golden_and_fixpoint(spark):

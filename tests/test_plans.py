@@ -240,3 +240,24 @@ def test_graph_aggregation_has_one_combine_stage(spark):
         EdgeStream(edges).aggregate(ConnectedComponents(), num_shards=32)
     )
     assert opt.count("FlatMapGroupsInPandas") == 2, opt
+
+
+def test_sharded_fold_plan_raises_no_user_warning(spark):
+    """Building the fold stage must not warn: applyInPandas tries to
+    infer the UDF's eval type from its type hints and warns ("Cannot
+    infer the eval type") on every call whose callback annotates only
+    some of its parameters."""
+    import warnings
+
+    from gelly_streaming_spark import fixtures
+    from gelly_streaming_spark.operators.aggregation import sharded_fold
+    from gelly_streaming_spark.plans import ConnectedComponents
+
+    edges = spark.createDataFrame(
+        fixtures.edges_pdf(fixtures.SAMPLE_GRAPH),
+        schema="src long, dst long, val long, ts timestamp",
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        partials = sharded_fold(edges, ConnectedComponents(), num_shards=4)
+    assert "FlatMapGroupsInPandas" in optimized_of(partials)

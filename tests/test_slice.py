@@ -42,7 +42,7 @@ def test_slice_apply_on_neighbors(sample_edges):
     0..n rows — here: emit (vertex, max neighbor id) for panes with
     >= 2 neighbors."""
 
-    def biggest(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def biggest(key, pdf):
         if len(pdf) < 2:
             return pd.DataFrame({"vertex": [], "value": []})
         return pd.DataFrame({"vertex": [key[1]], "value": [pdf["dst"].max()]})

@@ -6,6 +6,8 @@ checks."""
 
 from __future__ import annotations
 
+import sys
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -816,6 +818,49 @@ def test_cc_state_reads_plan_no_aggregate(spark, tmp_path):
         for r in resumed.current_components(spark).collect()
     }
     assert got == {(v, "a") for v in "abxy"} | {(v, "m") for v in "mnpq"}
+
+
+def test_cc_carry_size_estimate_does_not_compound(spark, tmp_path):
+    """The (rows, mapping) carried to the next epoch must be planned
+    from file sizes. A carried checkpoint of the epoch's joins keeps
+    Catalyst's estimate of each join (the product of its inputs'
+    estimates), which compounds epoch over epoch: past 2**63 bytes
+    within a few epochs, until planning the next join stalls in
+    big-integer multiplication. Every epoch here adds vertices and
+    merges components, so both the delta and the mapping grow."""
+    st = str(tmp_path / "s")
+    cc = StreamingConnectedComponents(st, num_shards=4, compact_every=16)
+
+    def size_in_bytes(df):
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        # py4j parses the BigInt from its decimal string, and a
+        # compounded estimate passes int()'s default 4,300-digit limit
+        limit = sys.get_int_max_str_digits()
+        sys.set_int_max_str_digits(0)
+        try:
+            return int(stats.sizeInBytes())
+        finally:
+            sys.set_int_max_str_digits(limit)
+
+    sizes = []
+    for e in range(6):
+        pairs = [(f"e{e}a{j}", f"e{e}b{j}") for j in range(20)]
+        if e:
+            pairs += [(f"e{e - 1}b{j}", f"e{e}a{j}") for j in range(0, 20, 2)]
+        cc.process_batch(_edges(spark, pairs), e)
+        rows, mapping = cc._prev_for(spark, e + 1)
+        sizes.append(
+            (size_in_bytes(rows), mapping is not None and size_in_bytes(mapping))
+        )
+    assert all(r < 2**63 and m < 2**63 for r, m in sizes), [
+        (r.bit_length(), int(m).bit_length()) for r, m in sizes
+    ]
+    assert sizes[-1][1], "the last epoch carries a mapping"
+    got = dict(
+        (r["vertex"], r["component"])
+        for r in cc.current_components(spark).collect()
+    )
+    assert got["e5b0"] == "e0a0" and got["e5b1"] == "e5a1"
 
 
 def test_streaming_transitions_boundary_exactness(spark, tmp_path):
