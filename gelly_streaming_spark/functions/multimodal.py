@@ -2,18 +2,15 @@
 
 Media are opaque ``binary`` columns with typed metadata — the Spark
 side (schema, partitioning, Arrow batch shape, UDF signatures) is
-real and tested. Decode/resize are TIERED per payload
+real and tested. Decode/resize have two tiers per payload
 (``decode_images`` / ``resize_images``):
 
 1. uncompressed 24-bit BMP and binary PPM decode/resize for REAL via
-   the pure-Python/numpy codecs in functions/codecs.py (always
-   available — the one codec branch that executes in this container,
-   VERDICT r3 missing #1);
-2. other formats go to ``PIL`` when installed (absent here);
-3. otherwise strict mode raises ``NotImplementedError`` and default
-   mode produces a clearly-marked deterministic fake derived from the
-   bytes (so pipelines and tests run end-to-end); the ``decoder``
-   column records which tier ran.
+   the pure-Python/numpy codecs in functions/codecs.py;
+2. any other format: strict mode raises ``NotImplementedError`` and
+   default mode produces a clearly-marked deterministic fake derived
+   from the bytes (so pipelines and tests run end-to-end); the
+   ``decoder`` column records which tier ran.
 
 Everything crosses the JVM↔Python boundary via ``mapInPandas``
 (Arrow-batched; never per-row Python). Batch size is governed by
@@ -61,7 +58,7 @@ def attach_fake_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     """Deterministic fake decode: (width, height, phash-ish) derived
     from the md5 of the payload. CLEARLY A STUB — replace with a real
-    codec (PIL/torchvision/ffmpeg) in production."""
+    codec in production."""
     h = hashlib.md5(payload).digest()
     width = 64 + h[0] % 192  # 64..255
     height = 64 + h[1] % 192
@@ -73,42 +70,23 @@ def decode_images(media: DataFrame, strict: bool = False) -> DataFrame:
     """Decode the binary column into image metadata + perceptual hash.
 
     Arrow-batched ``mapInPandas``; output schema ``DECODED_SCHEMA``.
-    BMP/PPM decode for real via the built-in pure-Python codecs, other
-    formats via PIL when installed; otherwise strict mode raises
-    ``NotImplementedError`` and default mode emits the deterministic
-    fake (decoder column says which path ran)."""
+    BMP/PPM decode for real via the built-in pure-Python codecs; any
+    other format raises ``NotImplementedError`` in strict mode, and
+    default mode emits the deterministic fake (decoder column says
+    which path ran)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            import io
-
-            from PIL import Image  # noqa: F401  (absent in this container)
-
-            def pil_decode(payload: bytes) -> tuple[int, int, int, str]:
-                img = Image.open(io.BytesIO(payload))
-                w, h = img.size
-                ph = int(hashlib.md5(img.tobytes()).hexdigest()[:15], 16)
-                return w, h, ph, "pil"
-
-        except ImportError:
-            pil_decode = None
-
         def decode(payload: bytes) -> tuple[int, int, int, str]:
-            # tiered: pure-Python BMP/PPM codec (real pixels, always
-            # available) -> PIL (when installed) -> stub/strict
             real = codecs.decode_any(payload)
             if real is not None:
                 px, codec = real
                 ph = int(hashlib.md5(px.tobytes()).hexdigest()[:15], 16)
                 return px.shape[1], px.shape[0], ph, codec
-            if pil_decode is not None:
-                return pil_decode(payload)
             if strict:
                 raise NotImplementedError(
-                    "strict image decode: payload is not uncompressed "
-                    "BMP/PPM (the built-in pure-Python codecs) and PIL "
-                    "is not installed — run with strict=False for the "
-                    "deterministic stub"
+                    "strict image decode: only uncompressed BMP/PPM "
+                    "payloads decode (the built-in pure-Python codecs) "
+                    "— run with strict=False for the deterministic stub"
                 )
             w, h, ph = _fake_decode(payload)
             return w, h, ph, "fake"
@@ -176,29 +154,12 @@ def resize_images(
     step of a multimodal training pipeline. Arrow-batched
     ``mapInPandas`` emitting a NEW binary column (``resized``), so the
     Spark-side contract — binary in, binary out, metadata alongside,
-    bounded Arrow batches — is fully real; with PIL present the
-    resize is real, otherwise strict mode raises and default mode
-    emits a deterministic fake (payload truncated proportionally to
-    the area ratio, decoder column marks the path)."""
+    bounded Arrow batches — is fully real. BMP/PPM payloads get a
+    real resize; any other format raises in strict mode, and default
+    mode emits a deterministic fake (payload truncated proportionally
+    to the area ratio, decoder column marks the path)."""
 
     def batches(it) -> "Iterator[pd.DataFrame]":
-        try:
-            import io
-
-            from PIL import Image
-
-            def pil_resize(payload: bytes):
-                img = Image.open(io.BytesIO(payload))
-                w, h = img.size
-                scale = min(1.0, max_side / max(w, h))
-                ow, oh = max(1, int(w * scale)), max(1, int(h * scale))
-                buf = io.BytesIO()
-                img.resize((ow, oh)).save(buf, format=img.format or "PNG")
-                return w, h, ow, oh, buf.getvalue(), "pil"
-
-        except ImportError:
-            pil_resize = None
-
         def resize(payload: bytes):
             # tiered like decode_images: BMP/PPM get a REAL pure-numpy
             # nearest-neighbor resize re-encoded in the same container
@@ -212,14 +173,11 @@ def resize_images(
                     codecs.nearest_resize(px, ow, oh), codec
                 )
                 return w, h, ow, oh, out, codec
-            if pil_resize is not None:
-                return pil_resize(payload)
             if strict:
                 raise NotImplementedError(
-                    "strict image resize: payload is not uncompressed "
-                    "BMP/PPM (the built-in pure-Python codecs) and PIL "
-                    "is not installed — run with strict=False for the "
-                    "deterministic stub"
+                    "strict image resize: only uncompressed BMP/PPM "
+                    "payloads resize (the built-in pure-Python codecs) "
+                    "— run with strict=False for the deterministic stub"
                 )
             w, h, _ = _fake_decode(payload)
             scale = min(1.0, max_side / max(w, h))

@@ -52,8 +52,9 @@ class GraphAggregation:
     - ``combine(pdf)``: concatenated partial rows -> partial rows.
       Must be associative/idempotent under re-application (union-find
       merge is).
-    - ``finalize(pdf)``: partial rows -> output rows (default:
-      identity).
+    - ``finalize(pdf)``: ``combine``'s output rows -> output rows
+      (default: identity). Both engines only ever finalize what
+      ``combine`` returned, so it may rely on that shape.
     """
 
     partial_schema: str

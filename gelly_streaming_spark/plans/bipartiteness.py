@@ -4,7 +4,10 @@ Rebuild of library/BipartitenessCheck.java:39-137 + the Candidates
 signed-component synopsis (summaries/Candidates.java:27-196): fold
 edges into a signed union-find (parity bit per vertex); an odd cycle
 anywhere (within a shard or revealed when merging shards) fails the
-whole graph, matching Candidates.merge fail-fast -> (false, {}).
+whole graph, matching Candidates.merge fail-fast -> (false, {}). Fold
+and merge are one call each of the same kernel,
+``synopses.signed_union_find``: the fold over the edges at parity 1,
+the merge over the partial rows (vertex, root) at parity ``sign``.
 
 Output: one row per vertex ``(vertex, color)`` when bipartite —
 color 0 = the part containing each component's min vertex — plus the
@@ -15,29 +18,13 @@ An empty coloring with is_bipartite=false reproduces the reference's
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gelly_streaming_spark.functions.synopses import SignedDisjointSet
+from gelly_streaming_spark.functions.synopses import signed_union_find
 from gelly_streaming_spark.operators.aggregation import GraphAggregation
-
-def _export(sd: SignedDisjointSet, sentinel=-1) -> pd.DataFrame:
-    if sd.failed:
-        # a single sentinel row carries the failure through the tree
-        return pd.DataFrame(
-            {"vertex": [sentinel], "root": [sentinel], "sign": [0],
-             "failed": [True]}
-        )
-    rows = sd.export()
-    return pd.DataFrame(
-        {
-            "vertex": [r[0] for r in rows],
-            "root": [r[1] for r in rows],
-            "sign": [int(r[2]) for r in rows],
-            "failed": [False] * len(rows),
-        }
-    )
 
 
 class BipartitenessCheck(GraphAggregation):
@@ -54,50 +41,59 @@ class BipartitenessCheck(GraphAggregation):
         )
         self._sentinel = -1 if vertex_type == "long" else "\x00failed"
 
+    def _signed(self, a, b, parity) -> pd.DataFrame:
+        out = signed_union_find(a, b, parity)
+        if out is None:
+            # a single sentinel row carries the failure through the merge
+            return pd.DataFrame(
+                {"vertex": [self._sentinel], "root": [self._sentinel],
+                 "sign": [0], "failed": [True]}
+            )
+        vertices, roots, signs = out
+        return pd.DataFrame(
+            {"vertex": vertices, "root": roots, "sign": signs,
+             "failed": [False] * len(vertices)}
+        )
+
     def fold(self, pdf: pd.DataFrame) -> pd.DataFrame:
-        sd = SignedDisjointSet()
-        sd.union_edges(pdf["src"].values, pdf["dst"].values)
-        return _export(sd, self._sentinel)
+        return self._signed(
+            pdf["src"].values, pdf["dst"].values, np.ones(len(pdf), dtype=np.int8)
+        )
 
     def combine(self, pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf["failed"].any():
-            return _export_failed(self._sentinel)
-        sd = SignedDisjointSet()
-        sd.merge(
-            zip(pdf["vertex"].tolist(), pdf["root"].tolist(), pdf["sign"].tolist())
+            # an odd cycle in any partial fails the graph: pass one
+            # sentinel row on
+            return pdf[pdf["failed"]].head(1)
+        return self._signed(
+            pdf["vertex"].values, pdf["root"].values, pdf["sign"].values
         )
-        return _export(sd, self._sentinel)
 
     def finalize(self, pdf: pd.DataFrame) -> pd.DataFrame:
+        """Color ``combine``'s output directly: its rows are flat (every
+        vertex's sign is relative to its component's one root), so
+        color(v) = sign(v) XOR sign(min vertex under v's root)."""
         if pdf["failed"].any():
             # (false, {}) golden: no coloring rows, one verdict row
             return pd.DataFrame(
                 {"vertex": [self._sentinel], "color": [-1],
                  "is_bipartite": [False]}
             )
-        sd = SignedDisjointSet()
-        sd.merge(
-            zip(pdf["vertex"].tolist(), pdf["root"].tolist(), pdf["sign"].tolist())
-        )
-        col = sd.coloring()
-        if col is None:
-            return pd.DataFrame(
-                {"vertex": [self._sentinel], "color": [-1],
-                 "is_bipartite": [False]}
-            )
+        vertices = pdf["vertex"].tolist()
+        roots = pdf["root"].tolist()
+        signs = pdf["sign"].tolist()
+        low: dict = {}
+        for v, r, s in zip(vertices, roots, signs):
+            m = low.get(r)
+            if m is None or v < m[0]:
+                low[r] = (v, s)
         return pd.DataFrame(
             {
-                "vertex": list(col.keys()),
-                "color": [int(c) for c in col.values()],
-                "is_bipartite": [True] * len(col),
+                "vertex": vertices,
+                "color": [s ^ low[r][1] for r, s in zip(roots, signs)],
+                "is_bipartite": [True] * len(vertices),
             }
         )
-
-
-def _export_failed(sentinel=-1) -> pd.DataFrame:
-    return pd.DataFrame(
-        {"vertex": [sentinel], "root": [sentinel], "sign": [0], "failed": [True]}
-    )
 
 
 def verdict(result: DataFrame) -> bool:

@@ -29,23 +29,18 @@ from pyspark.sql import functions as F
 from gelly_streaming_spark.plans.sssp import CKPT_EVERY
 
 
-def label_propagation(
-    edges: DataFrame, rounds: int = 1, directed: bool = False
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 1) -> DataFrame:
     """(vertex, community) after ``rounds`` synchronous label-
     propagation rounds; labels start as vertex ids. ``rounds=1`` is
     the reference's exact configuration (community.java:73)."""
     e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    e = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # materialize the edge derivation once — each round joins against
     # it (without the cut, e.g. a cooc self-join re-executes per round)
     e = e.localCheckpoint(eager=True)
-    # seed labels from BOTH endpoints: under directed=True a vertex
-    # may appear only as dst and must still carry a label row
+    # e is symmetric: every vertex appears as src
     labels = (
         e.select(F.col("src").alias("vertex"))
-        .unionAll(e.select(F.col("dst").alias("vertex")))
         .distinct()
         .select("vertex", F.col("vertex").alias("label"))
     )

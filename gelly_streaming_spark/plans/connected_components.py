@@ -1,12 +1,13 @@
 """Single-pass streaming connected components (weakly connected).
 
 Rebuild of library/ConnectedComponents.java:44-155: per-shard
-union-find fold (DisjointSet.union per edge, ConnectedComponents.java:
-86-89), partials exported as (vertex, root) pairs, merge phase
-re-unions every pair (DisjointSet.merge, DisjointSet.java:132-136).
-Component ids are canonicalized to the component's MIN vertex id so
-output is deterministic and matches a recursive-CTE MIN-label SQL
-oracle. Output: (vertex, component).
+union-find fold (ConnectedComponents.java:86-89), partials exported as
+(vertex, component) pairs, and a merge phase that re-unions every pair
+(DisjointSet.merge, DisjointSet.java:132-136). Fold, merge and the
+quotient resolution are one call each of the same batch kernel,
+``synopses.union_find``. Component ids are the component's MIN vertex
+id, so output is deterministic and matches a recursive-CTE MIN-label
+SQL oracle. Output: (vertex, component).
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from gelly_streaming_spark.functions.synopses import DisjointSet
+from gelly_streaming_spark.functions.synopses import union_find
 from gelly_streaming_spark.operators.aggregation import (
     GraphAggregation,
     sharded_fold,
@@ -25,11 +26,9 @@ from gelly_streaming_spark.operators.aggregation import (
 )
 
 
-def _pairs_to_pdf(ds: DisjointSet) -> pd.DataFrame:
-    comps = ds.components()
-    return pd.DataFrame(
-        {"vertex": list(comps.keys()), "component": list(comps.values())}
-    )
+def _components(a, b, columns=("vertex", "component")) -> pd.DataFrame:
+    vertices, labels = union_find(a, b)
+    return pd.DataFrame({columns[0]: vertices, columns[1]: labels})
 
 
 class ConnectedComponents(GraphAggregation):
@@ -42,14 +41,10 @@ class ConnectedComponents(GraphAggregation):
         self.output_schema = self.partial_schema
 
     def fold(self, pdf: pd.DataFrame) -> pd.DataFrame:
-        ds = DisjointSet()
-        ds.union_edges(pdf["src"].values, pdf["dst"].values)
-        return _pairs_to_pdf(ds)
+        return _components(pdf["src"].values, pdf["dst"].values)
 
     def combine(self, pdf: pd.DataFrame) -> pd.DataFrame:
-        ds = DisjointSet()
-        ds.merge(zip(pdf["vertex"].tolist(), pdf["component"].tolist()))
-        return _pairs_to_pdf(ds)
+        return _components(pdf["vertex"].values, pdf["component"].values)
 
 
 def _contract_min_labels(quotient: DataFrame, comp_type: str) -> DataFrame:
@@ -200,11 +195,8 @@ def resolve_partials(
     else:
 
         def tiny_cc(pdf: pd.DataFrame) -> pd.DataFrame:
-            ds = DisjointSet()
-            ds.union_edges(pdf["comp"].values, pdf["min_comp"].values)
-            comps = ds.components()
-            return pd.DataFrame(
-                {"comp": list(comps.keys()), "root": list(comps.values())}
+            return _components(
+                pdf["comp"].values, pdf["min_comp"].values, ("comp", "root")
             )
 
         mapping = single_group(

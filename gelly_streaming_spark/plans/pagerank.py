@@ -36,19 +36,16 @@ DAMP_NUM = 85  # damping numerator; denominator 100
 TELE_NUM = 100 - DAMP_NUM
 
 
-def pagerank(edges: DataFrame, rounds: int = 3, directed: bool = False) -> DataFrame:
+def pagerank(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """(vertex, rank, prob) after ``rounds`` fixed-point power
-    iterations over the distinct (symmetrized unless ``directed``)
-    edge set of ``edges(src, dst)``. ``rank`` is the SCALE-scaled
-    BIGINT mass; ``prob`` = rank / SCALE as the one permitted double
-    division.
+    iterations over the distinct symmetrized edge set of
+    ``edges(src, dst)``. ``rank`` is the SCALE-scaled BIGINT mass;
+    ``prob`` = rank / SCALE as the one permitted double division.
 
-    The vertex set is deg's key set (every endpoint; in the
-    symmetrized default every vertex has deg >= 1, and a directed
-    sink still keeps its teleport mass via the left join)."""
+    The vertex set is deg's key set: the edges are symmetric, so every
+    non-self-loop endpoint has deg >= 1."""
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if not directed:
-        e = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    e = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # distinct + materialized once: every round joins this frame, and
     # without the cut the upstream derivation re-executes per round
     e = e.dropDuplicates(["src", "dst"]).localCheckpoint(eager=True)
@@ -57,16 +54,6 @@ def pagerank(edges: DataFrame, rounds: int = 3, directed: bool = False) -> DataF
         e.groupBy(F.col("src").alias("vertex"))
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
-    # vertices that appear only as dst (possible when directed): they
-    # emit nothing but must hold rank rows
-    if directed:
-        only_dst = (
-            e.select(F.col("dst").alias("vertex"))
-            .exceptAll(e.select(F.col("src").alias("vertex")))
-            .distinct()
-            .withColumn("degree", F.lit(0).cast("long"))
-        )
-        deg = deg.unionByName(only_dst)
     # N and the per-vertex teleport base, derived IN-PLAN (1-row agg
     # cross-joined in — contractually tiny, same pattern as sssp's
     # in-plan source)
@@ -83,7 +70,7 @@ def pagerank(edges: DataFrame, rounds: int = 3, directed: bool = False) -> DataF
     # the O(V) deg frame, nothing else
     rank = deg.select("vertex", "degree", "r0", F.col("r0").alias("rank"))
     for r in range(rounds):
-        contrib = rank.filter(F.col("degree") > 0).select(
+        contrib = rank.select(
             "vertex", F.expr("CAST(rank AS BIGINT) div degree").alias("c")
         )
         inflow = (
@@ -115,7 +102,7 @@ def pagerank(edges: DataFrame, rounds: int = 3, directed: bool = False) -> DataF
 
 
 def sql_pagerank(edges_cte: str, rounds: int = 3) -> str:
-    """Unrolled-CTE DuckDB twin of ``pagerank(rounds=R, directed=False)``
+    """Unrolled-CTE DuckDB twin of ``pagerank(rounds=R)``
     over ``edges_cte`` (a CTE named ``edges`` with src, dst). Every
     round CTE is MATERIALIZED (DuckDB inlines CTEs by default — the
     same re-execution blow-up the Spark side checkpoints against)."""
@@ -138,7 +125,7 @@ def sql_pagerank(edges_cte: str, rounds: int = 3) -> str:
             f" FROM dg d LEFT JOIN ("
             f" SELECT s.v AS vertex, sum(p.rank // d2.degree) AS inflow"
             f" FROM p{r} p JOIN dg d2 ON d2.vertex = p.vertex"
-            f" JOIN sym s ON s.u = p.vertex WHERE d2.degree > 0"
+            f" JOIN sym s ON s.u = p.vertex"
             f" GROUP BY s.v) f ON f.vertex = d.vertex)"
         )
     return (

@@ -42,21 +42,9 @@ from pyspark.sql import functions as F
 CKPT_EVERY = 1
 
 
-def _symmetrize(edges: DataFrame, directed: bool) -> DataFrame:
-    e = edges.select("src", "dst", "val")
-    if directed:
-        return e
-    return e.unionAll(
-        e.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "val"
-        )
-    )
-
-
 def sssp(
     edges: DataFrame,
     rounds: int | None = 5,
-    directed: bool = False,
     weighted: bool = False,
     max_rounds: int = 100,
 ) -> DataFrame:
@@ -75,16 +63,16 @@ def sssp(
     The source is derived IN-PLAN (1-row min aggregate cross-joined
     in, contractually tiny) — no driver collect.
     """
-    e = _symmetrize(edges, directed)
+    e = edges.select("src", "dst", "val")
+    e = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "val"))
     cost = F.col("val").cast("long") if weighted else F.lit(1).cast("long")
     # materialize the (possibly expensive) edge derivation ONCE — every
     # round joins against it, and without a lineage cut the upstream
     # (e.g. the cooc self-join) re-executes per round
     e = e.select("src", "dst", cost.alias("cost")).localCheckpoint(eager=True)
-    # min over BOTH endpoint columns: under directed=True a vertex may
-    # appear only as dst and must still be eligible as the source
+    # e is symmetric: every vertex appears as src
     dist = (
-        e.agg(F.least(F.min("src"), F.min("dst")).alias("vertex"))
+        e.agg(F.min("src").alias("vertex"))
         .withColumn("dist", F.lit(0).cast("long"))
     )
 

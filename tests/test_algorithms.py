@@ -50,9 +50,10 @@ def test_cc_component_is_min_vertex(spark):
     assert comp == {1: 1, 2: 1, 3: 1, 5: 1, 6: 6, 7: 6, 8: 8, 9: 8}
 
 
-def test_bipartite_positive(spark):
+@pytest.mark.parametrize("num_shards", [1, 3, 8])
+def test_bipartite_positive(spark, num_shards):
     es = make_edges(spark, fixtures.BIPARTITE_GRAPH)
-    out = es.aggregate(BipartitenessCheck(), num_shards=3).cache()
+    out = es.aggregate(BipartitenessCheck(), num_shards=num_shards).cache()
     assert verdict(out) is True
     col = {r["vertex"]: r["color"] for r in out.collect()}
     parts = (
@@ -62,9 +63,10 @@ def test_bipartite_positive(spark):
     assert parts == fixtures.BIPARTITE_PARTS
 
 
-def test_bipartite_negative(spark):
+@pytest.mark.parametrize("num_shards", [1, 3, 8])
+def test_bipartite_negative(spark, num_shards):
     es = make_edges(spark, fixtures.NON_BIPARTITE_GRAPH)
-    out = es.aggregate(BipartitenessCheck(), num_shards=3).cache()
+    out = es.aggregate(BipartitenessCheck(), num_shards=num_shards).cache()
     assert verdict(out) is False
     # (false, {}) golden: no real coloring rows
     assert [r["vertex"] for r in out.collect()] == [-1]
